@@ -13,7 +13,7 @@ exact-timestamp ties broken by offset; and document NDJSON.
 A fixed share (``MALFORMED_SHARE``) of the lines of every source is
 truncated mid-record. The readers' PERMISSIVE default turns most of
 these into all-null rows; ``Day.malformed_null_rows`` is how many each
-source should yield, which the benchmark compares with what it counts.
+source should yield.
 
 The model (``Model``) is pure Python over the well-formed records and
 shares no code with lakeflow.
@@ -24,23 +24,27 @@ from __future__ import annotations
 import hashlib
 import json
 import os
+import random
 from dataclasses import dataclass
 from datetime import datetime, timedelta, timezone
 
-import numpy as np
 import pandas as pd
 
 MALFORMED_SHARE = 0.02
+# A day carries the volumes of a measured prototype ingest day: 40k
+# Mailgun lines, 24k Iterable lines and 4k documents. The prototype had
+# no Mongo or Kafka source; they are sized at about 1/3 and 2/5 of
+# Mailgun's volume.
 MAILGUN_PARTITIONS = 25
-MAILGUN_PER_PARTITION = 60
+MAILGUN_PER_PARTITION = 1600
 ITERABLE_FILES = 4
-ITERABLE_PER_FILE = 250
+ITERABLE_PER_FILE = 6000
 MONGO_FILES = 2
-MONGO_PER_FILE = 250
+MONGO_PER_FILE = 6500
 MONGO_UPDATE_SHARE = 0.2
-KAFKA_NEW_APPS = 150
-KAFKA_OLD_APPS = 60
-DOCS_PER_DAY = 150
+KAFKA_NEW_APPS = 4000
+KAFKA_OLD_APPS = 1600
+DOCS_PER_DAY = 4000
 
 RELEVANT_TAGS = [
     "example.notification.payment.OnSchedule",
@@ -114,11 +118,9 @@ def _n_bad(n: int) -> int:
     return int(round(n * MALFORMED_SHARE))
 
 
-def _malformed_mask(rng, n: int) -> np.ndarray:
+def _malformed(rng: random.Random, n: int) -> set[int]:
     """Exactly ``_n_bad(n)`` malformed positions."""
-    mask = np.zeros(n, dtype=bool)
-    mask[rng.choice(n, _n_bad(n), replace=False)] = True
-    return mask
+    return set(rng.sample(range(n), _n_bad(n)))
 
 
 def _write_lines(path: str, lines: list[str]) -> int:
@@ -218,7 +220,7 @@ class Model:
 def land_day(root: str, seed: int, d: int, model: Model) -> Day:
     """Write day ``d``'s bronze files under ``root`` and fold its
     well-formed records into ``model``."""
-    rng = np.random.default_rng([seed, d])
+    rng = random.Random(f"{seed}/{d}")
     nbytes = 0
     nulls: dict[str, int] = {}
     day_s = DAY0_S + d * 86_400
@@ -228,13 +230,13 @@ def land_day(root: str, seed: int, d: int, model: Model) -> Day:
     nulls["mailgun"] = 0
     for p in range(MAILGUN_PARTITIONS):
         drift = rng.random() < 0.2
-        bad = _malformed_mask(rng, MAILGUN_PER_PARTITION)
+        bad = _malformed(rng, MAILGUN_PER_PARTITION)
         lines = []
         for i in range(MAILGUN_PER_PARTITION):
             n = (d * MAILGUN_PARTITIONS + p) * MAILGUN_PER_PARTITION + i
             pool = RELEVANT_TAGS + OTHER_TAGS
-            tags = [pool[j] for j in rng.choice(6, int(rng.integers(0, 4)), replace=False)]
-            ts = day_s + (p * MAILGUN_PER_PARTITION + i) * 12.5
+            tags = [pool[j] for j in rng.sample(range(6), rng.randrange(0, 4))]
+            ts = day_s + (p * MAILGUN_PER_PARTITION + i) * 2.0
             ev = {
                 "timestamp": ts,
                 "event": "delivered",
@@ -244,7 +246,7 @@ def land_day(root: str, seed: int, d: int, model: Model) -> Day:
                 "delivery-status": {
                     "code": 250,
                     "message": "OK",
-                    "attempt-no": int(rng.integers(1, 4)),
+                    "attempt-no": rng.randrange(1, 4),
                 },
                 "message": {
                     "headers": {
@@ -262,12 +264,12 @@ def land_day(root: str, seed: int, d: int, model: Model) -> Day:
                 ev["campaigns"] = []
                 ev["flags"] = {"is-test-mode": False}
             inner = json.dumps(ev)
-            if bad[i]:
+            if i in bad:
                 # alternate the two corruptions a dump can carry: a cut
                 # outer string (dropped by the reader) and a well-formed
                 # outer string around a cut event (parsed to nulls)
                 if i % 2:
-                    lines.append(json.dumps(inner)[: int(rng.integers(2, 12))])
+                    lines.append(json.dumps(inner)[: rng.randrange(2, 12)])
                 else:
                     lines.append(json.dumps(_truncate(inner)))
                     nulls["mailgun"] += 1
@@ -286,7 +288,7 @@ def land_day(root: str, seed: int, d: int, model: Model) -> Day:
     nulls["iterable"] = 0
     for f in range(ITERABLE_FILES):
         has_profile = rng.random() < 0.6
-        bad = _malformed_mask(rng, ITERABLE_PER_FILE)
+        bad = _malformed(rng, ITERABLE_PER_FILE)
         lines = []
         for i in range(ITERABLE_PER_FILE):
             n = (d * ITERABLE_FILES + f) * ITERABLE_PER_FILE + i
@@ -295,20 +297,20 @@ def land_day(root: str, seed: int, d: int, model: Model) -> Day:
             ev = {
                 "userId": uid,
                 "createdAt": created.isoformat() + "+02:00",
-                "eventName": ["emailSend", "emailOpen", "emailClick"][int(rng.integers(0, 3))],
+                "eventName": rng.choice(["emailSend", "emailOpen", "emailClick"]),
                 "dataFields": {
                     "email": f"u{n}@example.com",
-                    "campaignId": int(rng.integers(1, 10)),
-                    "templateId": int(rng.integers(100, 106)),
+                    "campaignId": rng.randrange(1, 10),
+                    "templateId": rng.randrange(100, 106),
                 },
                 "labels": [],
-                "messageTypeIds": [int(rng.integers(1, 6))],
+                "messageTypeIds": [rng.randrange(1, 6)],
                 "transactionalData": None,
             }
             if has_profile:
                 ev["profileUpdatedAt"] = "2022-01-01T00:00:00+00:00"
             line = json.dumps(ev)
-            if bad[i]:
+            if i in bad:
                 lines.append(_truncate(line))
                 nulls["iterable"] += 1
                 continue
@@ -326,21 +328,21 @@ def land_day(root: str, seed: int, d: int, model: Model) -> Day:
     nulls["mongo"] = 0
     updated = set()
     for f in range(MONGO_FILES):
-        bad = _malformed_mask(rng, MONGO_PER_FILE)
+        bad = _malformed(rng, MONGO_PER_FILE)
         recs = []
         day_rows: list[tuple] = []
         for i in range(MONGO_PER_FILE):
             n = (d * MONGO_FILES + f) * MONGO_PER_FILE + i
             if model.mongo_ids and rng.random() < MONGO_UPDATE_SHARE:
-                oid = model.mongo_ids[int(rng.integers(0, len(model.mongo_ids)))]
+                oid = rng.choice(model.mongo_ids)
                 if oid in updated:
                     oid = f"oid{n}"
             else:
                 oid = f"oid{n}"
             updated.add(oid)
             pool = RELEVANT_TYPES if rng.random() < 0.5 else OTHER_TYPES
-            ntype = pool[int(rng.integers(0, len(pool)))]
-            ms = (day_s + i * 60 + f * 30) * 1000
+            ntype = rng.choice(pool)
+            ms = (day_s + i * 10 + f * 5) * 1000
             doc = json.dumps(
                 {
                     "notificationData": json.dumps({"notificationType": ntype, "channel": "EMAIL"}),
@@ -350,7 +352,7 @@ def land_day(root: str, seed: int, d: int, model: Model) -> Day:
                     "creationDate": f"2022-01-{(d % 27) + 1:02d}T08:00:00Z",
                 }
             )
-            if bad[i]:
+            if i in bad:
                 doc = _truncate(doc)
                 nulls["mongo"] += 1
             elif ntype in RELEVANT_TYPES:
@@ -369,16 +371,16 @@ def land_day(root: str, seed: int, d: int, model: Model) -> Day:
 
     # -- Kafka dump: duplicate timelines, ties broken by offset ------------
     n_old = min(KAFKA_OLD_APPS, len(model.app_ids))
-    old = [model.app_ids[j] for j in rng.choice(len(model.app_ids), n_old, replace=False)] if n_old else []
+    old = [model.app_ids[j] for j in rng.sample(range(len(model.app_ids)), n_old)] if n_old else []
     new = [10_000 + d * KAFKA_NEW_APPS + j for j in range(KAFKA_NEW_APPS)]
     model.app_ids.extend(new)
     envelopes = []
     for app in old + new:
-        k = int(rng.integers(1, 4))
-        start = int(rng.integers(0, len(STATUSES) - k + 1))
+        k = rng.randrange(1, 4)
+        start = rng.randrange(0, len(STATUSES) - k + 1)
         for s_i, status in enumerate(STATUSES[start : start + k]):
             ts0 = (day_s + 3600) * 1000 + (app % 1000) * 1000 + (start + s_i) * 60_000
-            n_dups = int(rng.integers(2, 5)) if rng.random() < 0.3 else 1
+            n_dups = rng.randrange(2, 5) if rng.random() < 0.3 else 1
             tie = rng.random() < 0.2
             for dd in range(n_dups):
                 ts = ts0 if (tie and dd < 2) else ts0 + dd * 777
@@ -398,15 +400,15 @@ def land_day(root: str, seed: int, d: int, model: Model) -> Day:
                         },
                     }
                 )
-    order = rng.permutation(len(envelopes))
-    bad = _malformed_mask(rng, len(envelopes))
+    order = rng.sample(range(len(envelopes)), len(envelopes))
+    bad = _malformed(rng, len(envelopes))
     lines = []
     latest: dict[tuple[int, str], tuple] = {}
     for pos, j in enumerate(order):
         e = envelopes[j]
         e["offset"] = d * 1_000_000 + pos
         line = json.dumps(e)
-        if bad[pos]:
+        if pos in bad:
             lines.append(_truncate(line))
             continue
         lines.append(line)
@@ -415,7 +417,7 @@ def land_day(root: str, seed: int, d: int, model: Model) -> Day:
         cand = (v["timestamp"], e["offset"], v)
         if key not in latest or cand[:2] > latest[key][:2]:
             latest[key] = cand
-    nulls["kafka"] = int(bad.sum())
+    nulls["kafka"] = len(bad)
     batch = []
     for (app, status), (ts, _, v) in latest.items():
         if status in EXCLUDED_STATUSES:
@@ -428,23 +430,25 @@ def land_day(root: str, seed: int, d: int, model: Model) -> Day:
     nbytes += _write_lines(kafka, lines)
 
     # -- documents NDJSON for the streaming maintainers ---------------------
-    bad = _malformed_mask(rng, DOCS_PER_DAY)
+    bad = _malformed(rng, DOCS_PER_DAY)
     lines = []
     for i in range(DOCS_PER_DAY):
         doc_id = d * DOCS_PER_DAY + i
-        ts = datetime(2022, 1, 1) + timedelta(days=d, seconds=i * 30)
+        # inside the day, so no document lands behind the intake
+        # stream's watermark (the previous day's latest minus an hour)
+        ts = datetime(2022, 1, 1) + timedelta(days=d, seconds=i * 20)
         kind = rng.random()
         src_id = None
         if kind < 0.05 and model.good_docs:
-            src_id, text = model.good_docs[int(rng.integers(0, len(model.good_docs)))]
+            src_id, text = rng.choice(model.good_docs)
         elif kind < 0.15:
-            text = " ".join(["@@@", "###", "%%", "!!"][int(rng.integers(0, 4))] for _ in range(int(rng.integers(2, 6))))
+            text = " ".join(rng.choice(["@@@", "###", "%%", "!!"]) for _ in range(rng.randrange(2, 6)))
         else:
-            n_tok = int(rng.integers(40, 90))
-            toks = [STOP[int(rng.integers(0, len(STOP)))] if rng.random() < 0.3 else WORDS[int(rng.integers(0, len(WORDS)))] for _ in range(n_tok)]
+            n_tok = rng.randrange(40, 90)
+            toks = [rng.choice(STOP) if rng.random() < 0.3 else rng.choice(WORDS) for _ in range(n_tok)]
             text = " ".join(toks)
         line = json.dumps({"doc_id": doc_id, "ts": ts.isoformat(), "text": text})
-        if bad[i]:
+        if i in bad:
             lines.append(_truncate(line))
             continue
         lines.append(line)
@@ -453,7 +457,7 @@ def land_day(root: str, seed: int, d: int, model: Model) -> Day:
         if src_id is not None or kind >= 0.15:
             model.good_docs.append((doc_id, text))
             model.corpus_fps.add(hashlib.md5(text.encode()).hexdigest())
-    nulls["docs"] = int(bad.sum())
+    nulls["docs"] = len(bad)
     docs = os.path.join(root, "docs", f"docs_day{d:03d}.json")
     nbytes += _write_lines(docs, lines)
 

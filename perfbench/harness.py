@@ -138,16 +138,16 @@ def warm_engine(spark) -> None:
     spark.range(1000).mapInArrow(identity, "id long").count()
 
 
-def dir_stats(path: str) -> tuple[int, int]:
-    """(bytes, files) under ``path``, ignoring checksum side files."""
-    total = files = 0
+def dir_files(path: str) -> dict[str, tuple[int, int]]:
+    """{file: (bytes, mtime_ns)} under ``path``, ignoring checksum side
+    files."""
+    out = {}
     for base, _, names in os.walk(path):
         for n in names:
-            if n.endswith(".crc"):
-                continue
-            total += os.path.getsize(os.path.join(base, n))
-            files += 1
-    return total, files
+            if not n.endswith(".crc"):
+                st = os.stat(os.path.join(base, n))
+                out[os.path.join(base, n)] = (st.st_size, st.st_mtime_ns)
+    return out
 
 
 # ---------------------------------------------------------------- memory
@@ -249,7 +249,10 @@ class Tracer:
     """In-memory spans with parent links, dumped once at the end.
 
     Disabled, every span is a bare context manager and no counter is
-    read, so untraced runs pay nothing for tracing."""
+    read, so untraced runs pay nothing for tracing. Enabled, every
+    second the run spends on tracing (span bookkeeping, job-group
+    switches, counter reads and traced-only probes) is added to
+    ``overhead_s`` and kept out of span durations and driver gaps."""
 
     def __init__(self, enabled: bool) -> None:
         self.enabled = enabled
@@ -263,65 +266,70 @@ class Tracer:
         if self.enabled:
             self.counters = SparkCounters(spark)
 
-    def current_op(self) -> Span | None:
-        return self._op
-
-    @contextlib.contextmanager
-    def span(self, name: str, **attrs):
-        if not self.enabled:
-            yield None
-            return
-        parent = self._stack[-1].id if self._stack else None
-        s = Span(len(self.spans), parent, name, time.perf_counter(), attrs=dict(attrs))
-        self.spans.append(s)
-        self._stack.append(s)
-        try:
-            yield s
-        finally:
-            s.end = time.perf_counter()
-            self._stack.pop()
-
     @contextlib.contextmanager
     def spark_span(self, name: str, op: bool = False, **attrs):
         """A span whose Spark jobs run under its own job group, so the
         jobs and stages they ran are attributed to it. ``op`` marks a
         workload operation: it also gets codegen and cache counters and
         its driver gap (wall time its jobs and its children's jobs did
-        not cover)."""
+        not cover, less its children's tracing)."""
         if not self.enabled:
             yield None
             return
-        c = self.counters
         t0 = time.perf_counter()
-        parent_group = self._stack[-1].attrs.get("group") if self._stack else None
+        c = self.counters
+        parent = self._stack[-1] if self._stack else None
         before = c.global_counters() if op else None
-        self.overhead_s += time.perf_counter() - t0
-        with self.span(name, **attrs) as s:
-            s.attrs["group"] = f"span-{s.id}"
-            c.sc.setJobGroup(s.attrs["group"], name)
+        s = Span(len(self.spans), parent.id if parent else None, name, 0.0, attrs=dict(attrs))
+        self.spans.append(s)
+        self._stack.append(s)
+        s.attrs["group"] = f"span-{s.id}"
+        c.sc.setJobGroup(s.attrs["group"], name)
+        if op:
+            s.attrs["op"] = True
+            self._op = s
+        s.start = time.perf_counter()
+        self.overhead_s += s.start - t0
+        overhead_before = self.overhead_s
+        try:
+            yield s
+        finally:
+            s.end = t1 = time.perf_counter()
+            self._stack.pop()
+            own, intervals = c.group_counters(s.attrs["group"])
+            for k, v in own.items():
+                s.attrs[k] = s.attrs.get(k, 0) + v
+            s.job_intervals.extend(intervals)
+            for child in self.spans[s.id + 1:]:
+                s.job_intervals.extend(child.job_intervals)
             if op:
-                s.attrs["op"] = True
-                self._op = s
-            try:
-                yield s
-            finally:
-                t1 = time.perf_counter()
-                own, intervals = c.group_counters(s.attrs["group"])
-                for k, v in own.items():
-                    s.attrs[k] = s.attrs.get(k, 0) + v
-                s.job_intervals.extend(intervals)
-                for child in self.spans[s.id + 1:]:
-                    s.job_intervals.extend(child.job_intervals)
-                if op:
-                    for k, v in c.global_counters().items():
-                        s.attrs[k] = v - before[k]
-                    s.attrs.update(c.caching())
-                    s.attrs["exec.driver_gap_s"] = max(
-                        0.0, (t1 - s.start) - covered(s.job_intervals) / 1000.0
-                    )
-                    self._op = None
-                c.sc.setJobGroup(parent_group or "perfbench", "untraced")
-                self.overhead_s += time.perf_counter() - t1
+                for k, v in c.global_counters().items():
+                    s.attrs[k] = v - before[k]
+                s.attrs.update(c.caching())
+                s.attrs["trace.inner_s"] = self.overhead_s - overhead_before
+                s.attrs["exec.driver_gap_s"] = max(
+                    0.0,
+                    (t1 - s.start) - s.attrs["trace.inner_s"] - covered(s.job_intervals) / 1000.0,
+                )
+                self._op = None
+            c.sc.setJobGroup(parent.attrs["group"] if parent else "perfbench", "untraced")
+            self.overhead_s += time.perf_counter() - t1
+
+    @contextlib.contextmanager
+    def traced_only(self):
+        """Work only traced runs do (probes outside the operations): its
+        whole wall time counts as tracing overhead."""
+        t0, before = time.perf_counter(), self.overhead_s
+        try:
+            yield
+        finally:
+            self.overhead_s = before + (time.perf_counter() - t0)
+
+    def add_phases(self, df) -> None:
+        """Attach ``df``'s Catalyst phase times to the current operation."""
+        t0 = time.perf_counter()
+        self._op.attrs.update(catalyst_phases(df))
+        self.overhead_s += time.perf_counter() - t0
 
     def absorb_group(self, group: str) -> None:
         """Attribute the jobs of another job group (a streaming query's
@@ -333,6 +341,10 @@ class Tracer:
             s.attrs[k] = s.attrs.get(k, 0) + v
         s.job_intervals.extend(intervals)
         self.overhead_s += time.perf_counter() - t0
+
+    def duration(self, span: Span) -> float:
+        """A span's duration less the tracing done inside it."""
+        return (span.end - span.start) - span.attrs.get("trace.inner_s", 0.0)
 
     def self_time(self, span: Span) -> float:
         """Duration minus the part of it covered by child spans."""
@@ -355,7 +367,7 @@ class Tracer:
         out = 0.0
         for s in self.spans:
             if s.name == name or s.name.startswith(name + ":"):
-                out += (s.end - s.start) if attr is None else s.attrs.get(attr, 0)
+                out += self.duration(s) if attr is None else s.attrs.get(attr, 0)
         return out
 
     def dump(self, path: str) -> None:
@@ -428,7 +440,9 @@ class SparkCounters:
 
 def catalyst_phases(df) -> dict[str, float]:
     """Analysis/optimization/planning milliseconds of ``df``'s query
-    execution (the one its action ran)."""
+    execution (the one its action ran). Analysis that ``QuerySpec.fn``
+    forces while it builds the plan step by step is not in this tracker:
+    it lands in ``plans.build_s``."""
     phases = df._jdf.queryExecution().tracker().phases()
     out = {}
     for name in ("analysis", "optimization", "planning"):

@@ -131,7 +131,7 @@ def per_layer(ctx, start_s: float, rss_mb: float) -> dict[str, float]:
               "codegen.compiles", "codegen.compile_ms", "exec.driver_gap_s"):
         m[k] = sum(s.attrs.get(k, 0) for s in ops)
     m["codegen.repeat_compiles"] = sum(s.attrs.get("codegen.compiles", 0) for s in ops if not s.attrs.get("first"))
-    wall_ms = 1000.0 * sum(s.end - s.start for s in ops)
+    wall_ms = 1000.0 * sum(tr.duration(s) for s in ops)
     m["exec.busy_ratio"] = m["exec.run_ms"] / (wall_ms * CORES) if wall_ms else 0.0
     m["caching.persisted_after_op"] = max((s.attrs.get("caching.persisted", 0) for s in ops), default=0)
     m["caching.storage_bytes"] = max((s.attrs.get("caching.storage_bytes", 0) for s in ops), default=0)
@@ -177,6 +177,9 @@ def run(args, run_dir: str) -> tuple[dict, list[str], int, int]:
         print(f"perfbench: start {start_s:.2f}s warm {warm_s:.2f}s prepare {[round(r, 2) for r in reps]} "
               f"body {time.perf_counter() - t:.2f}s cycles {[round(c, 2) for c in ctx.cycles]} "
               f"ops {len(ctx.ops)} checked {ctx.checked}", file=sys.stderr)
+        if args.trace and args.workload == "lake_ingest":
+            print(f"perfbench: null rows from malformed lines {ctx.layer['sources.null_rows_from_malformed']:.0f}, "
+                  f"planted {ctx.planted_null_rows}", file=sys.stderr)
         if args.trace:
             metrics = per_layer(ctx, start_s, H.peak_rss_mb())
             units = PER_LAYER

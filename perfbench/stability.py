@@ -1,9 +1,9 @@
-"""Repeat each workload over several seeds and print, per end-to-end
+"""Repeat each workload over seeds 1..10 and print, per end-to-end
 metric, its median, quartiles and spread against the bound
 ``BENCHMARK.json`` gives it.
 
-    python3 perfbench/stability.py                       # 10 seeds, every workload
-    python3 perfbench/stability.py --workloads lake_ingest --seeds 5
+    python3 perfbench/stability.py                       # seeds 1..10, every workload
+    python3 perfbench/stability.py --workloads lake_ingest
     python3 perfbench/stability.py --out a.json          # keep the summary
     python3 perfbench/stability.py --baseline a.json     # medians vs an earlier summary
     python3 perfbench/stability.py --trace               # also traced runs: overhead
@@ -27,6 +27,7 @@ import time
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
+SEEDS = range(1, 11)
 
 
 def run_once(workload: str, seed: int, seconds: int, trace: int) -> tuple[dict, float]:
@@ -45,7 +46,7 @@ def run_once(workload: str, seed: int, seconds: int, trace: int) -> tuple[dict, 
 
 def summarize(values: list[float]) -> dict:
     q1, med, q3 = statistics.quantiles(values, n=4)
-    return {"median": med, "q1": q1, "q3": q3, "spread": (q3 - q1) / med, "values": values}
+    return {"median": med, "q1": q1, "q3": q3, "spread": (q3 - q1) / med if med else float("nan"), "values": values}
 
 
 def main(argv=None) -> int:
@@ -53,8 +54,6 @@ def main(argv=None) -> int:
         bench = json.load(fh)
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("--workloads", default=",".join(w["name"] for w in bench["workloads"]))
-    ap.add_argument("--seeds", type=int, default=10)
-    ap.add_argument("--first-seed", type=int, default=1)
     ap.add_argument("--trace", action="store_true", help="also run each seed traced and report the overhead")
     ap.add_argument("--out")
     ap.add_argument("--baseline")
@@ -68,20 +67,24 @@ def main(argv=None) -> int:
     summary: dict = {}
     ok = True
     for w in args.workloads.split(","):
-        runs, walls, traced_walls, failed = [], [], [], 0
-        for seed in range(args.first_seed, args.first_seed + args.seeds):
+        runs, walls, extra, counted, failed = [], [], [], [], 0
+        for seed in SEEDS:
             res, wall = run_once(w, seed, bench["run_seconds"], 0)
             runs.append(res["metrics"])
             walls.append(wall)
             failed += res["failed"]
             if args.trace:
-                traced_walls.append(run_once(w, seed, bench["run_seconds"], 1)[1])
+                traced, traced_wall = run_once(w, seed, bench["run_seconds"], 1)
+                extra.append(traced_wall - wall)
+                counted.append(traced["metrics"]["trace.overhead_s"]["value"])
         summary[w] = {"failed": failed, "wall_s": summarize(walls)}
         print(f"\n{w}: {len(runs)} runs, {failed} failed operations, median run wall {statistics.median(walls):.1f} s")
-        if traced_walls:
-            over = statistics.median(traced_walls) / statistics.median(walls) - 1
+        if extra:
+            over = {"traced_minus_untraced_s": summarize(extra), "trace.overhead_s": summarize(counted)}
             summary[w]["tracing_overhead"] = over
-            print(f"  tracing overhead (traced / untraced median run wall - 1): {over:+.1%}")
+            print(f"  tracing overhead: traced - untraced run wall, same seed: median {over['traced_minus_untraced_s']['median']:+.2f} s "
+                  f"[{over['traced_minus_untraced_s']['q1']:+.2f}, {over['traced_minus_untraced_s']['q3']:+.2f}]; "
+                  f"trace.overhead_s median {over['trace.overhead_s']['median']:.2f} s")
         print(f"  {'metric':<16}{'median':>12}{'q1':>12}{'q3':>12}{'spread':>9}{'bound':>8}  verdict")
         for name, spec in bounds.items():
             s = summarize([r[name]["value"] for r in runs])

@@ -46,8 +46,8 @@ def test_tables_differ_across_seeds(tmp_path):
 
 @pytest.mark.parametrize("seed", [1, 2, 3])
 def test_bronze_same_seed_same_days(tmp_path, seed):
-    files_a, model_a = _land(str(tmp_path / "a"), seed, 3)
-    files_b, model_b = _land(str(tmp_path / "b"), seed, 3)
+    files_a, model_a = _land(str(tmp_path / "a"), seed, 2)
+    files_b, model_b = _land(str(tmp_path / "b"), seed, 2)
     assert files_a == files_b
     assert model_a.gold_rows() == model_b.gold_rows()
     assert model_a.fresh_read() == model_b.fresh_read()
