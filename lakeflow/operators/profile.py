@@ -17,8 +17,10 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from lakeflow.caching import CacheScope
 
 
 def profile_table(
@@ -119,7 +121,7 @@ def mad_outlier_profile(
     k_milli: int = 3500,
     approx: bool = True,
     accuracy: int = 10_000,
-    cache: "CacheScope | None" = None,
+    cache: CacheScope | None = None,
 ) -> DataFrame:
     """Robust per-key anomaly profile via median absolute deviation:
     (keys, n, median_micros, mad_micros, n_outliers), where an outlier

@@ -24,6 +24,7 @@ import hashlib
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from lakeflow.caching import CacheScope
 from lakeflow.functions.hashing import seeded_hash
 from lakeflow.operators.text import explode_shingles, shingles_from_tokens, tokens
 from lakeflow.operators.topk import topk_per_key
@@ -451,7 +452,7 @@ def embedding_near_dup(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     persist_buckets: bool = True,
-    cache: "CacheScope | None" = None,
+    cache: CacheScope | None = None,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs at corpus scale: sign-LSH
     buckets generate candidates (equi-self-join on (table, bucket) —
@@ -718,7 +719,7 @@ def lsh_candidate_pairs(
     k: int = 8,
     band_size: int = 2,
     max_bucket_size: int | None = None,
-    cache: "CacheScope | None" = None,
+    cache: CacheScope | None = None,
 ) -> DataFrame:
     """Banded LSH over a minhash signature: hash each band, self-join on
     (band_id, band_hash), emit each candidate pair once (id_a < id_b).
@@ -837,7 +838,7 @@ def near_dup_pairs(
     shingle_n: int = 3,
     max_bucket_size: int | None = None,
     persist_shingles: bool = True,
-    cache: "CacheScope | None" = None,
+    cache: CacheScope | None = None,
 ) -> DataFrame:
     """Complete near-duplicate pipeline: MinHash-LSH generates candidate
     pairs, exact n-gram Jaccard verifies them — the verification join

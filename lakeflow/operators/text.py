@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from lakeflow.caching import CacheScope
 from lakeflow.functions.hashing import seeded_hash
 
 # marker stopwords per language for the n-gram-free heuristic language ID
@@ -306,7 +307,7 @@ def repeated_span_starts(
     text_col: str = "text",
     n: int = 8,
     min_count: int = 2,
-    cache: "CacheScope | None" = None,
+    cache: CacheScope | None = None,
 ) -> DataFrame:
     """(id, pos) rows: 0-based token positions starting an ``n``-token
     span whose CONTENT occurs at least ``min_count`` times across the
@@ -354,7 +355,7 @@ def excise_repeated_spans(
     text_col: str = "text",
     n: int = 8,
     min_count: int = 2,
-    cache: "CacheScope | None" = None,
+    cache: CacheScope | None = None,
 ) -> DataFrame:
     """Remove every corpus-repeated ``n``-token span from each document
     (overlapping spans merge naturally: a token survives only if NO

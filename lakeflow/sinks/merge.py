@@ -171,10 +171,16 @@ def _fenced_overwrite(
     longer implies a successful commit for that version. Object-store
     path (no atomic rename, fencing already disabled): materialize via
     localCheckpoint and overwrite in place — the documented emulation
-    limit; use a transactional table format there."""
+    limit; use a transactional table format there.
+
+    Replay rule: when ``commit_token`` has already committed on
+    ``target_path`` this returns without writing, so a replayed
+    non-idempotent fold is a no-op (README, "Streaming replay")."""
     import shutil
     import uuid
 
+    if commit_token is not None and has_commit_token(target_path, commit_token):
+        return
     if not _fencing_enabled(target_path):
         df.localCheckpoint(eager=True).write.mode("overwrite").parquet(target_path)
         return
@@ -223,12 +229,19 @@ def _fenced_overwrite(
 
 
 def has_commit_token(target_path: str, commit_token: str) -> bool:
-    """True iff the LAST committed overwrite of ``target_path`` carried
-    ``commit_token`` (see ``_fenced_overwrite``): the token file is
-    swapped in atomically with the data, so 'token present' == 'that
-    batch's merge is fully committed' with no in-between state."""
+    """True iff some committed overwrite of ``target_path`` carried
+    ``commit_token`` and ``vacuum_versions`` has not pruned it since.
+    ``_fenced_overwrite`` swaps the token file in atomically with the
+    data and carries every earlier token forward, so 'token present' ==
+    'that merge is fully committed' with no in-between state."""
     base = _local_path(target_path).rstrip("/")
     return os.path.exists(os.path.join(base, f"_token_{commit_token}"))
+
+
+def batch_token(batch_id: int) -> str:
+    """The commit token of streaming micro-batch ``batch_id`` — the form
+    ``vacuum_versions`` parses when it prunes old tokens."""
+    return f"b{batch_id}"
 
 
 def read_target_if_exists(spark: SparkSession, target_path: str) -> DataFrame | None:
@@ -315,9 +328,9 @@ def merge_additive(
     O(history). Same version-fencing and failure-atomicity contract as
     the other mergers; NOT idempotent per batch (re-applying a delta
     double-counts) — dedupe batches upstream via ingest state, or pass
-    ``commit_token`` (e.g. the streaming batch id): the token commits
-    ATOMICALLY with the data swap, so ``has_commit_token`` answers
-    "was this exact delta already folded in" with no race window."""
+    ``commit_token`` (e.g. ``batch_token(batch_id)``): the token commits
+    ATOMICALLY with the data swap, and a merge whose token has already
+    committed writes nothing, so a replayed delta is folded in once."""
     _merge_fold(spark, target_path, delta, keys, sum_cols, F.sum, commit_token)
 
 
@@ -424,7 +437,7 @@ def vacuum_versions(target_path: str, keep_last: int = 10) -> int:
             if f.startswith("_token_b") and f[8:].isdigit()
         )
         for n in toks[:-keep_last] if keep_last else toks:
-            os.remove(os.path.join(base, f"_token_b{n}"))
+            os.remove(os.path.join(base, f"_token_{batch_token(n)}"))
             removed += 1
     return removed
 

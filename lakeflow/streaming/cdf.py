@@ -48,9 +48,10 @@ _TOKEN_RE = re.compile(r"^_token_cdfv(\d+)$")
 
 def cdf_cursor(agg_path: str) -> int:
     """Last source-table version folded into ``agg_path`` — recovered
-    from the merge commit token itself (exactly one survives each
-    fenced overwrite), so the cursor is atomic with the data. 0 = the
-    aggregate has consumed nothing yet."""
+    from the merge commit tokens themselves, so the cursor is atomic
+    with the data. Each fenced overwrite adds its ``cdfv{N}`` token and
+    carries every earlier token forward, so the cursor is the highest
+    N present. 0 = the aggregate has consumed nothing yet."""
     if not os.path.isdir(agg_path):
         return 0
     best = 0

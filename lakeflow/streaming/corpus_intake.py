@@ -18,13 +18,33 @@ accumulates in the stream itself.
 
 from __future__ import annotations
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import StructType
 
-from lakeflow.operators.text import lang_pred, lang_scores, quality_score, token_count
+from lakeflow.caching import scoped_cache
+from lakeflow.operators.text import (
+    lang_pred,
+    lang_scores,
+    quality_score,
+    token_count,
+    tokens,
+)
+from lakeflow.sinks.merge import (
+    batch_token,
+    merge_additive,
+    merge_aggregate,
+    merge_max,
+    merge_min,
+    merge_upsert,
+    read_target_if_exists,
+)
 from lakeflow.streaming.pipeline import (
+    append_staleness,
     dedup_within_watermark,
+    read_state,
+    run_batches,
     stream_ndjson,
     upsert_foreach_batch,
 )
@@ -41,7 +61,7 @@ def stream_corpus_intake(
     id_col: str = "doc_id",
     text_col: str = "text",
     ts_col: str = "ts",
-):
+) -> StreamingQuery:
     """Start the intake stream; returns the StreamingQuery.
 
     Stages: scan-time scoring → quality threshold → within-watermark
@@ -79,9 +99,8 @@ def stream_neardup_index(
     text_col: str = "text",
     k: int = 8,
     band_size: int = 2,
-    trigger_available_now: bool = True,
     staleness_path: str | None = None,
-):
+) -> StreamingQuery:
     """Continuous near-duplicate index maintenance (§2.10 + §2.12
     composed): as documents stream in, each micro-batch computes banded
     MinHash signatures for the NEW documents only, emits candidate
@@ -95,17 +114,10 @@ def stream_neardup_index(
     BEFORE the batch's bands join the index, so the stored side the
     pairs were computed against never includes the batch itself.
 
-    Honest exactly-once caveat: the two appends inside one foreachBatch
-    are not jointly atomic over plain parquet — a crash between them
-    replays the batch, which can re-append rows. Both outputs are
-    replay-safe by construction: pairs are consumed via distinct(), and
-    a replayed batch whose ids already reached the index produces no
-    self-pairs because incremental_candidate_pairs drops same-id
-    matches in its new×stored join — the replay degrades to pure
-    duplicates. Bands are keyed by (id, band_id) and
-    duplicate-insensitive for candidate generation. A transactional
-    table format (Delta/Iceberg) upgrades this to true exactly-once
-    with txn batch ids.
+    Replay: an appending maintainer (README, "Streaming replay"). A
+    replayed batch whose ids already reached the index produces no
+    self-pairs (``incremental_candidate_pairs`` drops same-id matches),
+    and bands are duplicate-insensitive for candidate generation.
 
     ``staleness_path`` (r11, optional — VERDICT r10 task #4): when
     set, each batch's frozen-BANDING drift row
@@ -116,15 +128,13 @@ def stream_neardup_index(
     index is absent or either side is empty (first batch). The
     caller re-bands (recompute the index over the current corpus)
     when the flag fires."""
-    from lakeflow.operators.similarity import banded_signatures
-    from lakeflow.sinks.merge import read_target_if_exists
-    from lakeflow.streaming.pipeline import stream_ndjson
-
-    stream = stream_ndjson(spark, path, schema)
+    from lakeflow.operators.similarity import (
+        band_staleness,
+        banded_signatures,
+        incremental_candidate_pairs,
+    )
 
     def _batch(batch, batch_id: int) -> None:
-        from lakeflow.operators.similarity import incremental_candidate_pairs
-
         bands = banded_signatures(batch, id_col, text_col, k, band_size)
         bands = bands.persist()  # two consumers: pairs plan + index append
         try:
@@ -136,27 +146,16 @@ def stream_neardup_index(
                 and not stored.isEmpty()
                 and not bands.isEmpty()
             ):
-                from lakeflow.operators.similarity import band_staleness
-
-                band_staleness(stored, bands, id_col).select(
-                    F.lit(int(batch_id)).cast("long").alias("batch_id"),
-                    "n_stored",
-                    "n_batch",
-                    "chi2_micros",
-                    "rebuild",
-                ).write.mode("append").parquet(staleness_path)
+                append_staleness(
+                    band_staleness(stored, bands, id_col), batch_id, staleness_path
+                )
             pairs = incremental_candidate_pairs(bands, stored, id_col)
             pairs.write.mode("append").parquet(pairs_path)
             bands.write.mode("append").parquet(index_path)
         finally:
             bands.unpersist()
 
-    writer = stream.writeStream.foreachBatch(_batch).option(
-        "checkpointLocation", checkpoint
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return run_batches(stream_ndjson(spark, path, schema), checkpoint, _batch)
 
 
 def stream_corpus_counters(
@@ -168,8 +167,7 @@ def stream_corpus_counters(
     group_col: str = "source",
     id_col: str = "doc_id",
     text_col: str = "text",
-    trigger_available_now: bool = True,
-):
+) -> StreamingQuery:
     """Continuous AGGREGATE maintenance (§2.10 + merge_additive
     composed): as documents stream in, fold each micro-batch's
     per-``group_col`` (n_docs, n_tokens) delta into a running totals
@@ -178,42 +176,20 @@ def stream_corpus_counters(
     O(|batch| + |distinct groups|); the totals table is one row per
     group. Returns the StreamingQuery.
 
-    Exactly-once on replays: ``merge_additive`` is NOT idempotent (a
-    re-applied delta double-counts), so each batch passes its batch id
-    as the merge's ``commit_token`` — the token file is swapped in
-    ATOMICALLY with the merged data (it rides inside the staged
-    directory), so there is no crash window between "data committed"
-    and "marker written": a replayed batch either finds its token (the
-    merge fully committed; no-op) or finds no token (the merge never
-    became visible; safe to apply). This is the transactional-batch-id
-    upgrade a real table format provides natively. Tokens are keyed by
-    the checkpoint lineage's batch ids: to legitimately REPROCESS into
-    an existing target (new checkpoint, same totals table), delete the
-    totals table and start fresh."""
-    from lakeflow.operators.text import token_count
-    from lakeflow.sinks.merge import has_commit_token, merge_additive
-    from lakeflow.streaming.pipeline import stream_ndjson
-
-    stream = stream_ndjson(spark, path, schema)
+    Replay: an additive fold under the batch-id token (README,
+    "Streaming replay")."""
 
     def _batch(batch, batch_id: int) -> None:
-        if has_commit_token(target_path, f"b{batch_id}"):
-            return  # replayed batch: its merge fully committed already
         delta = batch.groupBy(group_col).agg(
             F.count(F.lit(1)).cast("long").alias("n_docs"),
             F.sum(token_count(text_col).cast("long")).alias("n_tokens"),
         )
         merge_additive(
             spark, target_path, delta, [group_col], ["n_docs", "n_tokens"],
-            commit_token=f"b{batch_id}",
+            commit_token=batch_token(batch_id),
         )
 
-    writer = stream.writeStream.foreachBatch(_batch).option(
-        "checkpointLocation", checkpoint
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return run_batches(stream_ndjson(spark, path, schema), checkpoint, _batch)
 
 
 def stream_vocab_counters(
@@ -224,8 +200,7 @@ def stream_vocab_counters(
     checkpoint: str,
     id_col: str = "doc_id",
     text_col: str = "text",
-    trigger_available_now: bool = True,
-):
+) -> StreamingQuery:
     """Continuous VOCABULARY maintenance: per-token
     (n_occurrences, doc_freq) totals folded from each micro-batch's
     delta — the always-current input to heavy-hitter/stopword
@@ -241,24 +216,16 @@ def stream_vocab_counters(
     an append-only intake. A re-ingested doc_id would re-count; route
     mutable corpora through the change-feed consumer instead
     (``streaming/cdf.advance_cdf_aggregate`` maintains per-key counts
-    under retractions). Replay safety is the house shape: the delta
-    merge commits under the batch-id token atomically with the data,
-    so a replayed batch is a whole-batch no-op.
+    under retractions). Replay: an additive fold under the batch-id
+    token (README, "Streaming replay").
 
     100 TB: the totals table is vocab-sized, not corpus-sized; deltas
     arrive pre-reduced by the batch's map-side combine. (The merge
     rewrite is O(|vocab|) per batch — acceptable because vocab grows
     ~log(corpus); for sub-second triggers, widen the trigger or
     bucket-partition the totals by token hash.)"""
-    from lakeflow.operators.text import tokens
-    from lakeflow.sinks.merge import has_commit_token, merge_additive
-    from lakeflow.streaming.pipeline import stream_ndjson
-
-    stream = stream_ndjson(spark, path, schema)
 
     def _batch(batch, batch_id: int) -> None:
-        if has_commit_token(target_path, f"b{batch_id}"):
-            return  # replayed batch: its merge fully committed already
         ex = batch.select(
             F.col(id_col), F.explode(tokens(text_col)).alias("token")
         ).filter(F.col("token") != "")
@@ -272,15 +239,10 @@ def stream_vocab_counters(
             delta,
             ["token"],
             ["n_occurrences", "doc_freq"],
-            commit_token=f"b{batch_id}",
+            commit_token=batch_token(batch_id),
         )
 
-    writer = stream.writeStream.foreachBatch(_batch).option(
-        "checkpointLocation", checkpoint
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return run_batches(stream_ndjson(spark, path, schema), checkpoint, _batch)
 
 
 def stream_grouped_minhash(
@@ -292,8 +254,7 @@ def stream_grouped_minhash(
     group_col: str = "source",
     text_col: str = "text",
     k: int = 32,
-    trigger_available_now: bool = True,
-):
+) -> StreamingQuery:
     """Continuous per-group corpus-set minhash maintenance: each
     micro-batch's grouped signatures (one narrow pass per batch,
     ``operators/corpus.grouped_minhash_signatures``) MIN-fold into a
@@ -305,27 +266,17 @@ def stream_grouped_minhash(
     matrix from it at read time (|groups| rows in, |groups|^2/2 out —
     never re-shingling history).
 
-    Replay/restart safety comes FREE here: min-merge is idempotent
-    (min(a, a) == a), so a crash-replayed batch folds to a no-op with
-    no commit token — the one maintainer in this module whose
-    exactly-once property is algebraic rather than transactional."""
+    Replay: a min fold, idempotent by its algebra (min(a, a) == a), so
+    it carries no token (README, "Streaming replay")."""
     from lakeflow.operators.corpus import grouped_minhash_signatures
-    from lakeflow.sinks.merge import merge_min
-    from lakeflow.streaming.pipeline import stream_ndjson
 
-    stream = stream_ndjson(spark, path, schema)
     mh_cols = [f"mh{i}" for i in range(k)]
 
     def _batch(batch, batch_id: int) -> None:
         delta = grouped_minhash_signatures(batch, group_col, text_col, k)
         merge_min(spark, target_path, delta, [group_col], mh_cols)
 
-    writer = stream.writeStream.foreachBatch(_batch).option(
-        "checkpointLocation", checkpoint
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return run_batches(stream_ndjson(spark, path, schema), checkpoint, _batch)
 
 
 def read_source_overlap(
@@ -335,14 +286,8 @@ def read_source_overlap(
     maintained signature table — identical to batch
     ``source_overlap_matrix`` over every document ever streamed."""
     from lakeflow.operators.corpus import overlap_matrix_from_signatures
-    from lakeflow.sinks.merge import read_target_if_exists
 
-    sig = read_target_if_exists(spark, target_path)
-    if sig is None:
-        raise FileNotFoundError(
-            f"read_source_overlap: no signature table at {target_path!r} — "
-            f"the grouped-minhash stream has not committed its first batch yet"
-        )
+    sig = read_state(spark, target_path, "grouped-minhash signature table")
     return overlap_matrix_from_signatures(sig, group_col, k)
 
 
@@ -353,8 +298,7 @@ def stream_int8_scales(
     target_path: str,
     checkpoint: str,
     vec_col: str = "embedding",
-    trigger_available_now: bool = True,
-):
+) -> StreamingQuery:
     """Continuous int8 quantization-scale maintenance: each
     micro-batch's per-dimension max-abs scales
     (``operators/quant.int8_scales``) MAX-fold into a running scale
@@ -364,25 +308,16 @@ def stream_int8_scales(
     quantizes under corpus-true scales without re-scanning history;
     scales are MONOTONE under append-only ingest (they only grow), so
     previously-written codes stay decodable and re-encoding is a
-    downstream policy choice, not a correctness event. Replay safety
-    is algebraic (max-merge is idempotent) — no commit token, the
-    same free exactly-once as :func:`stream_grouped_minhash`."""
+    downstream policy choice, not a correctness event. Replay: a max
+    fold, idempotent by its algebra, so it carries no token (README,
+    "Streaming replay")."""
     from lakeflow.operators.quant import int8_scales
-    from lakeflow.sinks.merge import merge_max
-    from lakeflow.streaming.pipeline import stream_ndjson
-
-    stream = stream_ndjson(spark, path, schema)
 
     def _batch(batch, batch_id: int) -> None:
         delta = int8_scales(batch, vec_col)
         merge_max(spark, target_path, delta, ["dim"], ["scale_micros"])
 
-    writer = stream.writeStream.foreachBatch(_batch).option(
-        "checkpointLocation", checkpoint
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return run_batches(stream_ndjson(spark, path, schema), checkpoint, _batch)
 
 
 def stream_hll(
@@ -394,8 +329,7 @@ def stream_hll(
     value_col: str,
     group_cols: tuple[str, ...] = (),
     seed: str = "hll",
-    trigger_available_now: bool = True,
-):
+) -> StreamingQuery:
     """Continuous distinct-count maintenance: each micro-batch's
     HyperLogLog registers (``operators/sketches.hll_registers``)
     MAX-fold into a running register table — exact, because the HLL
@@ -404,14 +338,9 @@ def stream_hll(
     everything ever streamed, so :func:`read_hll_estimate` answers
     "how many distinct users/documents/urls so far, per group" at any
     instant from |groups| * 256 rows, never a history re-scan, and
-    never a distinct. Replay safety is ALGEBRAIC (max-merge is
-    idempotent) — no commit token, the same free exactly-once as
-    :func:`stream_int8_scales` / :func:`stream_grouped_minhash`."""
+    never a distinct. Replay: a max fold, idempotent by its algebra,
+    so it carries no token (README, "Streaming replay")."""
     from lakeflow.operators.sketches import hll_registers
-    from lakeflow.sinks.merge import merge_max
-    from lakeflow.streaming.pipeline import stream_ndjson
-
-    stream = stream_ndjson(spark, path, schema)
 
     def _batch(batch, batch_id: int) -> None:
         delta = hll_registers(batch, value_col, group_cols, seed)
@@ -419,12 +348,7 @@ def stream_hll(
             spark, target_path, delta, [*group_cols, "bucket"], ["rho"]
         )
 
-    writer = stream.writeStream.foreachBatch(_batch).option(
-        "checkpointLocation", checkpoint
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return run_batches(stream_ndjson(spark, path, schema), checkpoint, _batch)
 
 
 def read_hll_estimate(
@@ -438,14 +362,8 @@ def read_hll_estimate(
     algebra). Raises a clear not-yet-initialized error before the
     first batch commits."""
     from lakeflow.operators.sketches import hll_estimate
-    from lakeflow.sinks.merge import read_target_if_exists
 
-    regs = read_target_if_exists(spark, target_path)
-    if regs is None:
-        raise FileNotFoundError(
-            f"read_hll_estimate: no register table at {target_path!r} — "
-            f"the HLL stream has not committed its first batch yet"
-        )
+    regs = read_state(spark, target_path, "HLL register table")
     return hll_estimate(regs, group_cols)
 
 
@@ -458,55 +376,34 @@ def stream_cms(
     value_col: str,
     group_cols: tuple[str, ...] = (),
     seed: str = "cms",
-    trigger_available_now: bool = True,
-):
+) -> StreamingQuery:
     """Continuous frequency-sketch maintenance: each micro-batch's
     count-min cells (``operators/sketches.cms_sketch``) SUM-fold into
     a running D*W cell table via ``merge_additive`` under the
-    batch-id commit token (counts are additive, not idempotent — the
-    vocab-counter replay contract). The maintained sketch equals the
+    batch-id commit token (an additive fold; README, "Streaming
+    replay"). The maintained sketch equals the
     batch sketch over everything ever streamed, so
     ``sketches.cms_lookup`` against :func:`read_cms` answers "how
     often has THIS value occurred so far" at any instant from bounded
     state — the frequency twin of :func:`stream_hll`."""
     from lakeflow.operators.sketches import cms_sketch
-    from lakeflow.sinks.merge import has_commit_token, merge_additive
-    from lakeflow.streaming.pipeline import stream_ndjson
-
-    stream = stream_ndjson(spark, path, schema)
 
     def _batch(batch, batch_id: int) -> None:
-        token = f"b{batch_id}"
-        if has_commit_token(target_path, token):
-            return
         delta = cms_sketch(batch, value_col, group_cols, seed)
         merge_additive(
             spark, target_path, delta,
             [*group_cols, "seed_row", "bucket"], ["n"],
-            commit_token=token,
+            commit_token=batch_token(batch_id),
         )
 
-    writer = stream.writeStream.foreachBatch(_batch).option(
-        "checkpointLocation", checkpoint
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return run_batches(stream_ndjson(spark, path, schema), checkpoint, _batch)
 
 
 def read_cms(spark: SparkSession, target_path: str) -> DataFrame:
     """The maintained count-min cell table, ready for
     ``sketches.cms_lookup``. Raises a clear not-yet-initialized error
     before the first batch commits."""
-    from lakeflow.sinks.merge import read_target_if_exists
-
-    sk = read_target_if_exists(spark, target_path)
-    if sk is None:
-        raise FileNotFoundError(
-            f"read_cms: no sketch table at {target_path!r} — the "
-            f"count-min stream has not committed its first batch yet"
-        )
-    return sk
+    return read_state(spark, target_path, "count-min sketch table")
 
 
 def stream_loghist(
@@ -518,13 +415,12 @@ def stream_loghist(
     value_col: str,
     group_cols: tuple[str, ...] = (),
     sub_bins: int | None = None,
-    trigger_available_now: bool = True,
-):
+) -> StreamingQuery:
     """Continuous quantile-sketch maintenance (r9): each micro-batch's
     log-histogram counts (``operators/sketches.loghist_counts`` — a
     key-space-bounded additive relation) SUM-fold into a running
-    table via ``merge_additive`` under the batch-id commit token
-    (counts are additive, not idempotent — the CMS replay contract).
+    table via ``merge_additive`` under the batch-id commit token (an
+    additive fold; README, "Streaming replay").
     The maintained table equals the batch sketch over everything ever
     streamed, so :func:`read_loghist_quantiles` answers "what is p50/
     p99 of everything so far" at any instant from bounded state with
@@ -533,29 +429,18 @@ def stream_loghist(
     (frequency), for value domains too large for the exact CDF
     counts table."""
     from lakeflow.operators.sketches import LOGHIST_SUB_BINS, loghist_counts
-    from lakeflow.sinks.merge import has_commit_token, merge_additive
-    from lakeflow.streaming.pipeline import stream_ndjson
 
     sb = sub_bins or LOGHIST_SUB_BINS
-    stream = stream_ndjson(spark, path, schema)
 
     def _batch(batch, batch_id: int) -> None:
-        token = f"b{batch_id}"
-        if has_commit_token(target_path, token):
-            return
         delta = loghist_counts(batch, value_col, group_cols, sb)
         merge_additive(
             spark, target_path, delta,
             [*group_cols, "key"], ["n"],
-            commit_token=token,
+            commit_token=batch_token(batch_id),
         )
 
-    writer = stream.writeStream.foreachBatch(_batch).option(
-        "checkpointLocation", checkpoint
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return run_batches(stream_ndjson(spark, path, schema), checkpoint, _batch)
 
 
 def read_loghist_quantiles(
@@ -572,14 +457,8 @@ def read_loghist_quantiles(
     ``group_col`` accepts the fleet-monitor multi-column form (r10):
     pass the same tuple the stream was maintained with."""
     from lakeflow.operators.sketches import LOGHIST_SUB_BINS, loghist_quantiles
-    from lakeflow.sinks.merge import read_target_if_exists
 
-    counts = read_target_if_exists(spark, target_path)
-    if counts is None:
-        raise FileNotFoundError(
-            f"read_loghist_quantiles: no sketch table at {target_path!r} — "
-            f"the log-histogram stream has not committed its first batch yet"
-        )
+    counts = read_state(spark, target_path, "log-histogram counts table")
     return loghist_quantiles(counts, probs, group_col, sub_bins or LOGHIST_SUB_BINS)
 
 
@@ -590,40 +469,26 @@ def stream_gram_stats(
     target_path: str,
     checkpoint: str,
     vec_col: str = "embedding",
-    trigger_available_now: bool = True,
-):
+) -> StreamingQuery:
     """Continuously MAINTAINED PCA: each micro-batch's exact gram
     statistics (``operators/pca.gram_triples`` — flat additive
     (i, j, s, sx, n) rows) SUM-fold into a running table via
-    ``merge_additive`` under the batch-id commit token (sums are
-    additive but NOT idempotent — the token makes replays no-ops, the
-    vocab-counter precedent). The maintained table equals the batch
-    ``gram_sums`` over every vector ever streamed, so
+    ``merge_additive`` under the batch-id commit token (an additive
+    fold; README, "Streaming replay"). The maintained table equals the
+    batch ``gram_sums`` over every vector ever streamed, so
     :func:`read_pca_model` refits the CURRENT model from
     dim*(dim+1)/2 rows at any instant — incremental PCA with zero
     history re-scan and a driver-bounded eigh."""
     from lakeflow.operators.pca import gram_triples
-    from lakeflow.sinks.merge import has_commit_token, merge_additive
-    from lakeflow.streaming.pipeline import stream_ndjson
-
-    stream = stream_ndjson(spark, path, schema)
 
     def _batch(batch, batch_id: int) -> None:
-        token = f"b{batch_id}"
-        if has_commit_token(target_path, token):
-            return
         delta = gram_triples(batch, vec_col)
         merge_additive(
             spark, target_path, delta, ["i", "j"], ["s", "sx", "n"],
-            commit_token=token,
+            commit_token=batch_token(batch_id),
         )
 
-    writer = stream.writeStream.foreachBatch(_batch).option(
-        "checkpointLocation", checkpoint
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return run_batches(stream_ndjson(spark, path, schema), checkpoint, _batch)
 
 
 def read_pca_model(spark: SparkSession, target_path: str, k: int):
@@ -632,14 +497,8 @@ def read_pca_model(spark: SparkSession, target_path: str, k: int):
     exact sums, same driver eigh). Raises a clear not-yet-initialized
     error before the first batch commits."""
     from lakeflow.operators.pca import pca_fit_from_triples
-    from lakeflow.sinks.merge import read_target_if_exists
 
-    stats = read_target_if_exists(spark, target_path)
-    if stats is None:
-        raise FileNotFoundError(
-            f"read_pca_model: no statistics table at {target_path!r} — "
-            f"the gram stream has not committed its first batch yet"
-        )
+    stats = read_state(spark, target_path, "gram statistics table")
     return pca_fit_from_triples(stats.collect(), k)
 
 
@@ -648,15 +507,7 @@ def read_int8_scales(spark: SparkSession, target_path: str) -> DataFrame:
     table — identical to batch ``int8_scales`` over every vector ever
     streamed; feed directly to ``quant.int8_encode`` /
     ``int8_dequant``."""
-    from lakeflow.sinks.merge import read_target_if_exists
-
-    sc = read_target_if_exists(spark, target_path)
-    if sc is None:
-        raise FileNotFoundError(
-            f"read_int8_scales: no scale table at {target_path!r} — the "
-            f"scale stream has not committed its first batch yet"
-        )
-    return sc
+    return read_state(spark, target_path, "int8 scale table")
 
 
 def read_heavy_hitters(
@@ -670,14 +521,7 @@ def read_heavy_hitters(
     clear not-yet-initialized error before the first batch commits."""
     from pyspark.sql import Window
 
-    from lakeflow.sinks.merge import read_target_if_exists
-
-    totals = read_target_if_exists(spark, target_path)
-    if totals is None:
-        raise FileNotFoundError(
-            f"read_heavy_hitters: no vocab totals at {target_path!r} — "
-            f"the vocab-counter stream has not committed its first batch yet"
-        )
+    totals = read_state(spark, target_path, "vocab totals")
     topk = totals.orderBy(F.desc("n_occurrences"), F.asc("token")).limit(k)
     w = Window.orderBy(F.desc("n_occurrences"), F.asc("token"))
     return topk.withColumn("rnk", F.row_number().over(w)).select(
@@ -694,8 +538,7 @@ def stream_bitmap_rollup(
     key_cols: list[str] | None = None,
     ts_col: str = "ts",
     distinct_col: str = "user_id",
-    trigger_available_now: bool = True,
-):
+) -> StreamingQuery:
     """Continuous EXACT-distinct rollup maintenance (§2.10 +
     operators/rollups composed): each micro-batch's per-(key, hour,
     bitmap-bucket) partials — additive row count + an exact user-id
@@ -708,20 +551,14 @@ def stream_bitmap_rollup(
     buckets), so restarts are trivial and late data just merges into
     its hour.
 
-    Replay safety mirrors :func:`stream_corpus_counters`: bitmap OR is
-    idempotent but the paired row COUNT is not, so each batch commits
-    under its batch-id token — a replayed batch that already committed
-    is skipped whole."""
+    Replay: bitmap OR is idempotent but the paired row COUNT is not, so
+    this is an additive fold under the batch-id token (README,
+    "Streaming replay")."""
     from lakeflow.operators.rollups import hourly_bitmap_partials
-    from lakeflow.sinks.merge import has_commit_token, merge_aggregate
-    from lakeflow.streaming.pipeline import stream_ndjson
 
     keys = key_cols or ["event_type"]
-    stream = stream_ndjson(spark, path, schema)
 
     def _batch(batch, batch_id: int) -> None:
-        if has_commit_token(partials_path, f"b{batch_id}"):
-            return
         delta = hourly_bitmap_partials(batch, ts_col, keys, distinct_col)
         merge_aggregate(
             spark,
@@ -732,15 +569,10 @@ def stream_bitmap_rollup(
                 F.sum("n").alias("n"),
                 F.bitmap_or_agg("bm").alias("bm"),
             ],
-            commit_token=f"b{batch_id}",
+            commit_token=batch_token(batch_id),
         )
 
-    writer = stream.writeStream.foreachBatch(_batch).option(
-        "checkpointLocation", checkpoint
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return run_batches(stream_ndjson(spark, path, schema), checkpoint, _batch)
 
 
 def stream_entity_index(
@@ -755,8 +587,7 @@ def stream_entity_index(
     block_keys_sql: list[str],
     threshold_micros: int = 800_000,
     max_block_size: int | None = 200,
-    trigger_available_now: bool = True,
-):
+) -> StreamingQuery:
     """Continuous ENTITY RESOLUTION maintenance (§2.10 + §2.12
     composed, the linkage analogue of :func:`stream_exact_neardup_index`):
     as records stream in, each micro-batch is linked against the
@@ -774,22 +605,15 @@ def stream_entity_index(
     Ordering inside the batch: the assignment table is refreshed
     BEFORE the batch's records join the stored set, so the stored side
     the pairs were computed against never includes the batch itself.
-    Replay contract mirrors the dedup streams: a crashed-and-replayed
-    batch whose rows already reached ``records_path`` produces only
-    duplicate pairs (same-id matches are dropped, pairs are
+    Replay: an appending maintainer (README, "Streaming replay"). A
+    replayed batch whose rows already reached ``records_path`` produces
+    only duplicate pairs (same-id matches are dropped, pairs are
     normalized + distinct) and recomputes the identical assignment
-    table; the records append degrades to duplicate rows, which every
-    consumer here tolerates (``incremental_resolve_entities`` ids are
-    distinct; a transactional table format upgrades this to true
-    exactly-once)."""
+    table, which the latest-wins upsert absorbs."""
     from lakeflow.operators.linkage import (
         incremental_linkage_pairs,
         incremental_resolve_entities,
     )
-    from lakeflow.sinks.merge import merge_upsert, read_target_if_exists
-    from lakeflow.streaming.pipeline import stream_ndjson
-
-    stream = stream_ndjson(spark, path, schema)
 
     def _batch(batch, batch_id: int) -> None:
         batch = batch.persist()  # three consumers: pairs, resolve, append
@@ -829,12 +653,7 @@ def stream_entity_index(
         finally:
             batch.unpersist()
 
-    writer = stream.writeStream.foreachBatch(_batch).option(
-        "checkpointLocation", checkpoint
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return run_batches(stream_ndjson(spark, path, schema), checkpoint, _batch)
 
 
 def stream_exact_k_sample(
@@ -846,8 +665,7 @@ def stream_exact_k_sample(
     key_col: str,
     k: int,
     seed: str = "smp",
-    trigger_available_now: bool = True,
-):
+) -> StreamingQuery:
     """Continuous EXACTLY-K uniform sample maintenance — the streaming
     reservoir, kept deterministic: the persisted sample is always the
     k rows of the corpus-so-far with the smallest seeded key hash
@@ -868,9 +686,6 @@ def stream_exact_k_sample(
     and the sample's history is time-travelable like any table.
     Returns the StreamingQuery."""
     from lakeflow.operators.sampling import exact_k_sample
-    from lakeflow.streaming.pipeline import stream_ndjson
-
-    stream = stream_ndjson(spark, path, schema)
 
     def _batch(batch, batch_id: int) -> None:
         from lakeflow.sinks.txtable import (
@@ -890,12 +705,7 @@ def stream_exact_k_sample(
             )
         write_table(spark, best, sample_path)
 
-    writer = stream.writeStream.foreachBatch(_batch).option(
-        "checkpointLocation", checkpoint
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return run_batches(stream_ndjson(spark, path, schema), checkpoint, _batch)
 
 
 def stream_exact_neardup_index(
@@ -909,8 +719,7 @@ def stream_exact_neardup_index(
     text_col: str = "text",
     threshold_micros: int = 300_000,
     shingle_n: int = 3,
-    trigger_available_now: bool = True,
-):
+) -> StreamingQuery:
     """:func:`stream_neardup_index`'s EXACT-recall twin: as documents
     stream in, each micro-batch's qualifying Jaccard pairs against the
     PERSISTED element index (new×stored + new×new — old×old never
@@ -919,17 +728,11 @@ def stream_exact_neardup_index(
     set-similarity join's zero-false-negative guarantee; per-batch cost
     is |batch| × element-bucket density plus candidate verification.
 
-    Ordering and replay contracts mirror the LSH stream: pairs are
-    written BEFORE the batch's elements join the index, and a
-    crashed-and-replayed batch whose ids already reached the index
-    produces no self-pairs (``incremental_setsim_pairs`` drops same-id
-    matches), so replays degrade to duplicates that pairs consumers
-    ``distinct()`` away."""
+    Pairs are written BEFORE the batch's elements join the index.
+    Replay: an appending maintainer (README, "Streaming replay"); a
+    replayed batch whose ids already reached the index produces no
+    self-pairs (``incremental_setsim_pairs`` drops same-id matches)."""
     from lakeflow.operators.setsim import element_index, incremental_setsim_pairs
-    from lakeflow.sinks.merge import read_target_if_exists
-    from lakeflow.streaming.pipeline import stream_ndjson
-
-    stream = stream_ndjson(spark, path, schema)
 
     def _batch(batch, batch_id: int) -> None:
         idx_rows = element_index(batch, id_col, text_col, shingle_n)
@@ -943,8 +746,6 @@ def stream_exact_neardup_index(
             # operator takes internally ride a batch-scoped cache —
             # without the scope each micro-batch would leak one
             # session-lifetime persist until executors fill up
-            from lakeflow.caching import scoped_cache
-
             with scoped_cache():
                 pairs = incremental_setsim_pairs(
                     batch,
@@ -960,12 +761,7 @@ def stream_exact_neardup_index(
         finally:
             idx_rows.unpersist()
 
-    writer = stream.writeStream.foreachBatch(_batch).option(
-        "checkpointLocation", checkpoint
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return run_batches(stream_ndjson(spark, path, schema), checkpoint, _batch)
 
 
 def stream_semantic_index(
@@ -978,9 +774,8 @@ def stream_semantic_index(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     min_cos_micros: int = 950_000,
-    trigger_available_now: bool = True,
     staleness_path: str | None = None,
-):
+) -> StreamingQuery:
     """Streaming SemDeDup intake against a PREBUILT semantic index
     (``kmeans.semantic_index_fit`` on a seed corpus): the centroids
     load once at stream start (bounded k*dim collect, folded into
@@ -992,12 +787,10 @@ def stream_semantic_index(
     size; centroid drift is handled by a periodic refit + index
     rebuild (deterministic, replayable), never per-batch mutation.
 
-    Ordering and replay contracts mirror the exact/LSH streams: pairs
-    are written BEFORE the batch's assignments join the index, and a
-    crashed-and-replayed batch whose ids already reached the index
-    produces no self-pairs (``incremental_semantic_pairs`` drops
-    same-id matches), so replays degrade to duplicate pair rows that
-    consumers ``distinct()`` away.
+    Pairs are written BEFORE the batch's assignments join the index.
+    Replay: an appending maintainer (README, "Streaming replay"); a
+    replayed batch whose ids already reached the index produces no
+    self-pairs (``incremental_semantic_pairs`` drops same-id matches).
 
     ``staleness_path`` (r11, optional — VERDICT r10 task #4): when
     set, each batch's frozen-CENTROID drift row
@@ -1016,12 +809,10 @@ def stream_semantic_index(
         load_semantic_index,
         semantic_index,
     )
-    from lakeflow.sinks.merge import read_target_if_exists
-    from lakeflow.streaming.pipeline import stream_ndjson
+    from lakeflow.operators.profile import occupancy_staleness
 
     cents, _ = load_semantic_index(spark, index_path)
     asg_path = f"{index_path}/assignments"
-    stream = stream_ndjson(spark, path, schema)
 
     def _batch(batch, batch_id: int) -> None:
         new_idx = semantic_index(batch, cents, id_col, vec_col)
@@ -1035,23 +826,14 @@ def stream_semantic_index(
                 and not stored.isEmpty()
                 and not new_idx.isEmpty()
             ):
-                from lakeflow.operators.profile import occupancy_staleness
-
-                occupancy_staleness(
+                stats = occupancy_staleness(
                     # replay hygiene: duplicate (id, cell) rows from a
                     # replayed append must not double-count occupancy
                     stored.select(id_col, "cell").distinct().select("cell"),
                     new_idx.select("cell"),
                     "cell",
-                ).select(
-                    F.lit(int(batch_id)).cast("long").alias("batch_id"),
-                    "n_stored",
-                    "n_batch",
-                    "chi2_micros",
-                    "rebuild",
-                ).write.mode("append").parquet(staleness_path)
-            from lakeflow.caching import scoped_cache
-
+                )
+                append_staleness(stats, batch_id, staleness_path)
             with scoped_cache():
                 pairs = incremental_semantic_pairs(
                     batch,
@@ -1067,12 +849,7 @@ def stream_semantic_index(
         finally:
             new_idx.unpersist()
 
-    writer = stream.writeStream.foreachBatch(_batch).option(
-        "checkpointLocation", checkpoint
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return run_batches(stream_ndjson(spark, path, schema), checkpoint, _batch)
 
 
 def stream_ivf_assign(
@@ -1084,9 +861,8 @@ def stream_ivf_assign(
     checkpoint: str,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    trigger_available_now: bool = True,
     staleness_path: str | None = None,
-):
+) -> StreamingQuery:
     """Continuous IVF inverted-file maintenance (r9, the index half of
     ``similarity.ivf_ann_topk``'s ``assignments=`` serving path): as
     vectors stream in, each micro-batch's (id, cell) assignment rows
@@ -1097,15 +873,11 @@ def stream_ivf_assign(
     rebuild (deterministic), never per-batch centroid mutation — the
     same arrangement as the semantic-dedup and APSS index streams.
 
-    Replay-safe by construction: assignment is a pure deterministic
-    function of (vector, centroids), so a crashed-and-replayed batch
-    re-appends IDENTICAL rows — never conflicting cells for one id —
-    and ``ivf_ann_topk``'s serving path distinct()s the relation on
-    read before joining, so the duplicates cannot duplicate corpus
-    rows through the join or occupy two of the k ranks. Consumers
-    reading the relation directly should distinct() likewise; a
-    periodic compaction (rewrite with distinct) keeps the file set
-    tidy.
+    Replay: an appending maintainer (README, "Streaming replay").
+    Assignment is a pure function of (vector, centroids), so a replayed
+    batch re-appends IDENTICAL rows, never conflicting cells for one
+    id; ``ivf_ann_topk``'s serving path distinct()s the relation on
+    read before joining.
 
     ``staleness_path`` (r10, optional): when set, each batch's
     frozen-CENTROID drift row (``profile.occupancy_staleness`` — exact
@@ -1116,14 +888,10 @@ def stream_ivf_assign(
     to the centroid snapshot. The caller re-picks centroids + rebuilds
     the inverted file when the flag fires; the monitor never mutates
     what it measures."""
+    from lakeflow.operators.profile import occupancy_staleness
     from lakeflow.operators.similarity import ivf_assign
-    from lakeflow.streaming.pipeline import stream_ndjson
-
-    stream = stream_ndjson(spark, path, schema)
 
     def _batch(batch, batch_id: int) -> None:
-        from lakeflow.sinks.merge import read_target_if_exists
-
         asg = ivf_assign(batch, centroids, id_col, vec_col)
         # the stored relation is created by THIS stream's own first
         # append — on a fresh index it does not exist yet (and an
@@ -1141,30 +909,18 @@ def stream_ivf_assign(
             and not stored.isEmpty()
             and not asg.isEmpty()
         ):
-            from lakeflow.operators.profile import occupancy_staleness
-
-            occupancy_staleness(
+            stats = occupancy_staleness(
                 # replay hygiene, the serving-join rule: duplicate
                 # (id, cell) rows from a replayed append must not
                 # double-count occupancy
                 stored.select(id_col, "cell").distinct().select("cell"),
                 asg.select("cell"),
                 "cell",
-            ).select(
-                F.lit(int(batch_id)).cast("long").alias("batch_id"),
-                "n_stored",
-                "n_batch",
-                "chi2_micros",
-                "rebuild",
-            ).write.mode("append").parquet(staleness_path)
+            )
+            append_staleness(stats, batch_id, staleness_path)
         asg.write.mode("append").parquet(assignments_path)
 
-    writer = stream.writeStream.foreachBatch(_batch).option(
-        "checkpointLocation", checkpoint
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return run_batches(stream_ndjson(spark, path, schema), checkpoint, _batch)
 
 
 def stream_apss_index(
@@ -1177,9 +933,7 @@ def stream_apss_index(
     id_col: str = "doc_id",
     text_col: str = "text",
     threshold_micros: int = 600_000,
-    trigger_available_now: bool = True,
-    monitor_staleness: bool = True,
-):
+) -> StreamingQuery:
     """Streaming weighted-cosine APSS intake against a PREBUILT index
     (``apss.apss_index_fit`` on a seed corpus — the semantic-index
     arrangement): each micro-batch is weighted against the persisted
@@ -1195,42 +949,33 @@ def stream_apss_index(
     (deterministic, replayable), never per-batch re-weighting of
     stored documents.
 
-    Ordering and replay contracts mirror the exact-neardup stream:
-    pairs are written BEFORE the batch's rows join the index, and a
-    crashed-and-replayed batch whose rows already reached the index
-    produces no self-pairs (``incremental_apss_pairs`` drops same-id
-    matches at the candidate join AND at representative expansion;
-    snapshot weighting re-derives identical weights), so replays
-    degrade to duplicate index rows — which
-    ``incremental_apss_pairs`` dedups on read, candidate-bounded, so
-    later batches never brick on duplicate map keys — plus duplicate
-    pair rows that consumers ``distinct()`` away. A periodic index
-    rebuild (``apss_index_fit``) compacts the duplicates.
+    Pairs are written BEFORE the batch's rows join the index. Replay:
+    an appending maintainer (README, "Streaming replay"); a replayed
+    batch whose rows already reached the index produces no self-pairs
+    (``incremental_apss_pairs`` drops same-id matches at the candidate
+    join AND at representative expansion, and dedups duplicate index
+    rows on read). A periodic ``apss_index_fit`` rebuild compacts the
+    duplicates.
 
-    ``monitor_staleness`` (default on, r10 — VERDICT r9 task #4):
-    each batch's drift statistics against the frozen df snapshot
-    (``apss.snapshot_staleness`` — unseen-term rate + chi² over
-    log2(df) buckets + the rebuild trigger) append ONE row tagged
-    ``batch_id`` to ``{index_path}/staleness``, measured BEFORE the
-    batch's own rows join the index (the batch must be scored against
-    the snapshot it was weighted with). The caller's maintenance loop
-    watches the newest row's ``rebuild`` flag and re-runs
-    ``apss_index_fit`` when it fires — the monitor itself never
-    mutates the index it measures. Replays re-derive an identical row
-    (deterministic statistics); duplicate monitor rows are harmless
-    history."""
+    Staleness monitor: each batch's drift statistics against the
+    frozen df snapshot (``apss.snapshot_staleness`` — unseen-term rate
+    + chi² over log2(df) buckets + the rebuild trigger) append ONE row
+    tagged ``batch_id`` to ``{index_path}/staleness``, measured BEFORE
+    the batch's own rows join the index (the batch must be scored
+    against the snapshot it was weighted with). The caller's
+    maintenance loop watches the newest row's ``rebuild`` flag and
+    re-runs ``apss_index_fit`` when it fires — the monitor itself
+    never mutates the index it measures."""
     from lakeflow.operators.apss import (
         apss_prefix_index,
         incremental_apss_pairs,
         snapshot_staleness,
         snapshot_weights,
     )
-    from lakeflow.streaming.pipeline import stream_ndjson
 
     weights_path = f"{index_path}/weights"
     prefix_path = f"{index_path}/prefix"
     staleness_path = f"{index_path}/staleness"
-    stream = stream_ndjson(spark, path, schema)
 
     def _batch(batch, batch_id: int) -> None:
         stored_w = spark.read.parquet(weights_path)  # prebuilt: must exist
@@ -1240,27 +985,19 @@ def stream_apss_index(
         # chi2's empty-side assert would fail the WHOLE batch, so the
         # monitor row is skipped — nothing was scored against the
         # snapshot, so there is no drift to measure (ADVICE r10)
-        from lakeflow.operators.text import tokens
-
-        batch_has_tokens = monitor_staleness and not (
+        if not (
             batch.select(F.explode(tokens(text_col)).alias("__t"))
             .filter(F.col("__t") != "")
             .isEmpty()
-        )
-        if batch_has_tokens:
-            snapshot_staleness(batch, stored_w, id_col, text_col).select(
-                F.lit(int(batch_id)).cast("long").alias("batch_id"),
-                "n_snapshot",
-                "n_batch",
-                "unseen_ppm",
-                "chi2_micros",
-                "rebuild",
-            ).write.mode("append").parquet(staleness_path)
+        ):
+            append_staleness(
+                snapshot_staleness(batch, stored_w, id_col, text_col),
+                batch_id,
+                staleness_path,
+            )
         new_w = snapshot_weights(batch, stored_w, id_col, text_col)
         new_w = new_w.persist()  # three consumers: pairs + both appends
         try:
-            from lakeflow.caching import scoped_cache
-
             with scoped_cache():
                 pairs = incremental_apss_pairs(
                     batch,
@@ -1279,12 +1016,7 @@ def stream_apss_index(
         finally:
             new_w.unpersist()
 
-    writer = stream.writeStream.foreachBatch(_batch).option(
-        "checkpointLocation", checkpoint
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return run_batches(stream_ndjson(spark, path, schema), checkpoint, _batch)
 
 
 def stream_inverted_index(
@@ -1295,8 +1027,7 @@ def stream_inverted_index(
     checkpoint: str,
     id_col: str = "doc_id",
     text_col: str = "text",
-    trigger_available_now: bool = True,
-):
+) -> StreamingQuery:
     """Continuous inverted-index maintenance: each micro-batch's
     posting rows (token, doc_id, tf) — built by the same explode +
     hash aggregate as ``index.build_inverted_index`` — fold into the
@@ -1307,33 +1038,20 @@ def stream_inverted_index(
     directly (BM25's doc lengths and corpus totals derive from the
     index itself, so they stay current for free).
 
-    Exactly-once on replays: the additive merge rides the same atomic
-    batch-id commit-token protocol as ``stream_corpus_counters`` — a
-    replayed batch either finds its token (no-op) or the merge never
-    became visible (safe to apply). Per-batch cost is the batch's own
-    postings plus the key-join against the index (at 100 TB: a
-    token-bucketed co-located merge)."""
+    Replay: an additive fold under the batch-id token (README,
+    "Streaming replay"). Per-batch cost is the batch's own postings
+    plus the key-join against the index (at 100 TB: a token-bucketed
+    co-located merge)."""
     from lakeflow.operators.index import build_inverted_index
-    from lakeflow.sinks.merge import has_commit_token, merge_additive
-    from lakeflow.streaming.pipeline import stream_ndjson
-
-    stream = stream_ndjson(spark, path, schema)
 
     def _batch(batch, batch_id: int) -> None:
-        if has_commit_token(index_path, f"b{batch_id}"):
-            return  # replayed batch: its merge fully committed already
         delta = build_inverted_index(batch, id_col, text_col)
         merge_additive(
             spark, index_path, delta, ["token", "doc_id"], ["tf"],
-            commit_token=f"b{batch_id}",
+            commit_token=batch_token(batch_id),
         )
 
-    writer = stream.writeStream.foreachBatch(_batch).option(
-        "checkpointLocation", checkpoint
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return run_batches(stream_ndjson(spark, path, schema), checkpoint, _batch)
 
 
 def stream_positional_index(
@@ -1344,8 +1062,7 @@ def stream_positional_index(
     checkpoint: str,
     id_col: str = "doc_id",
     text_col: str = "text",
-    trigger_available_now: bool = True,
-):
+) -> StreamingQuery:
     """Continuous POSITIONAL-index maintenance (r8 — the phrase/slop
     retrieval twin of :func:`stream_inverted_index`): each micro-batch's
     positional posting rows (token, doc_id, tf, positions) — built by
@@ -1361,21 +1078,14 @@ def stream_positional_index(
     ``phrase_search`` and ``slop_search`` directly and equals the
     batch-built index over the same documents (tested).
 
-    Exactly-once on replays: the upsert rides the same atomic batch-id
-    commit-token protocol as the other maintainers — and is ALSO
-    content-idempotent (identical replayed rows collapse under
-    latest-wins), so the token is belt on braces. Per-batch cost is
-    the batch's own postings plus the key-join against the index (at
+    Replay: the upsert carries the batch-id token like an additive
+    fold (README, "Streaming replay"), although identical replayed
+    rows would also collapse under latest-wins. Per-batch cost is the
+    batch's own postings plus the key-join against the index (at
     100 TB: a token-bucketed co-located merge)."""
     from lakeflow.operators.index import build_positional_index
-    from lakeflow.sinks.merge import has_commit_token, merge_upsert
-    from lakeflow.streaming.pipeline import stream_ndjson
-
-    stream = stream_ndjson(spark, path, schema)
 
     def _batch(batch, batch_id: int) -> None:
-        if has_commit_token(index_path, f"b{batch_id}"):
-            return  # replayed batch: its merge fully committed already
         delta = build_positional_index(batch, id_col, text_col).withColumn(
             "__batch", F.lit(batch_id).cast("long")
         )
@@ -1385,15 +1095,10 @@ def stream_positional_index(
             delta,
             ["token", "doc_id"],
             "__batch",
-            commit_token=f"b{batch_id}",
+            commit_token=batch_token(batch_id),
         )
 
-    writer = stream.writeStream.foreachBatch(_batch).option(
-        "checkpointLocation", checkpoint
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return run_batches(stream_ndjson(spark, path, schema), checkpoint, _batch)
 
 
 def stream_contamination_guard(
@@ -1407,8 +1112,7 @@ def stream_contamination_guard(
     text_col: str = "text",
     threshold_micros: int = 800_000,
     shingle_n: int = 3,
-    trigger_available_now: bool = True,
-):
+) -> StreamingQuery:
     """Continuous eval-set decontamination: every micro-batch of
     incoming documents is containment-joined (``setsim.
     containment_join`` — |N∩D|/|N|, the asymmetry that catches a
@@ -1421,16 +1125,11 @@ def stream_contamination_guard(
     Per-batch cost is batch-proportional: the needle side is small and
     fixed (its prefix relation rebuilds per batch from the broadcastable
     benchmark table; the batch side is shingled once, shuffle-free).
-    Replay: a crashed-and-replayed batch re-appends identical flag rows
-    — flags are a pure function of (needle, doc) content, so consumers
-    ``distinct()`` replays away, the same contract as the near-dup pair
-    streams. Batch twin: ``q_containment_join``'s oracle certifies the
-    join's zero-false-negative guarantee."""
-    from lakeflow.caching import scoped_cache
+    Replay: an appending maintainer (README, "Streaming replay"); flags
+    are a pure function of (needle, doc) content. Batch twin:
+    ``q_containment_join``'s oracle certifies the join's
+    zero-false-negative guarantee."""
     from lakeflow.operators.setsim import containment_join
-    from lakeflow.streaming.pipeline import stream_ndjson
-
-    stream = stream_ndjson(spark, path, schema)
 
     def _batch(batch, batch_id: int) -> None:
         with scoped_cache():
@@ -1439,9 +1138,4 @@ def stream_contamination_guard(
             )
             flags.write.mode("append").parquet(flags_path)
 
-    writer = stream.writeStream.foreachBatch(_batch).option(
-        "checkpointLocation", checkpoint
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return run_batches(stream_ndjson(spark, path, schema), checkpoint, _batch)

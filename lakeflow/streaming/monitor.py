@@ -11,24 +11,21 @@ is derived from the totals at READ time by
 ``operators/trend.ols_from_stats`` — the exact same numbers a batch
 ``grouped_ols`` over all events ever streamed would produce (tested).
 
-Replay safety mirrors ``stream_corpus_counters``: the stats merge is
-not idempotent (a re-applied delta double-counts), so each batch
-commits under its batch-id token, swapped in atomically with the data;
-a replayed batch that already committed is skipped whole. Tokens are
-keyed by the CHECKPOINT LINEAGE's batch ids (the same contract as
-stream_corpus_counters): deleting only the checkpoint and restarting
-against an existing totals table would re-batch ALL files under
-already-committed ids and silently skip them — to reprocess, delete
-the totals table together with the checkpoint and start fresh.
+Replay follows the additive-fold rule (README, "Streaming replay"):
+each batch's merge carries its batch-id token, so a replayed batch is
+folded in once.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import StructType
 
 from lakeflow.operators.trend import STAT_COLS, ols_from_stats, ols_sufficient_stats
+from lakeflow.sinks.merge import batch_token, merge_additive
+from lakeflow.streaming.pipeline import read_state, run_batches, stream_ndjson
 
 
 def stream_trend_stats(
@@ -41,21 +38,14 @@ def stream_trend_stats(
     ts_col: str = "ts",
     value_col: str = "value",
     epoch_date: str = "2024-01-01",
-    trigger_available_now: bool = True,
-):
+) -> StreamingQuery:
     """Maintain a per-key OLS sufficient-statistics table from an NDJSON
     event stream: x = days since ``epoch_date``, y = value in micros.
     Returns the StreamingQuery; read the current fit any time with
     :func:`read_trends`."""
-    from lakeflow.sinks.merge import has_commit_token, merge_additive
-    from lakeflow.streaming.pipeline import stream_ndjson
-
     keys = key_cols or ["event_type"]
-    stream = stream_ndjson(spark, path, schema)
 
     def _batch(batch: DataFrame, batch_id: int) -> None:
-        if has_commit_token(target_path, f"b{batch_id}"):
-            return  # replayed batch: its merge fully committed already
         x = F.datediff(
             F.col(ts_col).cast("date"), F.lit(epoch_date).cast("date")
         )
@@ -67,15 +57,10 @@ def stream_trend_stats(
             delta,
             keys,
             list(STAT_COLS),
-            commit_token=f"b{batch_id}",
+            commit_token=batch_token(batch_id),
         )
 
-    writer = stream.writeStream.foreachBatch(_batch).option(
-        "checkpointLocation", checkpoint
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return run_batches(stream_ndjson(spark, path, schema), checkpoint, _batch)
 
 
 def read_trends(
@@ -84,18 +69,9 @@ def read_trends(
     """Current per-key slope/intercept from the monitor's totals table —
     identical to a batch ``grouped_ols`` over every event ever streamed.
 
-    Reads through :func:`~lakeflow.sinks.merge.read_target_if_exists`
-    so a reader landing in the crash-mid-swap window (base renamed
-    away, tmp not yet renamed in) triggers the fenced-swap recovery
-    instead of a path-not-found error; before the first batch commits
-    it raises a clear not-yet-initialized error."""
-    from lakeflow.sinks.merge import read_target_if_exists
-
-    keys = key_cols or ["event_type"]
-    totals = read_target_if_exists(spark, target_path)
-    if totals is None:
-        raise FileNotFoundError(
-            f"read_trends: no trend totals at {target_path!r} — the "
-            f"monitor stream has not committed its first batch yet"
-        )
-    return ols_from_stats(totals, keys)
+    Reads through :func:`~lakeflow.streaming.pipeline.read_state`, so a
+    reader landing in the crash-mid-swap window triggers the fenced-swap
+    recovery instead of a path-not-found error; before the first batch
+    commits it raises a clear not-yet-initialized error."""
+    totals = read_state(spark, target_path, "trend totals")
+    return ols_from_stats(totals, key_cols or ["event_type"])

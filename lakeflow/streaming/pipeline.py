@@ -21,11 +21,14 @@ what makes 100 TB event streams tractable.
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import StructType
+
+from lakeflow.sinks.merge import merge_upsert, read_target_if_exists
 
 
 def stream_ndjson(
@@ -41,6 +44,51 @@ def stream_ndjson(
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
     return reader.options(**options).json(path)
+
+
+def run_batches(
+    stream: DataFrame,
+    checkpoint: str,
+    fn: Callable[[DataFrame, int], None],
+) -> StreamingQuery:
+    """The one foreachBatch writer every streaming maintainer uses:
+    call ``fn(batch, batch_id)`` on each micro-batch of everything
+    available at start, then stop (``availableNow``); ``checkpoint``
+    holds the file-source offsets and the batch commit log. Returns
+    the started StreamingQuery. Spark re-runs a batch id whose ``fn``
+    failed before the batch committed; what each maintainer's writes
+    do on that replay is stated once in README.md, "Streaming
+    replay"."""
+    return (
+        stream.writeStream.foreachBatch(fn)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
+def read_state(spark: SparkSession, path: str, what: str) -> DataFrame:
+    """Read a maintainer's state table through the merge layer's
+    crash-mid-swap recovery; before the stream's first batch commits,
+    raise FileNotFoundError naming ``what`` instead of returning an
+    empty or missing table."""
+    df = read_target_if_exists(spark, path)
+    if df is None:
+        raise FileNotFoundError(
+            f"no {what} at {path!r} — its stream has not committed its "
+            f"first batch yet"
+        )
+    return df
+
+
+def append_staleness(stats: DataFrame, batch_id: int, path: str) -> None:
+    """Append a drift-statistics row (``band_staleness``,
+    ``occupancy_staleness``, ``snapshot_staleness``) to ``path``,
+    tagged with the micro-batch's ``batch_id``. A replayed batch
+    re-appends an identical row."""
+    stats.select(
+        F.lit(int(batch_id)).cast("long").alias("batch_id"), "*"
+    ).write.mode("append").parquet(path)
 
 
 def windowed_counts(
@@ -109,33 +157,25 @@ def upsert_foreach_batch(
     keys: Sequence[str],
     order_col: str,
     checkpoint: str,
-    trigger_available_now: bool = True,
-):
+) -> StreamingQuery:
     """foreachBatch latest-wins upsert into a parquet target.
 
     Production target is Delta/Iceberg ``MERGE``; plain parquet has no
     row-level merge, so each micro-batch delegates to
     ``sinks.merge.merge_upsert`` — union the existing target, keep the
     newest row per key, stage into a merge-private temp dir, swap in
-    with directory renames (correct, idempotent on replays because the
-    merge is associative + order-insensitive given the order column;
-    the staged swap means a mid-batch failure leaves the previous
-    target intact and pins nothing on executor storage). Returns the
-    started StreamingQuery.
+    with directory renames (the staged swap means a mid-batch failure
+    leaves the previous target intact and pins nothing on executor
+    storage). Replay: an upsert fold, idempotent by its algebra, so it
+    carries no token (README, "Streaming replay"). Returns the started
+    StreamingQuery.
     """
-    from lakeflow.sinks.merge import merge_upsert
-
     spark = stream.sparkSession
 
     def merge(batch: DataFrame, batch_id: int) -> None:
         merge_upsert(spark, target_path, batch, list(keys), order_col)
 
-    writer = stream.writeStream.foreachBatch(merge).option(
-        "checkpointLocation", checkpoint
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return run_batches(stream, checkpoint, merge)
 
 
 def windowed_drift(
