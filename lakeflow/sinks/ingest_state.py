@@ -14,6 +14,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from lakeflow.sinks.merge import read_target_if_exists
+
 
 class IngestState:
     def __init__(self, spark: SparkSession, state_path: str):
@@ -21,9 +23,11 @@ class IngestState:
         self.state_path = state_path
 
     def processed_files(self, source: str) -> DataFrame:
-        try:
-            st = self.spark.read.parquet(self.state_path)
-        except Exception:
+        """Files already recorded for ``source``. Only a state table that
+        does not exist yet reads as empty; any other read failure raises,
+        since an empty answer would re-ingest every file."""
+        st = read_target_if_exists(self.spark, self.state_path)
+        if st is None:
             return self.spark.createDataFrame([], "file string")
         return st.filter(F.col("source") == source).select("file")
 

@@ -12,14 +12,25 @@ scan. Two layout levers:
   engine reproduces it exactly.
 - **Compaction**: streaming ingest and per-batch upserts accumulate
   small files; metadata overhead and task scheduling then dominate
-  reads. ``compact_parquet`` rewrites to ~target-sized files via a
-  single repartition.
+  reads. ``compact_parquet`` rewrites to ~target-sized files.
+
+Both are layouts of one rule (:func:`_lay_out` into :func:`_n_files`
+files). On plain-parquet directories a compaction is a rewrite commit
+like any merge (``sinks/merge._fenced_overwrite``): it claims the
+version fence, carries the streaming commit tokens forward and shares
+the merge's crash recovery. ``sinks/txtable.optimize_table`` lays out
+the same way as one manifest commit.
 """
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from lakeflow.sinks.merge import _fenced_overwrite, _snapshot, _swap
+from lakeflow.sinks.tables import dataset_bytes
 
 #: (shift, mask) stages spreading a 16-bit value across 32 bits
 _SPREAD = ((8, 0x00FF00FF), (4, 0x0F0F0F0F), (2, 0x33333333), (1, 0x55555555))
@@ -56,6 +67,28 @@ def sql_morton(x: str, y: str) -> str:
     return f"({spread(x)} | ({spread(y)} << 1))"
 
 
+def _n_files(total_bytes: int, target_file_bytes: int) -> int:
+    """Output file count for a rewrite: ceil(bytes / target), at least 1."""
+    return max(1, -(-total_bytes // target_file_bytes))
+
+
+def _lay_out(
+    df: DataFrame, n_files: int, zorder: tuple[str, str] | None = None
+) -> DataFrame:
+    """``df`` laid out as ``n_files`` output files: a shuffle-free
+    coalesce, or — with ``zorder=(x, y)`` — a range-partition by the
+    Morton key, sorted within each file, so footer min/max on BOTH
+    columns become selective."""
+    if zorder is None:
+        return df.coalesce(n_files)
+    return (
+        df.withColumn("__z", morton_key(*zorder))
+        .repartitionByRange(n_files, "__z")
+        .sortWithinPartitions("__z")
+        .drop("__z")
+    )
+
+
 def zorder_write(
     df: DataFrame, path: str, col_x: str, col_y: str, n_files: int
 ) -> None:
@@ -63,73 +96,21 @@ def zorder_write(
     Morton key into ``n_files`` output files, sorted within each — so
     parquet footer min/max on BOTH columns become selective and file
     pruning works for either predicate."""
-    keyed = df.withColumn("__z", morton_key(col_x, col_y))
-    (
-        keyed.repartitionByRange(n_files, "__z")
-        .sortWithinPartitions("__z")
-        .drop("__z")
-        .write.mode("overwrite")
-        .parquet(path)
-    )
+    _lay_out(df, n_files, (col_x, col_y)).write.mode("overwrite").parquet(path)
 
 
-def _parquet_bytes(path: str) -> int:
-    import os
-
-    total = 0
-    for root, _dirs, files in os.walk(path):
-        for f in files:
-            if f.endswith(".parquet"):
-                total += os.path.getsize(os.path.join(root, f))
-    return total
-
-
-def _recover_staged_swap(base: str) -> tuple[str, str]:
-    """Crash recovery + staging cleanup for the two-rename swap used by
-    :func:`compact_parquet` / :func:`optimize_table`.
-
-    A prior run may have died between ``os.rename(base, old)`` and
-    ``os.rename(tmp, base)`` — at that instant the only live copy of the
-    table is ``._compact_old`` (and possibly a complete ``._compact_tmp``).
-    Unconditionally deleting the siblings before reading ``base`` would
-    destroy every remaining copy. So: if ``base`` is missing but ``old``
-    exists, restore it first; if neither exists, abort loudly rather than
-    proceed against a vanished table. Only then is it safe to clear
-    leftover staging dirs. Returns (tmp, old) paths."""
-    import os
-    import shutil
-
-    tmp, old = base + "._compact_tmp", base + "._compact_old"
-    if not os.path.exists(base):
-        if os.path.exists(old):
-            os.rename(old, base)  # roll back the interrupted swap
-        else:
-            raise FileNotFoundError(
-                f"compact: table path {base!r} missing and no "
-                f"._compact_old sibling to restore from"
-            )
-    shutil.rmtree(tmp, ignore_errors=True)
-    shutil.rmtree(old, ignore_errors=True)
-    return tmp, old
-
-
-def _staged_swap(base: str, tmp: str, old: str) -> None:
-    """Swap the staged rewrite in via two renames; on any failure remove
-    the staging dir (never the live table). Between the two renames the
-    table path briefly does not exist — readers that open the path in
-    that window see a missing directory, not partial data."""
-    import os
-    import shutil
-
-    try:
-        os.rename(base, old)
-        os.rename(tmp, base)
-    except BaseException:
-        if not os.path.exists(base) and os.path.exists(old):
-            os.rename(old, base)
-        shutil.rmtree(tmp, ignore_errors=True)
-        raise
-    shutil.rmtree(old)
+def _rewrite(
+    spark: SparkSession,
+    path: str,
+    target_file_bytes: int,
+    zorder: tuple[str, str] | None = None,
+) -> int:
+    v0, existing = _snapshot(spark, path)
+    if existing is None:
+        raise FileNotFoundError(f"compact: no table at {path!r}")
+    n_files = _n_files(dataset_bytes(spark, path), target_file_bytes)
+    _fenced_overwrite(_lay_out(existing, n_files, zorder), path, v0)
+    return n_files
 
 
 def compact_parquet(
@@ -137,36 +118,24 @@ def compact_parquet(
 ) -> int:
     """Rewrite a parquet table into ~target-sized files (small-file
     compaction after streaming/batch upsert churn). Returns the new
-    file count. Size is estimated from the current on-disk footprint;
-    the rewrite is a single shuffle-free coalesce when shrinking, a
-    repartition when growing.
+    file count. Size is the current on-disk footprint
+    (``tables.dataset_bytes``, any scheme); the rewrite is a single
+    shuffle-free coalesce.
 
-    The compacted output is staged in a sibling ``._compact_tmp``
-    directory and then swapped in with two directory renames — the live
-    path is never written while it is being read, so concurrent readers
-    see either the old layout or the new one, and a mid-compaction
-    failure leaves the table untouched. (The previous implementation
-    pinned the whole table on executor storage via ``localCheckpoint``
-    to survive overwriting its own input — unacceptable for a routine
-    maintenance op: not fault-tolerant, and O(table) executor memory.)
-    Directory rename is atomic on POSIX/HDFS; on an object store run
-    this per partition under a table format's transactional commit
-    instead (see :func:`compact_partitions`). A crash between the two
-    renames is recovered on the next run (``._compact_old`` is restored
-    before staging dirs are cleaned).
+    The rewrite commits like a merge: staged in a ``._merge_tmp_*``
+    sibling and swapped in with two directory renames once the version
+    fence is claimed, so concurrent readers see the old layout or the
+    new one, a merge that commits meanwhile makes this raise
+    ``ConcurrentMergeError`` instead of being lost, replay tokens
+    survive, and a crash between the renames is recovered by the next
+    read or rewrite. A missing table raises ``FileNotFoundError``.
 
     Reader caveat: between the two renames the path briefly does not
     exist. Tables that can take manifest-committed layout should use
     ``sinks/txtable.optimize_table`` instead — compaction there is one
     atomic manifest publish with NO reader gap (old files stay until
     vacuum)."""
-    base = path.rstrip("/")
-    tmp, old = _recover_staged_swap(base)
-    total = _parquet_bytes(base)
-    n_files = max(1, (total + target_file_bytes - 1) // target_file_bytes)
-    spark.read.parquet(base).coalesce(int(n_files)).write.parquet(tmp)
-    _staged_swap(base, tmp, old)
-    return int(n_files)
+    return _rewrite(spark, path, target_file_bytes)
 
 
 def optimize_table(
@@ -178,16 +147,11 @@ def optimize_table(
 ) -> int:
     """Delta ``OPTIMIZE ... ZORDER BY (x, y)`` equivalent for plain
     parquet: rewrite the table Z-ordered on (col_x, col_y) into
-    ~target-sized files, staged in a sibling temp dir and swapped in
-    atomically — compaction and clustering in one maintenance pass, the
-    live table readable throughout. Returns the new file count."""
-    base = path.rstrip("/")
-    tmp, old = _recover_staged_swap(base)
-    total = _parquet_bytes(base)
-    n_files = int(max(1, (total + target_file_bytes - 1) // target_file_bytes))
-    zorder_write(spark.read.parquet(base), tmp, col_x, col_y, n_files)
-    _staged_swap(base, tmp, old)
-    return n_files
+    ~target-sized files through the same fenced commit as
+    :func:`compact_parquet` — compaction and clustering in one
+    maintenance pass, the live table readable throughout. Returns the
+    new file count."""
+    return _rewrite(spark, path, target_file_bytes, (col_x, col_y))
 
 
 def compact_partitions(
@@ -197,15 +161,15 @@ def compact_partitions(
     target_file_bytes: int = 128 * 1024 * 1024,
 ) -> dict[str, int]:
     """Partition-scoped compaction: rewrite one Hive partition directory
-    (``key=value``) at a time via :func:`compact_parquet`. The working
-    set is one partition, not the table — at 100 TB, table-at-once
-    compaction is both a memory hazard and an availability hazard (one
-    failure invalidates the whole rewrite), while per-partition swaps
-    bound the blast radius to the partition in flight and let the
-    maintenance job checkpoint progress between partitions. Returns
-    {partition: new_file_count}."""
-    import os
-
+    (``key=value``) at a time. The working set is one partition, not
+    the table — at 100 TB, table-at-once compaction is both a memory
+    hazard and an availability hazard (one failure invalidates the
+    whole rewrite), while per-partition swaps bound the blast radius to
+    the partition in flight and let the maintenance job checkpoint
+    progress between partitions. Each partition takes the staged swap
+    without the version fence: a ``p=K._versions`` sibling would sit in
+    the table root and read as a partition value, and merges never
+    target partitioned tables. Returns {partition: new_file_count}."""
     base = path.rstrip("/")
     if partitions is None:
         partitions = sorted(
@@ -213,7 +177,9 @@ def compact_partitions(
             for d in os.listdir(base)
             if "=" in d and os.path.isdir(os.path.join(base, d))
         )
-    return {
-        p: compact_parquet(spark, os.path.join(base, p), target_file_bytes)
-        for p in partitions
-    }
+    out = {}
+    for p in partitions:
+        part = os.path.join(base, p)
+        out[p] = _n_files(dataset_bytes(spark, part), target_file_bytes)
+        _swap(_lay_out(spark.read.parquet(part), out[p]), part)
+    return out

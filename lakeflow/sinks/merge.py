@@ -1,57 +1,47 @@
-"""Batch merge patterns: upsert + SCD2 history (CDC emulation).
+"""Batch merge patterns over plain parquet: upsert, SCD2 history,
+keyed aggregate folds and deletes, plus the one staged rewrite that
+every plain-parquet sink (these merges and ``sinks/layout`` compaction)
+commits through.
 
 The reference's "upsert" was drop-and-recreate or append-only tables
 (SURVEY §2.10); Delta/Iceberg ``MERGE INTO`` is the production path.
-
-ACID LIMITATION (documented, by environment): delta-spark / Iceberg
-JVM packages are not installable in this sandbox, so these helpers
-emulate MERGE over plain parquet with the guide-standard anti-join +
-union + window rewrite. (Attempt log: round 2 — pip install blocked;
-round 3 — retried, no package index reachable; round 4 —
-``pip download delta-spark`` fails at DNS resolution: the sandbox has
-no network egress at all; round 5 — retried, same DNS failure on the
-configured index host; round 8 — retried, same DNS failure
-(NewConnectionError 'Name or service not known' on the index host).
-Re-attempt each round per the judge's standing task.) The API shape is MERGE-compatible on purpose —
+These helpers emulate MERGE over plain parquet with the anti-join +
+union + window rewrite. The API shape is MERGE-compatible on purpose —
 (target, updates, keys, ordering) maps 1:1 onto
 ``DeltaTable.merge(updates, keys).whenMatchedUpdateAll()
-.whenNotMatchedInsertAll()`` — so swapping in a real ACID table format
-changes only the body of these two functions. What the emulation does
-and does not guarantee:
+.whenNotMatchedInsertAll()`` — so swapping in a real table format
+changes only the bodies.
+
+Which path to use: :mod:`lakeflow.sinks.txtable` commits immutable
+files under a manifest — snapshot-isolated readers with no rename
+window, atomic multi-file appends, optimistic concurrency, time
+travel. Prefer it for tables that lakeflow alone reads. Use this
+module (and ``sinks/layout`` compaction) for plain-parquet directories
+that other engines must read directly by path. What a rewrite here
+guarantees:
 
 - idempotent under replay: re-applying a batch is a no-op (tested).
-- failure-atomic per write: the merged result is written to a
-  merge-private staging directory FIRST (the live target is untouched
-  — and fully readable — during the long write), then swapped in with
-  directory renames after the version fence is claimed. A failure at
-  any point before the swap leaves the old table intact; a failure
-  mid-swap rolls the old table back. During the swap itself the target
-  path is briefly absent (two renames are not one atomic op) — readers
-  see old data, new data, or a missing directory, never a mix. (Earlier
-  rounds instead pinned the merged result on executor storage via
-  ``localCheckpoint`` before overwriting the target in place — not
-  fault-tolerant and O(table) executor memory; that path survives only
-  in the object-store branch below, where rename is not atomic and a
-  real table format is the answer anyway.)
+- failure-atomic per write: the result is staged in a merge-private
+  ``._merge_tmp_<uuid>`` sibling FIRST (the live target untouched and
+  readable during the long write), then swapped in with two directory
+  renames after the version fence is claimed. A failure before the
+  swap leaves the old table intact; a failure mid-swap rolls it back;
+  a process death mid-swap is recovered by the next read or rewrite
+  (``._merge_old`` is restored). Between the two renames the path is
+  briefly absent — readers see old data, new data, or a missing
+  directory, never a mix.
 - multi-writer conflicts are DETECTED (not prevented) on local
-  filesystems: each merge claims a monotonically-increasing version
-  marker via POSIX exclusive-create (an atomic CAS) before
-  overwriting, so of two interleaved mergers exactly one commits and
-  the other raises ``ConcurrentMergeError`` and can retry from a
-  fresh read — a lost update becomes a loud failure. On object-store
-  paths (``s3a://`` etc.) exclusive-create is not atomic, so fencing
-  is skipped and single-writer-per-target remains the operating
-  assumption; Delta/Iceberg lifts it properly.
+  filesystems: each rewrite claims a monotonically-increasing version
+  marker via POSIX exclusive-create (an atomic CAS) before the swap,
+  so of two interleaved writers exactly one commits and the other
+  raises ``ConcurrentMergeError`` and can retry from a fresh read — a
+  lost update becomes a loud failure. On object-store paths
+  (``s3a://`` etc.) exclusive-create and rename are not atomic, so the
+  rewrite is an in-place overwrite with no fence and no commit tokens
+  (a tokened merge there raises ``ValueError``); single-writer-per-
+  target is the operating assumption.
 - a failed READ of an existing target aborts the merge instead of
   silently overwriting history (``read_target_if_exists``).
-
-Round-5 addendum: :mod:`lakeflow.sinks.txtable` now implements the
-table-format CORE itself (immutable data files + atomically-published
-manifest versions): snapshot-isolated readers with NO rename window,
-atomic multi-file appends, optimistic-concurrency upsert/delete, time
-travel, vacuum. Prefer ``txtable.merge_upsert_table`` where those
-guarantees matter; the staged-swap helpers below remain for
-plain-parquet targets that other engines must read directly by path.
 
 - ``merge_upsert``: latest-wins row replacement per key (same semantics
   as the streaming foreachBatch sink, batch-callable).
@@ -63,8 +53,13 @@ plain-parquet targets that other engines must read directly by path.
 
 from __future__ import annotations
 
+import glob
 import os
-from collections.abc import Sequence
+import re
+import shutil
+import uuid
+from collections.abc import Callable, Sequence
+from functools import partial
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -139,13 +134,62 @@ def _recover_merge_swap(target_path: str) -> None:
     table only in the deterministic ``._merge_old`` sibling — restore
     it before anyone reads (a reader seeing the path missing would
     otherwise treat the table as empty and the next merge would
-    silently rebuild it from just the incoming batch)."""
+    silently rebuild it from just the incoming batch). The crashed
+    writer's ``._merge_tmp_*`` staging dirs go with it: that writer had
+    claimed the fence, so any other staged rewrite would lose its claim
+    anyway."""
     if not _fencing_enabled(target_path):
         return
     base = _local_path(target_path).rstrip("/")
     old = base + "._merge_old"
     if not os.path.isdir(base) and os.path.isdir(old):
         os.rename(old, base)
+        for tmp in glob.glob(glob.escape(base) + "._merge_tmp_*"):
+            shutil.rmtree(tmp, ignore_errors=True)
+
+
+def _swap(
+    df: DataFrame,
+    target_path: str,
+    commit_token: str | None = None,
+    claim: Callable[[], None] | None = None,
+) -> None:
+    """Stage ``df`` in a private ``._merge_tmp_<uuid>`` sibling, run
+    ``claim`` (the version fence; it raises to abort), then swap the
+    staged dir in with two renames; any failure rolls the live table
+    back and drops the staging dir — never the target. ``df`` may read
+    ``target_path``: the live dir is untouched until the first rename.
+
+    Commit tokens ride INSIDE the staged dir (``_``-prefixed files are
+    invisible to Spark's parquet reader), so token visibility is atomic
+    with the data. Every earlier token is carried forward, so replay
+    protection survives later rewrites (``vacuum_versions`` prunes)."""
+    base = _local_path(target_path).rstrip("/")
+    _recover_merge_swap(target_path)
+    # staging is unique per attempt (racing writers may both stage; the
+    # fence picks the winner); the backup name is fixed, which is what
+    # lets _recover_merge_swap find a crashed mid-swap state
+    tmp = f"{base}._merge_tmp_{uuid.uuid4().hex[:12]}"
+    old = f"{base}._merge_old"
+    try:
+        df.write.parquet(tmp)
+        tokens = {f"_token_{commit_token}"} if commit_token is not None else set()
+        if os.path.isdir(base):
+            tokens.update(f for f in os.listdir(base) if f.startswith("_token_"))
+        for f in tokens:
+            open(os.path.join(tmp, f), "w").close()
+        if claim is not None:
+            claim()
+        shutil.rmtree(old, ignore_errors=True)  # a completed swap's backup
+        if os.path.isdir(base):
+            os.rename(base, old)
+        os.rename(tmp, base)
+    except BaseException:
+        if not os.path.isdir(base) and os.path.isdir(old):
+            os.rename(old, base)
+        shutil.rmtree(tmp, ignore_errors=True)
+        raise
+    shutil.rmtree(old, ignore_errors=True)
 
 
 def _fenced_overwrite(
@@ -154,78 +198,43 @@ def _fenced_overwrite(
     expected_version: int,
     commit_token: str | None = None,
 ) -> None:
-    """Commit ``df`` over ``target_path`` iff no other merge committed
-    since ``expected_version`` was observed.
-
-    Local/HDFS path: ``df`` (which READS target_path) is written to a
-    merge-private staging dir while the live target stays untouched and
-    readable; the fence is claimed only after the staged write
-    succeeds, then the swap is two directory renames. Compute/write
-    failures therefore never damage the target, and nothing is pinned
-    on executor storage. Caveats mirroring :func:`..layout.compact_parquet`:
-    between the two renames the target path briefly does not exist, so a
-    reader opening it in that window sees a missing directory (never
-    partial data); and a failure after the fence is claimed leaves the
-    version marker advanced with the old data in place — later mergers
-    still see a consistent (if stale-numbered) table, but the marker no
-    longer implies a successful commit for that version. Object-store
-    path (no atomic rename, fencing already disabled): materialize via
-    localCheckpoint and overwrite in place — the documented emulation
-    limit; use a transactional table format there.
+    """Commit ``df`` over ``target_path`` iff no other rewrite committed
+    since ``expected_version`` was observed: :func:`_swap` with the
+    version claim between the staged write and the renames. A failure
+    after the claim leaves the marker advanced with the old data in
+    place — later writers still see a consistent (if stale-numbered)
+    table. Object-store path (no atomic rename, fencing disabled):
+    materialize via localCheckpoint and overwrite in place — the
+    documented emulation limit; use a transactional table format there.
 
     Replay rule: when ``commit_token`` has already committed on
     ``target_path`` this returns without writing, so a replayed
     non-idempotent fold is a no-op (README, "Streaming replay")."""
-    import shutil
-    import uuid
-
     if commit_token is not None and has_commit_token(target_path, commit_token):
         return
     if not _fencing_enabled(target_path):
         df.localCheckpoint(eager=True).write.mode("overwrite").parquet(target_path)
         return
-    # os-level swap needs a plain path even when the caller passed
-    # file://…; Spark resolves the plain path to the same location
-    base = _local_path(target_path).rstrip("/")
-    _recover_merge_swap(target_path)
-    # staging dir is unique per attempt: two racing mergers must never
-    # share one (both may stage fully; the fence then picks the winner).
-    # The BACKUP dir is deterministic — only the fence winner reaches
-    # the swap, and a fixed name is what lets a crashed mid-swap state
-    # be recovered by the next merge (_recover_merge_swap) instead of
-    # rotting under an unguessable uuid.
-    tmp = f"{base}._merge_tmp_{uuid.uuid4().hex[:12]}"
-    old = f"{base}._merge_old"
-    try:
-        df.write.parquet(tmp)
-        # commit tokens ride INSIDE the staged dir ('_'-prefixed files
-        # are invisible to Spark's parquet reader), so token visibility
-        # is ATOMIC with the data swap — callers use them to make
-        # non-idempotent merges replay-safe. Earlier commits' tokens
-        # carry forward (they are empty marker files; vacuum_versions
-        # prunes old ones) so replay protection survives later merges.
-        if os.path.isdir(base):
-            for f in os.listdir(base):
-                if f.startswith("_token_"):
-                    with open(os.path.join(tmp, f), "w"):
-                        pass
-        if commit_token is not None:
-            with open(os.path.join(tmp, f"_token_{commit_token}"), "w"):
-                pass
-        _claim_version(base, expected_version)
-        shutil.rmtree(old, ignore_errors=True)  # stale backup from a
-        # PREVIOUS completed swap (recovery above restored any live one)
-        if os.path.isdir(base):
-            os.rename(base, old)
-        os.rename(tmp, base)
-    except BaseException:
-        # roll the live table back if the first rename happened but the
-        # second didn't, then drop the staging dir — never the target
-        if not os.path.isdir(base) and os.path.isdir(old):
-            os.rename(old, base)
-        shutil.rmtree(tmp, ignore_errors=True)
-        raise
-    shutil.rmtree(old, ignore_errors=True)
+    claim = partial(_claim_version, target_path, expected_version)
+    _swap(df, target_path, commit_token, claim)
+
+
+def _snapshot(
+    spark: SparkSession, target_path: str, commit_token: str | None = None
+) -> tuple[int, DataFrame | None]:
+    """(fence version, existing target or None) for a rewrite that will
+    commit through :func:`_fenced_overwrite`. The version is read first,
+    so a commit landing after the read fails the claim. A token needs
+    the fenced swap to commit atomically with the data: on an unfenced
+    (object-store) target it raises ``ValueError`` before any read."""
+    fenced = _fencing_enabled(target_path)
+    if commit_token is not None and not fenced:
+        raise ValueError(
+            f"{target_path}: commit tokens need a local-filesystem target; "
+            "an unfenced overwrite cannot commit them with the data"
+        )
+    v0 = _current_version(target_path) if fenced else 0
+    return v0, read_target_if_exists(spark, target_path)
 
 
 def has_commit_token(target_path: str, commit_token: str) -> bool:
@@ -239,8 +248,7 @@ def has_commit_token(target_path: str, commit_token: str) -> bool:
 
 
 def batch_token(batch_id: int) -> str:
-    """The commit token of streaming micro-batch ``batch_id`` — the form
-    ``vacuum_versions`` parses when it prunes old tokens."""
+    """The commit token of streaming micro-batch ``batch_id``."""
     return f"b{batch_id}"
 
 
@@ -271,14 +279,10 @@ def merge_upsert(
     order_col: str,
     commit_token: str | None = None,
 ) -> None:
-    v0 = _current_version(target_path) if _fencing_enabled(target_path) else 0
-    existing = read_target_if_exists(spark, target_path)
+    v0, existing = _snapshot(spark, target_path, commit_token)
     if existing is not None:
-        merged = existing.unionByName(updates, allowMissingColumns=True)
-    else:
-        merged = updates
-    out = latest_wins(merged, list(keys), order_col)
-    # materialize BEFORE the fence check + truncation (failure atomicity)
+        updates = existing.unionByName(updates, allowMissingColumns=True)
+    out = latest_wins(updates, list(keys), order_col)
     _fenced_overwrite(out, target_path, v0, commit_token=commit_token)
 
 
@@ -295,9 +299,8 @@ def scd2_merge(
     values. History rows carry valid_from = change_ts, valid_to = next
     version's valid_from (null while current), is_current.
     """
-    v0 = _current_version(target_path) if _fencing_enabled(target_path) else 0
+    v0, existing = _snapshot(spark, target_path)
     versions = updates.withColumn("valid_from", F.col(change_ts))
-    existing = read_target_if_exists(spark, target_path)
     if existing is not None:
         versions = existing.drop("valid_to", "is_current").unionByName(
             versions, allowMissingColumns=True
@@ -331,7 +334,8 @@ def merge_additive(
     ``commit_token`` (e.g. ``batch_token(batch_id)``): the token commits
     ATOMICALLY with the data swap, and a merge whose token has already
     committed writes nothing, so a replayed delta is folded in once."""
-    _merge_fold(spark, target_path, delta, keys, sum_cols, F.sum, commit_token)
+    aggs = [F.sum(c).alias(c) for c in sum_cols]
+    merge_aggregate(spark, target_path, delta, keys, aggs, commit_token)
 
 
 def merge_min(
@@ -351,7 +355,8 @@ def merge_min(
     ``merge_additive`` this fold is IDEMPOTENT (min(a, a) == a), so a
     replayed batch is harmless by construction and no commit token is
     needed for exactly-once semantics."""
-    _merge_fold(spark, target_path, delta, keys, min_cols, F.min)
+    aggs = [F.min(c).alias(c) for c in min_cols]
+    merge_aggregate(spark, target_path, delta, keys, aggs)
 
 
 def merge_max(
@@ -366,28 +371,8 @@ def merge_max(
     high-watermark timestamps, max-seen sequence numbers). Same
     algebraic idempotence: replayed batches fold to no-ops without a
     commit token."""
-    _merge_fold(spark, target_path, delta, keys, max_cols, F.max)
-
-
-def _merge_fold(
-    spark: SparkSession,
-    target_path: str,
-    delta: DataFrame,
-    keys: Sequence[str],
-    cols: Sequence[str],
-    agg_fn,
-    commit_token: str | None = None,
-) -> None:
-    v0 = _current_version(target_path) if _fencing_enabled(target_path) else 0
-    existing = read_target_if_exists(spark, target_path)
-    if existing is not None:
-        merged = existing.unionByName(delta, allowMissingColumns=True)
-    else:
-        merged = delta
-    out = merged.groupBy(*keys).agg(
-        *[agg_fn(c).alias(c) for c in cols]
-    )
-    _fenced_overwrite(out, target_path, v0, commit_token=commit_token)
+    aggs = [F.max(c).alias(c) for c in max_cols]
+    merge_aggregate(spark, target_path, delta, keys, aggs)
 
 
 def merge_delete(
@@ -404,8 +389,7 @@ def merge_delete(
     typically tiny: it broadcasts into a LEFT ANTI join against the
     target scan, one pass, no shuffle of the target. A missing target
     is a no-op (nothing to forget)."""
-    v0 = _current_version(target_path) if _fencing_enabled(target_path) else 0
-    existing = read_target_if_exists(spark, target_path)
+    v0, existing = _snapshot(spark, target_path)
     if existing is None:
         return
     out = existing.join(
@@ -414,32 +398,36 @@ def merge_delete(
     _fenced_overwrite(out, target_path, v0)
 
 
+_TOKEN = re.compile(r"_token_(\D*)(\d+)")
+
+
 def vacuum_versions(target_path: str, keep_last: int = 10) -> int:
     """Retention for the merge fence's version markers and the
-    in-table streaming commit tokens: both grow one empty file per
-    commit forever. Keeps the ``keep_last`` highest version markers —
-    enough history to detect concurrent writers — and the ``keep_last``
-    newest commit tokens. Returns files removed."""
-    removed = 0
+    in-table commit tokens: both grow one empty file per commit
+    forever. Keeps the ``keep_last`` highest version markers — enough
+    history to detect concurrent writers — and, per token family
+    ``_token_<prefix><N>`` (batch tokens ``b<N>``, CDF cursors
+    ``cdfv<N>``, ...), the ``keep_last`` highest N. Returns files
+    removed."""
+    victims = []
     d = _versions_dir(target_path)
     if os.path.isdir(d):
         ns = sorted(
             int(f[1:]) for f in os.listdir(d) if f[:1] == "v" and f[1:].isdigit()
         )
-        for n in ns[:-keep_last] if keep_last else ns:
-            os.remove(os.path.join(d, f"v{n}"))
-            removed += 1
+        victims += [os.path.join(d, f"v{n}") for n in ns[: len(ns) - keep_last]]
     base = _local_path(target_path).rstrip("/")
     if os.path.isdir(base):
-        toks = sorted(
-            int(f[8:])
-            for f in os.listdir(base)
-            if f.startswith("_token_b") and f[8:].isdigit()
-        )
-        for n in toks[:-keep_last] if keep_last else toks:
-            os.remove(os.path.join(base, f"_token_{batch_token(n)}"))
-            removed += 1
-    return removed
+        families: dict[str, list[tuple[int, str]]] = {}
+        for f in os.listdir(base):
+            if m := _TOKEN.fullmatch(f):
+                families.setdefault(m[1], []).append((int(m[2]), f))
+        for toks in families.values():
+            toks.sort()
+            victims += [os.path.join(base, f) for _, f in toks[: len(toks) - keep_last]]
+    for f in victims:
+        os.remove(f)
+    return len(victims)
 
 
 def merge_aggregate(
@@ -460,13 +448,10 @@ def merge_aggregate(
     Each expression must be aliased to its output column name. Same
     fencing, staged-swap atomicity, and commit-token replay contract as
     merge_additive; like it, NOT idempotent without ``commit_token``."""
-    v0 = _current_version(target_path) if _fencing_enabled(target_path) else 0
-    existing = read_target_if_exists(spark, target_path)
+    v0, existing = _snapshot(spark, target_path, commit_token)
     if existing is not None:
-        merged = existing.unionByName(delta, allowMissingColumns=True)
-    else:
-        merged = delta
-    out = merged.groupBy(*keys).agg(*aggs)
+        delta = existing.unionByName(delta, allowMissingColumns=True)
+    out = delta.groupBy(*keys).agg(*aggs)
     _fenced_overwrite(out, target_path, v0, commit_token=commit_token)
 
 

@@ -117,34 +117,6 @@ def dataset_bytes(spark: SparkSession, path: str) -> int:
     return fs.getContentSummary(p).getLength()
 
 
-def compact_parquet(
-    spark: SparkSession,
-    path: str,
-    target_file_bytes: int = 128 * 1024 * 1024,
-) -> int:
-    """Small-files compaction: rewrite a parquet dataset into
-    ceil(total_bytes / target_file_bytes) files and return that count.
-
-    Streaming sinks and incremental merges accumulate one-file-per-
-    micro-batch datasets; at lake scale the scan cost becomes dominated
-    by per-file open/footer overhead and tiny row groups defeat
-    columnar encoding. Round-robin ``repartition(n)`` gives uniformly
-    sized output files; the merged result is materialized
-    (localCheckpoint) before the overwrite so the read-then-rewrite of
-    the same path is legal and the write goes through Spark's commit
-    protocol. On object stores, prefer a table format (Delta/Iceberg
-    OPTIMIZE) for concurrent-reader safety — same caveat as
-    ``sinks/merge.py``."""
-    import math
-
-    df = spark.read.parquet(path)
-    n = max(1, math.ceil(dataset_bytes(spark, path) / target_file_bytes))
-    df.repartition(n).localCheckpoint(eager=True).write.mode(
-        "overwrite"
-    ).parquet(path)
-    return n
-
-
 def analyze_table(
     spark: SparkSession,
     name: str,

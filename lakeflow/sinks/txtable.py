@@ -8,9 +8,8 @@ directory swap — atomic for writers, but with a documented reader gap
 version history. Real deployments use Delta/Iceberg/Hudi, whose core
 mechanism is small and engine-agnostic: **data files are immutable;
 the table IS a manifest file listing its data files; a commit is one
-atomic publish of manifest v+1**. delta-spark is not installable in
-this environment (no network egress — see sinks/merge.py's attempt
-log), so this module implements that core directly:
+atomic publish of manifest v+1**. This module implements that core
+directly on parquet files:
 
 - ``data/`` holds immutable parquet files, each written exactly once
   under a unique commit prefix and NEVER mutated or renamed.
@@ -38,12 +37,16 @@ nothing until vacuumed.
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from lakeflow.sinks.layout import _lay_out, _n_files
+from lakeflow.sinks.zonemap import _footer_min_max, _may_overlap, _read_survivors
 
 
 class ConcurrentCommitError(RuntimeError):
@@ -87,6 +90,15 @@ def _read_manifest(path: str, version: int) -> dict:
         return json.load(fh)
 
 
+def _manifest_at(path: str, version: int | None = None) -> tuple[int, dict]:
+    """(version, manifest) of ``version``, or of the latest commit;
+    raises ``FileNotFoundError`` when no such version exists."""
+    v = version if version is not None else current_version(path)
+    if v == 0:
+        raise FileNotFoundError(f"no committed version at {path!r}")
+    return v, _read_manifest(path, v)
+
+
 def _write_data_files(df: DataFrame, path: str) -> list[str]:
     """Write ``df`` as immutable parquet files under a unique commit
     prefix and return their table-relative paths."""
@@ -109,30 +121,13 @@ def _collect_stats(
     never touch footers). Values that don't serialize to JSON
     (timestamps, binary) record as None = never pruned; conservative
     by construction."""
-    import pyarrow.parquet as pq
-
     out: dict[str, dict] = {}
     for rel in rel_files:
-        md = pq.ParquetFile(os.path.join(path, rel)).metadata
-        idx = {md.schema.column(i).name: i for i in range(md.num_columns)}
-        entry: dict = {"n_rows": md.num_rows}
-        for c in cols:
-            lo = hi = None
-            if c in idx:
-                for rg in range(md.num_row_groups):
-                    st = md.row_group(rg).column(idx[c]).statistics
-                    if st is None or not st.has_min_max:
-                        lo = hi = None
-                        break
-                    lo = st.min if lo is None else min(lo, st.min)
-                    hi = st.max if hi is None else max(hi, st.max)
-            if not all(
-                v is None or isinstance(v, (int, float, str, bool))
-                for v in (lo, hi)
-            ):
-                lo = hi = None
-            entry[c] = None if lo is None or hi is None else [lo, hi]
-        out[rel] = entry
+        n_rows, mm = _footer_min_max(os.path.join(path, rel), cols)
+        out[rel] = {"n_rows": n_rows}
+        for c, (lo, hi) in mm.items():
+            ok = all(isinstance(v, (int, float, str, bool)) for v in (lo, hi))
+            out[rel][c] = [lo, hi] if ok else None
     return out
 
 
@@ -163,12 +158,37 @@ def _publish(
     return version
 
 
-def _cleanup(path: str, files: list[str]) -> None:
-    for rel in files:
-        try:
-            os.remove(os.path.join(path, rel))
-        except OSError:
-            pass
+def _commit(
+    path: str,
+    base_version: int,
+    df: DataFrame,
+    op: str,
+    stats_cols: list[str] | None,
+    prior: dict | None = None,
+) -> int:
+    """Write ``df`` as new immutable files, collect their stats, and
+    publish them — after ``prior``'s files and stats, for an append —
+    as version ``base_version + 1``. A lost race removes the new files
+    and re-raises :class:`ConcurrentCommitError`."""
+    files = _write_data_files(df, path)
+    stats = None
+    if stats_cols:
+        stats = dict(prior.get("stats", {})) if prior else {}
+        stats.update(_collect_stats(path, files, stats_cols))
+    kept = prior["files"] if prior else []
+    try:
+        return _publish(path, base_version, kept + files, op, stats_cols, stats)
+    except ConcurrentCommitError:
+        for rel in files:
+            with contextlib.suppress(OSError):
+                os.remove(os.path.join(path, rel))
+        raise
+
+
+def _files_bytes(path: str, files: list[str]) -> int:
+    """On-disk bytes of a manifest's files (missing ones count 0)."""
+    paths = [os.path.join(path, rel) for rel in files]
+    return sum(os.path.getsize(f) for f in paths if os.path.exists(f))
 
 
 def write_table(
@@ -185,14 +205,7 @@ def write_table(
     (data-skipping stats — see :func:`scan_where`). Sticky: later
     appends/upserts/optimizes maintain them without re-passing."""
     os.makedirs(path, exist_ok=True)
-    base = current_version(path)
-    files = _write_data_files(df, path)
-    stats = _collect_stats(path, files, stats_cols) if stats_cols else None
-    try:
-        return _publish(path, base, files, "overwrite", stats_cols, stats)
-    except ConcurrentCommitError:
-        _cleanup(path, files)
-        raise
+    return _commit(path, current_version(path), df, "overwrite", stats_cols)
 
 
 def append_table(
@@ -216,8 +229,7 @@ def append_table(
     base = current_version(path)
     if base == 0:
         return write_table(spark, df, path)
-    prior_m = _read_manifest(path, base)
-    prior = prior_m["files"]
+    prior = _read_manifest(path, base)
     if not allow_schema_drift:
         snap_cols = set(read_table(spark, path, base).columns)
         new_cols = set(df.columns)
@@ -228,17 +240,7 @@ def append_table(
                 f"allow_schema_drift=True to widen (read back with "
                 f"merge_schema=True)"
             )
-    scols = prior_m.get("stats_cols")
-    files = _write_data_files(df, path)
-    stats = None
-    if scols:
-        stats = dict(prior_m.get("stats", {}))
-        stats.update(_collect_stats(path, files, scols))
-    try:
-        return _publish(path, base, prior + files, "append", scols, stats)
-    except ConcurrentCommitError:
-        _cleanup(path, files)
-        raise
+    return _commit(path, base, df, "append", prior.get("stats_cols"), prior)
 
 
 def read_table(
@@ -254,10 +256,7 @@ def read_table(
     listed files (columns absent from older files read as null) — the
     read half of schema evolution; appends that WIDEN the schema
     (``append_table(..., allow_schema_drift=True)``) need it."""
-    v = version if version is not None else current_version(path)
-    if v == 0:
-        raise FileNotFoundError(f"no committed version at {path!r}")
-    manifest = _read_manifest(path, v)
+    v, manifest = _manifest_at(path, version)
     files = [os.path.join(path, rel) for rel in manifest["files"]]
     if not files:
         raise FileNotFoundError(f"version {v} of {path!r} lists no files")
@@ -300,14 +299,8 @@ def merge_upsert_table(
         c = existing[k].eqNullSafe(batch_keys[f"__bk_{k}"])
         cond = c if cond is None else cond & c
     merged = existing.join(batch_keys, cond, "left_anti").unionByName(batch)
-    files = _write_data_files(merged, path)
     scols = _read_manifest(path, base).get("stats_cols")
-    stats = _collect_stats(path, files, scols) if scols else None
-    try:
-        return _publish(path, base, files, "merge_upsert", scols, stats)
-    except ConcurrentCommitError:
-        _cleanup(path, files)
-        raise
+    return _commit(path, base, merged, "merge_upsert", scols)
 
 
 def delete_where(
@@ -315,17 +308,9 @@ def delete_where(
 ) -> int:
     """Transactional DELETE: rewrite the snapshot minus matching rows,
     publish atomically. ``predicate`` is a boolean Column."""
-    base = current_version(path)
-    existing = read_table(spark, path, base)
-    remaining = existing.where(~predicate | predicate.isNull())
-    files = _write_data_files(remaining, path)
-    scols = _read_manifest(path, base).get("stats_cols")
-    stats = _collect_stats(path, files, scols) if scols else None
-    try:
-        return _publish(path, base, files, "delete", scols, stats)
-    except ConcurrentCommitError:
-        _cleanup(path, files)
-        raise
+    base, manifest = _manifest_at(path)
+    remaining = read_table(spark, path, base).where(~predicate | predicate.isNull())
+    return _commit(path, base, remaining, "delete", manifest.get("stats_cols"))
 
 
 def vacuum_table(
@@ -407,38 +392,10 @@ def optimize_table(
     O(#files), independent of data size. At 100 TB run it per
     partition of a partitioned table so the blast radius and the
     rewrite working set stay bounded."""
-    base = current_version(path)
-    if base == 0:
-        raise FileNotFoundError(f"no committed version at {path!r}")
-    manifest = _read_manifest(path, base)
-    total = 0
-    for rel in manifest["files"]:
-        try:
-            total += os.path.getsize(os.path.join(path, rel))
-        except OSError:
-            pass
-    n_files = int(max(1, (total + target_file_bytes - 1) // target_file_bytes))
-    snap = read_table(spark, path, base)
-    if zorder is not None:
-        from lakeflow.sinks.layout import morton_key
-
-        col_x, col_y = zorder
-        out = (
-            snap.withColumn("__z", morton_key(col_x, col_y))
-            .repartitionByRange(n_files, "__z")
-            .sortWithinPartitions("__z")
-            .drop("__z")
-        )
-    else:
-        out = snap.coalesce(n_files)
-    files = _write_data_files(out, path)
-    scols = manifest.get("stats_cols")
-    stats = _collect_stats(path, files, scols) if scols else None
-    try:
-        return _publish(path, base, files, "optimize", scols, stats)
-    except ConcurrentCommitError:
-        _cleanup(path, files)
-        raise
+    base, manifest = _manifest_at(path)
+    n = _n_files(_files_bytes(path, manifest["files"]), target_file_bytes)
+    out = _lay_out(read_table(spark, path, base), n, zorder)
+    return _commit(path, base, out, "optimize", manifest.get("stats_cols"))
 
 
 def scan_where(
@@ -466,30 +423,17 @@ def scan_where(
     ``optimize_table(zorder=...)``: clustering is what makes file
     ranges disjoint enough to prune; stats are recomputed on the
     rewritten files in the same commit."""
-    v = version if version is not None else current_version(path)
-    if v == 0:
-        raise FileNotFoundError(f"no committed version at {path!r}")
-    manifest = _read_manifest(path, v)
-    stats = manifest.get("stats", {})
+    v, manifest = _manifest_at(path, version)
     tracked = col in (manifest.get("stats_cols") or [])
-    keep: list[str] = []
-    for rel in manifest["files"]:
-        z = stats.get(rel, {}).get(col) if tracked else None
-        if z is None:
-            keep.append(rel)  # no stats -> conservative keep
-            continue
-        zmin, zmax = z
-        if (lo is None or zmax >= lo) and (hi is None or zmin <= hi):
-            keep.append(rel)
-    pred = F.lit(True)
-    if lo is not None:
-        pred = pred & (F.col(col) >= F.lit(lo))
-    if hi is not None:
-        pred = pred & (F.col(col) <= F.lit(hi))
-    if not keep:
-        return read_table(spark, path, v).where(F.lit(False))
-    files = [os.path.join(path, rel) for rel in keep]
-    return spark.read.parquet(*files).where(pred)
+    stats = manifest.get("stats", {}) if tracked else {}
+    files = [
+        os.path.join(path, rel)
+        for rel in manifest["files"]
+        if _may_overlap(*(stats.get(rel, {}).get(col) or (None, None)), lo, hi)
+    ]
+    return _read_survivors(
+        spark, files, col, lo, hi, lambda: read_table(spark, path, v)
+    )
 
 
 def table_changes(
@@ -541,13 +485,7 @@ def auto_optimize(
     files = manifest["files"]
     if len(files) <= max_files:
         return None
-    total = 0
-    for rel in files:
-        try:
-            total += os.path.getsize(os.path.join(path, rel))
-        except OSError:
-            pass
-    if total / max(1, len(files)) >= target_file_bytes / 2:
+    if _files_bytes(path, files) / max(1, len(files)) >= target_file_bytes / 2:
         return None
     return optimize_table(spark, path, target_file_bytes, zorder)
 

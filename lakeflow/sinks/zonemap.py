@@ -32,6 +32,7 @@ full scan's.
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -48,6 +49,30 @@ def _parquet_files(path: str) -> list[str]:
     return sorted(out)
 
 
+def _footer_min_max(file: str, cols: list[str]) -> tuple[int, dict]:
+    """(n_rows, {col: (min, max)}) of one parquet file from its footer
+    alone, folding every row group's stats. A column that is absent, or
+    lacks min/max in any row group, maps to (None, None) — such a file
+    can never be pruned on it."""
+    import pyarrow.parquet as pq
+
+    md = pq.ParquetFile(file).metadata
+    idx = {md.schema.column(i).name: i for i in range(md.num_columns)}
+    out: dict = {}
+    for c in cols:
+        lo = hi = None
+        if c in idx:
+            for rg in range(md.num_row_groups):
+                st = md.row_group(rg).column(idx[c]).statistics
+                if st is None or not st.has_min_max:
+                    lo = hi = None
+                    break
+                lo = st.min if lo is None else min(lo, st.min)
+                hi = st.max if hi is None else max(hi, st.max)
+        out[c] = (lo, hi)
+    return md.num_rows, out
+
+
 def zonemap_from_footers(path: str, cols: list[str]) -> list[dict]:
     """Per-file min/max for ``cols`` from parquet footers only.
 
@@ -56,26 +81,23 @@ def zonemap_from_footers(path: str, cols: list[str]) -> list[dict]:
     column (such files are never pruned). Footer reads are pure
     metadata I/O — a few KB per file regardless of file size.
     """
-    import pyarrow.parquet as pq
-
     zones = []
     for f in _parquet_files(path):
-        md = pq.ParquetFile(f).metadata
-        idx = {md.schema.column(i).name: i for i in range(md.num_columns)}
-        zone: dict = {"file": f, "n_rows": md.num_rows}
-        for c in cols:
-            lo = hi = None
-            if c in idx:
-                for rg in range(md.num_row_groups):
-                    st = md.row_group(rg).column(idx[c]).statistics
-                    if st is None or not st.has_min_max:
-                        lo = hi = None
-                        break
-                    lo = st.min if lo is None else min(lo, st.min)
-                    hi = st.max if hi is None else max(hi, st.max)
+        n_rows, mm = _footer_min_max(f, cols)
+        zone: dict = {"file": f, "n_rows": n_rows}
+        for c, (lo, hi) in mm.items():
             zone[f"{c}_min"], zone[f"{c}_max"] = lo, hi
         zones.append(zone)
     return zones
+
+
+def _may_overlap(zmin, zmax, lo=None, hi=None) -> bool:
+    """Whether a file whose ``col`` zone is [zmin, zmax] may hold a row
+    in [lo, hi] (either bound None = unbounded). Conservative: a zone
+    with a missing end always may."""
+    if zmin is None or zmax is None:
+        return True
+    return (lo is None or zmax >= lo) and (hi is None or zmin <= hi)
 
 
 def prune_files(
@@ -84,14 +106,33 @@ def prune_files(
     """Files whose [min, max] zone for ``col`` may intersect
     [lo, hi] (either bound may be None = unbounded). Conservative:
     missing stats keep the file."""
-    keep = []
-    for z in zones:
-        zmin, zmax = z.get(f"{col}_min"), z.get(f"{col}_max")
-        if zmin is None or zmax is None:
-            keep.append(z["file"])
-        elif (lo is None or zmax >= lo) and (hi is None or zmin <= hi):
-            keep.append(z["file"])
-    return keep
+    return [
+        z["file"]
+        for z in zones
+        if _may_overlap(z.get(f"{col}_min"), z.get(f"{col}_max"), lo, hi)
+    ]
+
+
+def _read_survivors(
+    spark: SparkSession,
+    files: list[str],
+    col: str,
+    lo,
+    hi,
+    whole: Callable[[], DataFrame],
+) -> DataFrame:
+    """Scan the surviving ``files`` with the residual predicate
+    ``lo <= col <= hi`` re-applied, so the result equals the full
+    scan's. No survivors reads ``whole()`` under a false filter: an
+    empty DataFrame with the table's schema."""
+    if not files:
+        return whole().where(F.lit(False))
+    pred = F.lit(True)
+    if lo is not None:
+        pred = pred & (F.col(col) >= F.lit(lo))
+    if hi is not None:
+        pred = pred & (F.col(col) <= F.lit(hi))
+    return spark.read.parquet(*files).where(pred)
 
 
 def pruned_read(
@@ -103,17 +144,10 @@ def pruned_read(
     only surviving files are listed in the scan (check
     ``.inputFiles()``). An empty survivor list still returns an empty
     DataFrame with the table's schema."""
-    zones = zonemap_from_footers(path, [col])
-    files = prune_files(zones, col, lo, hi)
-    pred = F.lit(True)
-    if lo is not None:
-        pred = pred & (F.col(col) >= F.lit(lo))
-    if hi is not None:
-        pred = pred & (F.col(col) <= F.lit(hi))
-    if not files:
-        empty = spark.read.parquet(path).where(F.lit(False))
-        return empty
-    return spark.read.parquet(*files).where(pred)
+    files = prune_files(zonemap_from_footers(path, [col]), col, lo, hi)
+    return _read_survivors(
+        spark, files, col, lo, hi, lambda: spark.read.parquet(path)
+    )
 
 
 def build_zonemap_table(
@@ -135,20 +169,10 @@ def pruned_read_with_index(
     spark: SparkSession, path: str, index: DataFrame, col: str, lo=None, hi=None
 ) -> DataFrame:
     """Like :func:`pruned_read` but sourcing zones from a persisted
-    index table — the survivor list is one filter over #files rows of
+    index table — the survivor list is one pass over #files rows of
     metadata, no footer I/O."""
-    cond = F.col(f"{col}_min").isNull() | F.col(f"{col}_max").isNull()
-    rng = F.lit(True)
-    if lo is not None:
-        rng = rng & (F.col(f"{col}_max") >= F.lit(lo))
-    if hi is not None:
-        rng = rng & (F.col(f"{col}_min") <= F.lit(hi))
-    files = [r["file"] for r in index.where(cond | rng).select("file").collect()]
-    pred = F.lit(True)
-    if lo is not None:
-        pred = pred & (F.col(col) >= F.lit(lo))
-    if hi is not None:
-        pred = pred & (F.col(col) <= F.lit(hi))
-    if not files:
-        return spark.read.parquet(path).where(F.lit(False))
-    return spark.read.parquet(*files).where(pred)
+    rows = index.select("file", f"{col}_min", f"{col}_max").collect()
+    files = prune_files([r.asDict() for r in rows], col, lo, hi)
+    return _read_survivors(
+        spark, files, col, lo, hi, lambda: spark.read.parquet(path)
+    )

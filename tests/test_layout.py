@@ -65,12 +65,12 @@ def test_compact_parquet_reduces_files(spark, tmp_path):
     assert n == 1 and len(files) == 1
     assert spark.read.parquet(tgt).count() == before
     # staging dirs are cleaned up after the swap
-    assert not os.path.exists(tgt + "._compact_tmp")
-    assert not os.path.exists(tgt + "._compact_old")
+    assert not glob.glob(tgt + "._merge_tmp_*")
+    assert not os.path.exists(tgt + "._merge_old")
 
 
 def test_compact_parquet_live_path_untouched_until_swap(spark, tmp_path, monkeypatch):
-    # the rewrite must stage into ._compact_tmp and swap via rename: the
+    # the rewrite must stage into ._merge_tmp_* and swap via rename: the
     # live directory's files are byte-identical right up to the first
     # rename, so a concurrent reader mid-compaction sees a fully intact
     # table (the old localCheckpoint approach instead pinned the whole
@@ -90,13 +90,14 @@ def test_compact_parquet_live_path_untouched_until_swap(spark, tmp_path, monkeyp
     def checking_rename(src, dst):
         if not seen:
             # first rename = start of the swap: live dir must be intact
-            # and readable, staged output complete in ._compact_tmp
+            # and readable, staged output complete in ._merge_tmp_*
             now = {
                 f: os.path.getmtime(os.path.join(tgt, f)) for f in os.listdir(tgt)
             }
             seen["listing_at_swap"] = now
+            staged = glob.glob(tgt + "._merge_tmp_*")[0]
             seen["tmp_rows"] = sorted(
-                r["id"] for r in spark.read.parquet(tgt + "._compact_tmp").collect()
+                r["id"] for r in spark.read.parquet(staged).collect()
             )
             seen["live_rows"] = sorted(
                 r["id"] for r in spark.read.parquet(tgt).collect()
@@ -159,7 +160,7 @@ def test_optimize_table_compacts_and_clusters(spark, tmp_path):
     files = glob.glob(os.path.join(tgt, "*.parquet"))
     assert len(files) == n_files < 40
     assert sorted(map(tuple, spark.read.parquet(tgt).collect())) == before
-    assert not os.path.exists(tgt + "._compact_tmp")
+    assert not glob.glob(tgt + "._merge_tmp_*")
     # clustering took effect: each file covers a bounded x AND y range
     if n_files >= 4:
         per_file = (
@@ -176,18 +177,18 @@ def test_optimize_table_compacts_and_clusters(spark, tmp_path):
 
 def test_compact_parquet_crash_recovery_restores_old(spark, tmp_path):
     # a prior run died between os.rename(base, old) and os.rename(tmp,
-    # base): the table lives only in ._compact_old (plus a staged tmp).
+    # base): the table lives only in ._merge_old (plus a staged tmp).
     # A rerun must restore it, not rmtree the only remaining copy.
     tgt = str(tmp_path / "crashed")
     spark.range(1000).repartition(4).write.parquet(tgt)
     rows = sorted(r["id"] for r in spark.read.parquet(tgt).collect())
-    os.rename(tgt, tgt + "._compact_old")
-    os.makedirs(tgt + "._compact_tmp")  # leftover staging garbage
+    os.rename(tgt, tgt + "._merge_old")
+    os.makedirs(tgt + "._merge_tmp_crashed")  # leftover staging garbage
     n = compact_parquet(spark, tgt, target_file_bytes=1 << 30)
     assert n == 1
     assert sorted(r["id"] for r in spark.read.parquet(tgt).collect()) == rows
-    assert not os.path.exists(tgt + "._compact_old")
-    assert not os.path.exists(tgt + "._compact_tmp")
+    assert not os.path.exists(tgt + "._merge_old")
+    assert not glob.glob(tgt + "._merge_tmp_*")
 
 
 def test_compact_parquet_missing_table_aborts_loudly(spark, tmp_path):
@@ -195,3 +196,78 @@ def test_compact_parquet_missing_table_aborts_loudly(spark, tmp_path):
 
     with pytest.raises(FileNotFoundError):
         compact_parquet(spark, str(tmp_path / "never_existed"))
+
+
+def test_compaction_carries_replay_tokens(spark, tmp_path):
+    # compaction is a rewrite commit like a merge: the streaming replay
+    # tokens survive it, so a replayed batch 0 is still folded in once
+    from lakeflow.sinks.merge import merge_additive
+
+    tgt = str(tmp_path / "tokened")
+    delta = spark.createDataFrame([Row(k="a", n=1)])
+    merge_additive(spark, tgt, delta, ["k"], ["n"], commit_token="b0")
+    compact_parquet(spark, tgt, target_file_bytes=1 << 30)
+    merge_additive(spark, tgt, delta, ["k"], ["n"], commit_token="b0")
+    assert [tuple(r) for r in spark.read.parquet(tgt).collect()] == [("a", 1)]
+
+
+def test_compaction_killed_mid_swap_is_recovered_by_next_merge(
+    spark, tmp_path, monkeypatch
+):
+    # the process dies after the first swap rename: the table is parked
+    # in the backup sibling, and the next merge must restore it rather
+    # than rebuild the table from its own batch alone
+    import pytest
+
+    from lakeflow.sinks.merge import merge_additive
+
+    tgt = str(tmp_path / "killed")
+    merge_additive(spark, tgt, spark.createDataFrame([Row(k="a", n=5)]), ["k"], ["n"])
+    real_rename = os.rename
+    calls: list[str] = []
+
+    def dies_after_first_rename(src, dst):
+        calls.append(src)
+        if len(calls) > 1:
+            raise OSError("killed mid-swap")
+        return real_rename(src, dst)
+
+    monkeypatch.setattr(os, "rename", dies_after_first_rename)
+    with pytest.raises(OSError, match="killed mid-swap"):
+        compact_parquet(spark, tgt, target_file_bytes=1 << 30)
+    monkeypatch.setattr(os, "rename", real_rename)
+    assert not os.path.exists(tgt)
+
+    merge_additive(spark, tgt, spark.createDataFrame([Row(k="b", n=1)]), ["k"], ["n"])
+    got = sorted(tuple(r) for r in spark.read.parquet(tgt).collect())
+    assert got == [("a", 5), ("b", 1)]
+    assert not glob.glob(tgt + "._merge_tmp_*")
+
+
+def test_merge_committing_during_compaction_is_not_lost(
+    spark, tmp_path, monkeypatch
+):
+    # a merge commits after compaction has staged its rewrite: the
+    # compaction's claim on the version fence fails loudly, and the
+    # merge's row stays in the table
+    import pytest
+
+    import lakeflow.sinks.merge as M
+
+    tgt = str(tmp_path / "raced")
+    M.merge_additive(spark, tgt, spark.createDataFrame([Row(k="a", n=5)]), ["k"], ["n"])
+    real_claim = M._claim_version
+
+    def claim_after_concurrent_merge(target_path, expected_version):
+        monkeypatch.setattr(M, "_claim_version", real_claim)
+        M.merge_additive(
+            spark, tgt, spark.createDataFrame([Row(k="b", n=1)]), ["k"], ["n"]
+        )
+        real_claim(target_path, expected_version)
+
+    monkeypatch.setattr(M, "_claim_version", claim_after_concurrent_merge)
+    with pytest.raises(M.ConcurrentMergeError):
+        compact_parquet(spark, tgt, target_file_bytes=1 << 30)
+    got = sorted(tuple(r) for r in spark.read.parquet(tgt).collect())
+    assert got == [("a", 5), ("b", 1)]
+    assert not glob.glob(tgt + "._merge_tmp_*")

@@ -477,3 +477,38 @@ def test_scd2_snapshot_at(spark, tmp_path):
     assert before == {1: "new"}  # k=2 didn't exist yet
     now = {r["k"]: r["status"] for r in scd2_snapshot_at(hist, t(25)).collect()}
     assert now == {1: "closed", 2: "new"}
+
+
+def test_tokened_merge_on_object_store_fails_loudly(spark):
+    # an object-store overwrite cannot commit a token with its data, so
+    # a tokened fold there would double-count every replay: it must
+    # refuse before reading anything
+    import pytest as _pytest
+
+    from lakeflow.sinks.merge import merge_additive
+
+    delta = spark.createDataFrame([Row(k="a", n=1)])
+    with _pytest.raises(ValueError, match="commit tokens"):
+        merge_additive(
+            spark, "s3a://bucket/agg", delta, ["k"], ["n"], commit_token="b0"
+        )
+
+
+def test_vacuum_versions_prunes_every_token_family(spark, tmp_path):
+    import os
+
+    from pyspark.sql import functions as F
+
+    from lakeflow.sinks.merge import merge_aggregate, vacuum_versions
+    from lakeflow.streaming.cdf import cdf_cursor
+
+    tgt = str(tmp_path / "cdf_agg")
+    delta = spark.createDataFrame([Row(k="a", n=1)])
+    for v in range(1, 6):
+        merge_aggregate(
+            spark, tgt, delta, ["k"], [F.sum("n").alias("n")], commit_token=f"cdfv{v}"
+        )
+    vacuum_versions(tgt, keep_last=2)
+    tokens = sorted(f for f in os.listdir(tgt) if f.startswith("_token_"))
+    assert tokens == ["_token_cdfv4", "_token_cdfv5"]
+    assert cdf_cursor(tgt) == 5

@@ -174,3 +174,13 @@ def test_ingest_state_incremental(spark, froot, tmp_path):
     state.record(df, "mailgun")
     second = state.filter_new(df, "mailgun")
     assert second.count() == 0
+
+
+def test_ingest_state_unreadable_state_raises(spark, tmp_path):
+    # an unreadable state table must fail loudly: reading it as empty
+    # would ingest every file again
+    state_dir = tmp_path / "state"
+    state_dir.mkdir()
+    (state_dir / "part-0.parquet").write_bytes(b"this is not a parquet file")
+    with pytest.raises(Exception, match="(?i)parquet|footer|magic"):
+        IngestState(spark, str(state_dir)).processed_files("mailgun").collect()

@@ -142,7 +142,7 @@ def test_ngram_hot_shingle_guard(spark):
 
 
 def test_compact_parquet_reduces_file_count(spark, tmp_path):
-    from lakeflow.sinks.tables import compact_parquet
+    from lakeflow.sinks.layout import compact_parquet
 
     path = str(tmp_path / "frag")
     # simulate a fragmented streaming sink: 40 tiny files

@@ -951,7 +951,7 @@ def test_stream_apss_index_tokenless_batch_skips_monitor(spark, tmp_path):
     # ADVICE r10 (low): a whitespace-only micro-batch has zero
     # non-empty (doc, term) rows — snapshot_staleness would divide by
     # COUNT(*)=0 and trip chi2's empty-side assert, failing the whole
-    # batch under the default monitor_staleness=True. The monitor row
+    # batch, since the APSS monitor always runs. The monitor row
     # is skipped for such batches; the stream itself must complete.
     from lakeflow.operators.apss import apss_index_fit
     from lakeflow.streaming.corpus_intake import stream_apss_index
