@@ -60,6 +60,14 @@ class CacheScope:
         self.release()
 
 
+def release_checkpoint(df: DataFrame) -> None:
+    """Drop the blocks of ``df``, a ``localCheckpoint`` result, once
+    nothing reads it. ``DataFrame.unpersist`` does not reach them: they
+    belong to the checkpointed RDD under the plan, not to the cache
+    manager."""
+    df._jdf.queryExecution().logical().rdd().unpersist(False)
+
+
 def maybe_persist(df: DataFrame, cache: CacheScope | None) -> DataFrame:
     """Persist ``df`` under ``cache`` (or, with ``cache=None``, under
     the ambient :func:`scoped_cache` scope if one is active). Only when

@@ -31,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from lakeflow.catalog import read_parquet
 from lakeflow.functions.hashing import seeded_hash
 from lakeflow.functions.localrel import local_table
 from lakeflow.operators.similarity import (
@@ -650,11 +651,11 @@ def load_semantic_index(spark, index_path: str) -> tuple[list[list[int]], DataFr
     """(centroids, assignments): the centroid collect is bounded by k
     rows; assignments stays a lazy relation over the persisted
     parquet."""
-    cr = spark.read.parquet(f"{index_path}/centroids").collect()
+    cr = read_parquet(spark, f"{index_path}/centroids").collect()
     cents: list[list[int]] = [None] * len(cr)  # type: ignore[list-item]
     for r in cr:
         cents[r["i"]] = [int(x) for x in r["centroid"]]
-    return cents, spark.read.parquet(f"{index_path}/assignments")
+    return cents, read_parquet(spark, f"{index_path}/assignments")
 
 
 def kmeans_diagnostics(

@@ -43,6 +43,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from lakeflow.catalog import read_parquet
 from lakeflow.functions.localrel import local_table
 from lakeflow.operators.kmeans import _argbest_cell
 from lakeflow.operators.similarity import _with_vectors, dot_long
@@ -890,13 +891,13 @@ def pq_fit(
 def load_pq_index(spark, index_path: str) -> tuple[list[list[list[int]]], DataFrame]:
     """(codebooks, codes): the codebook collect is bounded (m*k_sub
     rows); codes stays a lazy relation over the persisted parquet."""
-    cb = spark.read.parquet(f"{index_path}/codebooks").collect()
+    cb = read_parquet(spark, f"{index_path}/codebooks").collect()
     m = 1 + max(r["s"] for r in cb)
     k_sub = 1 + max(r["j"] for r in cb)
     books: list[list[list[int]]] = [[None] * k_sub for _ in range(m)]
     for r in cb:
         books[r["s"]][r["j"]] = [int(x) for x in r["centroid"]]
-    return books, spark.read.parquet(f"{index_path}/codes")
+    return books, read_parquet(spark, f"{index_path}/codes")
 
 
 def pq_search(
@@ -926,17 +927,17 @@ def load_ivf_pq_index(
     """(codebooks, coarse, codes): the two folded-constant tables are
     collected (bounded: m*k_sub + n_cells rows); codes stays a lazy
     relation over the persisted parquet."""
-    cb = spark.read.parquet(f"{index_path}/codebooks").collect()
+    cb = read_parquet(spark, f"{index_path}/codebooks").collect()
     m = 1 + max(r["s"] for r in cb)
     k_sub = 1 + max(r["j"] for r in cb)
     books: list[list[list[int]]] = [[None] * k_sub for _ in range(m)]
     for r in cb:
         books[r["s"]][r["j"]] = [int(x) for x in r["centroid"]]
-    cr = spark.read.parquet(f"{index_path}/coarse").collect()
+    cr = read_parquet(spark, f"{index_path}/coarse").collect()
     coarse = [None] * len(cr)
     for r in cr:
         coarse[r["i"]] = [int(x) for x in r["centroid"]]
-    codes = spark.read.parquet(f"{index_path}/codes")
+    codes = read_parquet(spark, f"{index_path}/codes")
     return books, coarse, codes
 
 

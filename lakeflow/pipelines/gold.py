@@ -17,6 +17,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from lakeflow.caching import release_checkpoint
 from lakeflow.operators.dedup import latest_wins
 from lakeflow.sinks.tables import run_ddl_script
 
@@ -221,5 +222,9 @@ def refresh_applications_incremental(
     )
     # localCheckpoint breaks lineage: the overwrite targets the same
     # table the plan reads (same pattern as sinks/merge.py)
-    merged.localCheckpoint(eager=True).write.mode("overwrite").insertInto(tbl)
+    cp = merged.localCheckpoint(eager=True)
+    try:
+        cp.write.mode("overwrite").insertInto(tbl)
+    finally:
+        release_checkpoint(cp)
     return spark.table(tbl).count()

@@ -13,7 +13,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from lakeflow.catalog import load_table
+from lakeflow.catalog import load_table, read_parquet
 from lakeflow.functions.hashing import SQL_SEEDED_HASH
 from lakeflow.operators.dedup import exact_dedup
 from lakeflow.operators.multimodal import extract_metadata, with_binary_payload
@@ -2373,8 +2373,9 @@ def _ivf_assignments(spark, sf_dir: str, n_cells: int = 16):
         cents = _ivf_centroids(spark, sf_dir, n_cells)
         ivf_assign(emb, cents).write.mode("overwrite").parquet(tmp)
 
-    return spark.read.parquet(
-        prebuilt_state(f"/tmp/lakeflow_ivfasg_{key}_{n_cells}", _build)
+    return read_parquet(
+        spark,
+        prebuilt_state(f"/tmp/lakeflow_ivfasg_{key}_{n_cells}", _build),
     )
 
 
@@ -4594,8 +4595,9 @@ def _ilink_state(spark, sf_dir: str):
             )
             asgn.select("rid", "entity_id").write.mode("overwrite").parquet(tmp)
 
-    return spark.read.parquet(
-        prebuilt_state(f"/tmp/lakeflow_ilinkstate_{key}", _build)
+    return read_parquet(
+        spark,
+        prebuilt_state(f"/tmp/lakeflow_ilinkstate_{key}", _build),
     )
 
 

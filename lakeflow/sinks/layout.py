@@ -29,7 +29,12 @@ import os
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from lakeflow.sinks.merge import _fenced_overwrite, _snapshot, _swap
+from lakeflow.sinks.merge import (
+    _fenced_overwrite,
+    _recover_merge_swap,
+    _snapshot,
+    _swap,
+)
 from lakeflow.sinks.tables import dataset_bytes
 
 #: (shift, mask) stages spreading a 16-bit value across 32 bits
@@ -169,13 +174,24 @@ def compact_partitions(
     progress between partitions. Each partition takes the staged swap
     without the version fence: a ``p=K._versions`` sibling would sit in
     the table root and read as a partition value, and merges never
-    target partitioned tables. Returns {partition: new_file_count}."""
+    target partitioned tables. The swap stages and backs up a partition
+    under dot-prefixed siblings (``.p=K._merge_tmp_*``,
+    ``.p=K._merge_old``), which Spark's partition discovery skips, and
+    a partition parked in its backup by a crashed swap is restored
+    before the partitions are listed. Returns
+    {partition: new_file_count}."""
     base = path.rstrip("/")
+    for d in os.listdir(base):
+        if d.startswith(".") and d.endswith("._merge_old"):
+            _recover_merge_swap(os.path.join(base, d[1 : -len("._merge_old")]))
     if partitions is None:
         partitions = sorted(
             d
             for d in os.listdir(base)
-            if "=" in d and os.path.isdir(os.path.join(base, d))
+            if "=" in d
+            and not d.startswith(".")
+            and "._merge_" not in d
+            and os.path.isdir(os.path.join(base, d))
         )
     out = {}
     for p in partitions:

@@ -64,6 +64,7 @@ from functools import partial
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from lakeflow.caching import release_checkpoint
 from lakeflow.operators.dedup import latest_wins
 
 
@@ -128,6 +129,15 @@ def _claim_version(target_path: str, expected_version: int) -> None:
         ) from None
 
 
+def _sibling(base: str, suffix: str) -> str:
+    """The swap sibling ``base + suffix``. Next to a Hive partition dir
+    (``key=value``) it is dot-prefixed: Spark's file index skips
+    dot-prefixed names, while ``p=1._merge_old`` would read as partition
+    value ``1._merge_old``."""
+    head, name = os.path.split(base)
+    return os.path.join(head, ("." if "=" in name else "") + name + suffix)
+
+
 def _recover_merge_swap(target_path: str) -> None:
     """Crash recovery for the two-rename swap: a process death between
     ``os.rename(base, old)`` and ``os.rename(tmp, base)`` leaves the
@@ -141,10 +151,10 @@ def _recover_merge_swap(target_path: str) -> None:
     if not _fencing_enabled(target_path):
         return
     base = _local_path(target_path).rstrip("/")
-    old = base + "._merge_old"
+    old = _sibling(base, "._merge_old")
     if not os.path.isdir(base) and os.path.isdir(old):
         os.rename(old, base)
-        for tmp in glob.glob(glob.escape(base) + "._merge_tmp_*"):
+        for tmp in glob.glob(glob.escape(_sibling(base, "")) + "._merge_tmp_*"):
             shutil.rmtree(tmp, ignore_errors=True)
 
 
@@ -169,8 +179,8 @@ def _swap(
     # staging is unique per attempt (racing writers may both stage; the
     # fence picks the winner); the backup name is fixed, which is what
     # lets _recover_merge_swap find a crashed mid-swap state
-    tmp = f"{base}._merge_tmp_{uuid.uuid4().hex[:12]}"
-    old = f"{base}._merge_old"
+    tmp = _sibling(base, f"._merge_tmp_{uuid.uuid4().hex[:12]}")
+    old = _sibling(base, "._merge_old")
     try:
         df.write.parquet(tmp)
         tokens = {f"_token_{commit_token}"} if commit_token is not None else set()
@@ -204,8 +214,9 @@ def _fenced_overwrite(
     after the claim leaves the marker advanced with the old data in
     place — later writers still see a consistent (if stale-numbered)
     table. Object-store path (no atomic rename, fencing disabled):
-    materialize via localCheckpoint and overwrite in place — the
-    documented emulation limit; use a transactional table format there.
+    materialize via localCheckpoint, overwrite in place and release the
+    checkpoint — the documented emulation limit; use a transactional
+    table format there.
 
     Replay rule: when ``commit_token`` has already committed on
     ``target_path`` this returns without writing, so a replayed
@@ -213,7 +224,11 @@ def _fenced_overwrite(
     if commit_token is not None and has_commit_token(target_path, commit_token):
         return
     if not _fencing_enabled(target_path):
-        df.localCheckpoint(eager=True).write.mode("overwrite").parquet(target_path)
+        cp = df.localCheckpoint(eager=True)
+        try:
+            cp.write.mode("overwrite").parquet(target_path)
+        finally:
+            release_checkpoint(cp)
         return
     claim = partial(_claim_version, target_path, expected_version)
     _swap(df, target_path, commit_token, claim)

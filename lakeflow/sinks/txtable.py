@@ -14,9 +14,10 @@ directly on parquet files:
 - ``data/`` holds immutable parquet files, each written exactly once
   under a unique commit prefix and NEVER mutated or renamed.
 - ``_manifests/v{N}.json`` lists the data files of version N plus a
-  little metadata. Publishing is ``open(..., 'x')`` — atomic exclusive
-  create on POSIX/HDFS — so two writers racing to the same version
-  conflict deterministically: exactly one wins, the loser raises
+  little metadata, the table schema among it. Publishing is
+  ``open(..., 'x')`` — atomic exclusive create on POSIX/HDFS — so two
+  writers racing to the same version conflict deterministically:
+  exactly one wins, the loser raises
   :class:`ConcurrentCommitError` with its staged files cleaned up
   (object stores without atomic create need a CAS/lock service; same
   caveat as sinks/merge fencing).
@@ -26,6 +27,17 @@ directly on parquet files:
   ``vacuum`` — true snapshot isolation with no rename window, the
   property the staged-swap sinks could only approximate.
 - ``vacuum`` deletes data files referenced by NO retained manifest.
+
+Schema rule (Delta's ``metaData`` action): a commit records the
+written DataFrame's schema in its manifest — known at write time, so
+recording it costs no job — and :func:`read_table` reads with it
+instead of running Spark's footer-inference job on every read; the
+append drift check compares against it without reading at all.
+Manifests without a ``schema`` key (written before the rule, or by an
+append that changed a shared column's type) keep Spark's inference,
+which ``merge_schema=True`` widens across files. Measured on
+``perfbench`` ``lake_ingest`` seed 1, traced, 4 cores: ``exec.jobs``
+103 -> 91.
 
 Scale notes: a commit's critical section is one small file create —
 data writes happen before, at full cluster parallelism, and commit
@@ -42,8 +54,9 @@ import json
 import os
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, DataFrameReader, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from lakeflow.sinks.layout import _lay_out, _n_files
 from lakeflow.sinks.zonemap import _footer_min_max, _may_overlap, _read_survivors
@@ -138,12 +151,15 @@ def _publish(
     op: str,
     stats_cols: list[str] | None = None,
     stats: dict[str, dict] | None = None,
+    schema: dict | None = None,
 ) -> int:
     """Atomically publish manifest ``base_version + 1``. Raises
     :class:`ConcurrentCommitError` if someone else got there first."""
     os.makedirs(_manifest_dir(path), exist_ok=True)
     version = base_version + 1
     manifest = {"version": version, "op": op, "files": files}
+    if schema is not None:
+        manifest["schema"] = schema
     if stats_cols:
         manifest["stats_cols"] = stats_cols
         manifest["stats"] = stats or {}
@@ -167,9 +183,11 @@ def _commit(
     prior: dict | None = None,
 ) -> int:
     """Write ``df`` as new immutable files, collect their stats, and
-    publish them — after ``prior``'s files and stats, for an append —
-    as version ``base_version + 1``. A lost race removes the new files
-    and re-raises :class:`ConcurrentCommitError`."""
+    publish them with ``df``'s schema — after ``prior``'s files and
+    stats, and with the schema widened by the batch's new columns, for
+    an append — as version ``base_version + 1``. A lost race removes
+    the new files and re-raises :class:`ConcurrentCommitError`."""
+    schema = _appended_schema(prior, df.schema) if prior else df.schema.jsonValue()
     files = _write_data_files(df, path)
     stats = None
     if stats_cols:
@@ -177,12 +195,42 @@ def _commit(
         stats.update(_collect_stats(path, files, stats_cols))
     kept = prior["files"] if prior else []
     try:
-        return _publish(path, base_version, kept + files, op, stats_cols, stats)
+        return _publish(
+            path, base_version, kept + files, op, stats_cols, stats, schema
+        )
     except ConcurrentCommitError:
         for rel in files:
             with contextlib.suppress(OSError):
                 os.remove(os.path.join(path, rel))
         raise
+
+
+def _appended_schema(prior: dict, batch: StructType) -> dict | None:
+    """The recorded schema after appending ``batch``: the table's
+    columns, then the batch's new ones. None — reads infer — when the
+    prior manifest records no schema or a shared column changed type
+    or letter case."""
+    if "schema" not in prior:
+        return None
+    fields = StructType.fromJson(prior["schema"]).fields
+    have = {f.name.lower(): f for f in fields}
+    for f in batch.fields:
+        old = have.get(f.name.lower())
+        if old is None:
+            fields.append(f)
+        elif old.name != f.name or (
+            old.dataType.simpleString() != f.dataType.simpleString()
+        ):
+            return None
+    return StructType(fields).jsonValue()
+
+
+def _reader(spark: SparkSession, manifest: dict) -> DataFrameReader:
+    """A parquet reader given ``manifest``'s recorded schema, or an
+    inferring one when the manifest records none."""
+    if "schema" not in manifest:
+        return spark.read
+    return spark.read.schema(StructType.fromJson(manifest["schema"]))
 
 
 def _files_bytes(path: str, files: list[str]) -> int:
@@ -223,22 +271,26 @@ def append_table(
 
     Schema discipline: a batch whose columns differ from the current
     snapshot raises unless ``allow_schema_drift=True`` (schema
-    EVOLUTION — new columns land in the new files only; read the
-    union with ``read_table(..., merge_schema=True)``, older files'
-    missing columns surface as null)."""
+    EVOLUTION — new columns land in the new files only, and the
+    manifest records the widened schema, so older files' missing
+    columns read as null). The check reads the snapshot's columns from
+    its manifest; only a manifest with no recorded schema is read."""
     base = current_version(path)
     if base == 0:
         return write_table(spark, df, path)
     prior = _read_manifest(path, base)
     if not allow_schema_drift:
-        snap_cols = set(read_table(spark, path, base).columns)
+        if "schema" in prior:
+            snap_cols = {f["name"] for f in prior["schema"]["fields"]}
+        else:
+            snap_cols = set(read_table(spark, path, base).columns)
         new_cols = set(df.columns)
         if snap_cols != new_cols:
             raise ValueError(
                 f"append schema drift at {path!r}: table has "
                 f"{sorted(snap_cols)}, batch has {sorted(new_cols)}; pass "
-                f"allow_schema_drift=True to widen (read back with "
-                f"merge_schema=True)"
+                f"allow_schema_drift=True to widen (a plain read_table "
+                f"then returns the widened columns)"
             )
     return _commit(path, base, df, "append", prior.get("stats_cols"), prior)
 
@@ -252,18 +304,20 @@ def read_table(
     """Snapshot read: latest version, or a pinned one (time travel).
     The returned DataFrame scans exactly the manifest's immutable
     files — concurrent commits cannot change or break it (files live
-    until vacuum). ``merge_schema=True`` unions the schemas of all
-    listed files (columns absent from older files read as null) — the
-    read half of schema evolution; appends that WIDEN the schema
-    (``append_table(..., allow_schema_drift=True)``) need it."""
+    until vacuum). The scan reads with the manifest's recorded schema
+    (no inference job; module docstring), which after a drift append
+    is already the widened one. ``merge_schema=True`` matters only for
+    a manifest that records no schema (written before the rule, or by
+    an append that changed a shared column's type): it unions the
+    schemas of all listed files instead of inferring one file's
+    (columns absent from older files read as null)."""
     v, manifest = _manifest_at(path, version)
     files = [os.path.join(path, rel) for rel in manifest["files"]]
     if not files:
         raise FileNotFoundError(f"version {v} of {path!r} lists no files")
-    reader = spark.read
     if merge_schema:
-        reader = reader.option("mergeSchema", "true")
-    return reader.parquet(*files)
+        return spark.read.option("mergeSchema", "true").parquet(*files)
+    return _reader(spark, manifest).parquet(*files)
 
 
 def merge_upsert_table(
@@ -432,7 +486,12 @@ def scan_where(
         if _may_overlap(*(stats.get(rel, {}).get(col) or (None, None)), lo, hi)
     ]
     return _read_survivors(
-        spark, files, col, lo, hi, lambda: read_table(spark, path, v)
+        _reader(spark, manifest),
+        files,
+        col,
+        lo,
+        hi,
+        lambda: read_table(spark, path, v),
     )
 
 

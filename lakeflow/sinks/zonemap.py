@@ -34,7 +34,7 @@ from __future__ import annotations
 import os
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, DataFrameReader, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -114,16 +114,16 @@ def prune_files(
 
 
 def _read_survivors(
-    spark: SparkSession,
+    reader: DataFrameReader,
     files: list[str],
     col: str,
     lo,
     hi,
     whole: Callable[[], DataFrame],
 ) -> DataFrame:
-    """Scan the surviving ``files`` with the residual predicate
-    ``lo <= col <= hi`` re-applied, so the result equals the full
-    scan's. No survivors reads ``whole()`` under a false filter: an
+    """Scan the surviving ``files`` with ``reader`` and the residual
+    predicate ``lo <= col <= hi`` re-applied, so the result equals the
+    full scan's. No survivors reads ``whole()`` under a false filter: an
     empty DataFrame with the table's schema."""
     if not files:
         return whole().where(F.lit(False))
@@ -132,7 +132,7 @@ def _read_survivors(
         pred = pred & (F.col(col) >= F.lit(lo))
     if hi is not None:
         pred = pred & (F.col(col) <= F.lit(hi))
-    return spark.read.parquet(*files).where(pred)
+    return reader.parquet(*files).where(pred)
 
 
 def pruned_read(
@@ -146,7 +146,7 @@ def pruned_read(
     DataFrame with the table's schema."""
     files = prune_files(zonemap_from_footers(path, [col]), col, lo, hi)
     return _read_survivors(
-        spark, files, col, lo, hi, lambda: spark.read.parquet(path)
+        spark.read, files, col, lo, hi, lambda: spark.read.parquet(path)
     )
 
 
@@ -174,5 +174,5 @@ def pruned_read_with_index(
     rows = index.select("file", f"{col}_min", f"{col}_max").collect()
     files = prune_files([r.asDict() for r in rows], col, lo, hi)
     return _read_survivors(
-        spark, files, col, lo, hi, lambda: spark.read.parquet(path)
+        spark.read, files, col, lo, hi, lambda: spark.read.parquet(path)
     )

@@ -148,3 +148,30 @@ def test_refresh_applications_incremental(spark):
     assert rows[200]["application_status"] == "STARTED"
     assert rows[200]["application_complete_flag"] is False
     assert rows[300]["application_status"] == "STARTED"
+
+
+def test_refresh_releases_its_checkpoint(spark):
+    # the refresh materializes its merge with localCheckpoint to overwrite
+    # the table it reads; the checkpoint's blocks must not outlive it
+    from datetime import datetime
+
+    from pyspark.sql import Row
+
+    from lakeflow.pipelines.gold import refresh_applications_incremental
+
+    create_card_funnel_schema(spark, SCHEMA)
+    batch = spark.createDataFrame(
+        [
+            Row(
+                cardapplicationid=500,
+                applicationstatus="STARTED",
+                ts=datetime(2024, 2, 1, 9),
+                customerid=9,
+                leadid=2,
+            )
+        ]
+    )
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    refresh_applications_incremental(spark, batch, schema=SCHEMA, prefix="")
+    assert jsc.getPersistentRDDs().size() == before

@@ -271,3 +271,77 @@ def test_merge_committing_during_compaction_is_not_lost(
     got = sorted(tuple(r) for r in spark.read.parquet(tgt).collect())
     assert got == [("a", 5), ("b", 1)]
     assert not glob.glob(tgt + "._merge_tmp_*")
+
+
+def _three_partitions(spark, tgt):
+    (
+        spark.range(600)
+        .withColumn("p", F.col("id") % 3)
+        .repartition(6)
+        .write.partitionBy("p")
+        .parquet(tgt)
+    )
+
+
+def test_partition_staged_mid_swap_is_invisible_to_readers(
+    spark, tmp_path, monkeypatch
+):
+    # while a partition is staged and backed up, a read of the table
+    # root sees the original rows, with `p` still an int partition column
+    from lakeflow.sinks.layout import compact_partitions
+
+    tgt = str(tmp_path / "parts")
+    _three_partitions(spark, tgt)
+    real_rename = os.rename
+    seen: list = []
+
+    def reading_rename(src, dst):
+        if not seen:
+            df = spark.read.parquet(tgt)
+            seen.append((df.count(), dict(df.dtypes)["p"]))
+        out = real_rename(src, dst)
+        if len(seen) == 1:
+            # between the swap's two renames the partition is backed up,
+            # out of sight: the other two read, `p` still an int
+            df = spark.read.parquet(tgt)
+            seen.append((df.count(), dict(df.dtypes)["p"]))
+        return out
+
+    monkeypatch.setattr(os, "rename", reading_rename)
+    compact_partitions(spark, tgt, ["p=1"], target_file_bytes=1 << 30)
+    monkeypatch.setattr(os, "rename", real_rename)
+    assert seen == [(600, "int"), (400, "int")]
+    assert spark.read.parquet(tgt).count() == 600
+    assert not [d for d in os.listdir(tgt) if "._merge_" in d]
+
+
+def test_partition_swap_killed_mid_swap_is_restored_by_next_compaction(
+    spark, tmp_path, monkeypatch
+):
+    import pytest
+
+    from lakeflow.sinks.layout import compact_partitions
+
+    tgt = str(tmp_path / "parts")
+    _three_partitions(spark, tgt)
+    before = sorted(map(tuple, spark.read.parquet(tgt).collect()))
+    real_rename = os.rename
+    calls: list[str] = []
+
+    def dies_after_first_rename(src, dst):
+        calls.append(src)
+        if len(calls) > 1:
+            raise OSError("killed mid-swap")
+        return real_rename(src, dst)
+
+    monkeypatch.setattr(os, "rename", dies_after_first_rename)
+    with pytest.raises(OSError, match="killed mid-swap"):
+        compact_partitions(spark, tgt, ["p=1"], target_file_bytes=1 << 30)
+    monkeypatch.setattr(os, "rename", real_rename)
+    assert not os.path.exists(os.path.join(tgt, "p=1"))
+
+    out = compact_partitions(spark, tgt, target_file_bytes=1 << 30)
+    assert out == {"p=0": 1, "p=1": 1, "p=2": 1}
+    assert sorted(map(tuple, spark.read.parquet(tgt).collect())) == before
+    assert dict(spark.read.parquet(tgt).dtypes)["p"] == "int"
+    assert not [d for d in os.listdir(tgt) if "._merge_" in d]

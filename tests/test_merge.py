@@ -512,3 +512,21 @@ def test_vacuum_versions_prunes_every_token_family(spark, tmp_path):
     tokens = sorted(f for f in os.listdir(tgt) if f.startswith("_token_"))
     assert tokens == ["_token_cdfv4", "_token_cdfv5"]
     assert cdf_cursor(tgt) == 5
+
+
+def test_unfenced_overwrite_releases_its_checkpoint(spark, tmp_path, monkeypatch):
+    # the object-store overwrite path, run on a local target that the
+    # written frame reads
+    import lakeflow.sinks.merge as M
+
+    tgt = str(tmp_path / "t")
+    spark.range(10).write.parquet(tgt)
+    monkeypatch.setattr(M, "_fencing_enabled", lambda target_path: False)
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    df = spark.read.parquet(tgt).selectExpr("id + 100 AS id")
+    M._fenced_overwrite(df, tgt, 0)
+    assert jsc.getPersistentRDDs().size() == before
+    assert sorted(r["id"] for r in spark.read.parquet(tgt).collect()) == list(
+        range(100, 110)
+    )
