@@ -1,63 +1,88 @@
-"""Explicit cache lifetime for operators that persist intermediates.
+"""One cache-lifetime rule for operators that persist intermediates.
 
-Several similarity operators persist a shared intermediate relation
-(the distinct-shingle scan in ``near_dup_pairs``, the band relation in
-``lsh_candidate_pairs``'s skew-guard path, the bucket relation in
-``embedding_near_dup``) because two consumers would otherwise re-run
-the expensive upstream pipeline. The returned DataFrames are lazy, so
-the operator itself can never know when it is safe to unpersist — that
-is the caller's knowledge. Docstring-only guidance ("call
-``spark.catalog.clearCache()`` between jobs") proved easy to ignore
-(round 3's bench accumulated MEMORY_AND_DISK relations across 68
-queries), so the lifetime is now an explicit object:
+An operator persists every relation it reuses (two or more consumers
+would otherwise re-run the upstream pipeline) with :func:`persist`.
+The persist joins the innermost :class:`scoped_cache` and is released
+when that scope exits. With no scope open it lives for the session.
+Code that finishes its work before returning opens the scope: the
+runners (``streaming.pipeline.run_batches`` per batch, the bench and
+``perfbench`` per query) and functions that write or collect their
+result (``apss.apss_index_fit``, ``similarity.mmr_select``,
+``similarity.kcenter_select``):
 
-    with CacheScope() as scope:
-        pairs = near_dup_pairs(docs, "doc_id", "text", cache=scope)
+    with scoped_cache():
+        pairs = near_dup_pairs(docs, "doc_id", "text")
         pairs.write.parquet(out)        # materialize INSIDE the scope
-    # exiting unpersists every relation the operator registered
+    # exiting unpersists every relation persisted in the block
 
-A long-lived service can instead keep one scope per request/job and
-call :meth:`CacheScope.release` when the job's outputs are on disk.
-Operators take ``cache: CacheScope | None``; ``None`` preserves the
-old behavior (session-lifetime persist, caller clears), so existing
-callers and the sf0.01 oracle parity path are unchanged.
+Why the session fallback and not "no scope, no persist": most tests and
+the driver's correctness run are unscoped, and recomputing a reused
+relation costs more than keeping it. Measured on 4 cores at sf0.001:
+
+=============================  ==================  ================  ===================
+fallback with no scope open    test_oracle_parity  197 queries, one  left cached
+                               (206 tests)         session           afterwards
+=============================  ==================  ================  ===================
+per call site (three rules)    247 / 237 / 224 s   174.8 s           31 RDDs, 1.78 MB
+none (skip the persist)        287 / 303 s         226.5 s           0
+session (this rule)            219 / 233 s         178.8 s           47 RDDs, 2.84 MB
+=============================  ==================  ================  ===================
+
+Loop state that an operator drops itself (``bpe``'s per-round
+unpersist, ``localCheckpoint`` via :func:`release_checkpoint`) is not
+part of the rule.
 """
 
 from __future__ import annotations
+
+import threading
 
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 
 
-class CacheScope:
-    """Collects DataFrames persisted by operators and unpersists them
-    together when the scope closes (or :meth:`release` is called)."""
+class scoped_cache:
+    """Context manager that collects every :func:`persist` made while
+    it is the innermost open scope, and unpersists them on exit (or on
+    :meth:`release`). Nested scopes stack; the innermost wins. The stack
+    is per thread, so concurrent streams' batches (each ``foreachBatch``
+    call runs on a callback thread) never close each other's scope."""
 
-    def __init__(self, storage_level: StorageLevel | None = None) -> None:
-        self.storage_level = storage_level or StorageLevel.MEMORY_AND_DISK
+    def __init__(self) -> None:
         self._persisted: list[DataFrame] = []
-
-    def persist(self, df: DataFrame) -> DataFrame:
-        """Persist ``df`` at the scope's storage level and register it
-        for release. Returns the persisted DataFrame."""
-        out = df.persist(self.storage_level)
-        self._persisted.append(out)
-        return out
+        self._prev: scoped_cache | None = None
 
     def release(self, blocking: bool = False) -> int:
-        """Unpersist everything registered with this scope. Returns the
-        number of relations released. Idempotent."""
+        """Unpersist everything persisted in this scope so far. Returns
+        the number of relations released. Idempotent."""
         n = len(self._persisted)
         for df in self._persisted:
             df.unpersist(blocking)
         self._persisted.clear()
         return n
 
-    def __enter__(self) -> "CacheScope":
+    def __enter__(self) -> "scoped_cache":
+        self._prev = getattr(_local, "scope", None)
+        _local.scope = self
         return self
 
     def __exit__(self, *exc) -> None:
+        _local.scope = self._prev
         self.release()
+
+
+#: ``scope``: this thread's innermost open :class:`scoped_cache`
+_local = threading.local()
+
+
+def persist(df: DataFrame) -> DataFrame:
+    """Persist ``df`` (MEMORY_AND_DISK) for the innermost open
+    :class:`scoped_cache`, or for the session when none is open."""
+    out = df.persist(StorageLevel.MEMORY_AND_DISK)
+    scope = getattr(_local, "scope", None)
+    if scope is not None:
+        scope._persisted.append(out)
+    return out
 
 
 def release_checkpoint(df: DataFrame) -> None:
@@ -66,60 +91,6 @@ def release_checkpoint(df: DataFrame) -> None:
     belong to the checkpointed RDD under the plan, not to the cache
     manager."""
     df._jdf.queryExecution().logical().rdd().unpersist(False)
-
-
-def maybe_persist(df: DataFrame, cache: CacheScope | None) -> DataFrame:
-    """Persist ``df`` under ``cache`` (or, with ``cache=None``, under
-    the ambient :func:`scoped_cache` scope if one is active). Only when
-    neither exists does the persist fall back to session lifetime
-    (legacy behavior — the caller owns ``spark.catalog.clearCache()``)."""
-    scope = cache if cache is not None else _ACTIVE
-    if scope is not None:
-        return scope.persist(df)
-    return df.persist(StorageLevel.MEMORY_AND_DISK)
-
-
-#: Ambient scope for callers whose signature cannot thread a
-#: ``cache=`` parameter — the driver-contract registry queries are
-#: fixed at ``(spark, sf_dir)``, so without this every persist they
-#: trigger would be session-lifetime and only a blanket
-#: ``clearCache()`` could reclaim it.
-_ACTIVE: CacheScope | None = None
-
-
-def active_scope() -> CacheScope | None:
-    """The innermost :func:`scoped_cache` scope, if any."""
-    return _ACTIVE
-
-
-class scoped_cache:
-    """Context manager installing an ambient CacheScope: every
-    ``maybe_persist(df, None)`` inside the block registers with it, and
-    exiting releases exactly those relations — nothing else a session
-    may have cached. Used by bench.py around each timed query (release
-    what the query persisted, instead of blanket ``clearCache()``) and
-    usable by any job runner:
-
-        with scoped_cache() as scope:
-            out = QUERIES["q_near_dup_pipeline"].fn(spark, sf_dir)
-            out.write.parquet(dst)   # materialize INSIDE the block
-
-    Nested scopes stack; the innermost wins."""
-
-    def __init__(self, storage_level: StorageLevel | None = None) -> None:
-        self._scope = CacheScope(storage_level)
-        self._prev: CacheScope | None = None
-
-    def __enter__(self) -> CacheScope:
-        global _ACTIVE
-        self._prev = _ACTIVE
-        _ACTIVE = self._scope
-        return self._scope
-
-    def __exit__(self, *exc) -> None:
-        global _ACTIVE
-        _ACTIVE = self._prev
-        self._scope.release()
 
 
 def prebuilt_state(path: str, build_fn) -> str:
@@ -134,8 +105,8 @@ def prebuilt_state(path: str, build_fn) -> str:
     Contract the call sites rely on:
 
     - **Key discipline is the caller's job**: ``path`` must embed a
-      CONTENT fingerprint of the inputs (the ``_corpus_cache_key``
-      arrangement — path + per-file size/mtime), so a stale artifact
+      CONTENT fingerprint of the inputs (``llm_ops._corpus_cache_key``
+      over ``catalog.files_digest``), so a stale artifact
       can only ever be byte-equivalent to a fresh build and is safe to
       serve. ``build_fn`` must be deterministic for the same reason.
     - **Race-safe**: concurrent builders each build into a unique

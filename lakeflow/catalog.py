@@ -61,14 +61,11 @@ _schemas: OrderedDict[tuple, StructType] = OrderedDict()
 _schemas_lock = threading.Lock()
 
 
-def _content_key(spark: SparkSession, path: str) -> tuple | None:
-    """The session, its inference confs, and a digest of (path, size,
-    mtime_ns) of every file under ``path``; None for a non-local or
-    missing path, or one whose files change while they are listed. The
-    digest keeps a key's size fixed however many files the path holds."""
-    if "://" in path and not path.startswith("file:"):
-        return None
-    local = urlparse(path).path if path.startswith("file:") else path
+def files_digest(local: str) -> bytes | None:
+    """16-byte blake2b digest of (path, size, mtime_ns) of every file
+    under the local path ``local`` (a file or a directory tree): it
+    changes when any file is added, removed or rewritten. None for a
+    missing path, or one whose files change while they are listed."""
     if os.path.isfile(local):
         found = [local]
     elif os.path.isdir(local):
@@ -82,8 +79,21 @@ def _content_key(spark: SparkSession, path: str) -> tuple | None:
     files = hashlib.blake2b(digest_size=16)
     for f, st in stats:
         files.update(f"{f}\0{st.st_size}\0{st.st_mtime_ns}\n".encode())
+    return files.digest()
+
+
+def _content_key(spark: SparkSession, path: str) -> tuple | None:
+    """The session, its inference confs, and :func:`files_digest` of
+    ``path``; None for a non-local path or one with no digest. The
+    digest keeps a key's size fixed however many files the path holds."""
+    if "://" in path and not path.startswith("file:"):
+        return None
+    local = urlparse(path).path if path.startswith("file:") else path
+    files = files_digest(local)
+    if files is None:
+        return None
     confs = tuple(spark.conf.get(c) for c in _INFERENCE_CONFS)
-    return (id(spark), confs, local, files.digest())
+    return (id(spark), confs, local, files)
 
 
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:

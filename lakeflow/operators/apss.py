@@ -56,7 +56,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from lakeflow.caching import CacheScope, active_scope, maybe_persist
+from lakeflow.caching import persist, scoped_cache
 from lakeflow.operators.similarity import cosine_micros
 from lakeflow.operators.text import tokens
 
@@ -65,7 +65,6 @@ def weighted_terms(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    cache: CacheScope | None = None,
 ) -> DataFrame:
     """(id, term, df, w, n2): L2-normalized inverse-df term weights in
     micro units, each term's document frequency (the prefix filter's
@@ -110,15 +109,9 @@ def weighted_terms(
     # the exact norm of the QUANTIZED vector (what cosine actually
     # divides by): ~1e12, fits LONG comfortably
     n2 = w.groupBy(id_col).agg(F.sum(F.col("w") * F.col("w")).alias("n2"))
-    out = w.join(n2, id_col)
     # three consumers downstream (full relation, prefix window, verify
-    # arrays) — persist, but ONLY under an explicit or ambient scope: a
-    # bare library call must not leak a session-lifetime persist it can
-    # never release (the bm25_search rule); recompute is the correct
-    # default there.
-    if cache is not None or active_scope() is not None:
-        out = maybe_persist(out, cache)
-    return out
+    # arrays)
+    return persist(w.join(n2, id_col))
 
 
 def _prefix_terms(
@@ -237,7 +230,6 @@ def apss_join(
     id_col: str,
     text_col: str,
     threshold_micros: int = 600_000,
-    cache: CacheScope | None = None,
 ) -> DataFrame:
     """Exact self all-pairs cosine join: every unordered pair with
     cosine(tf-idf weights) >= threshold, as (``{id}_a``, ``{id}_b``,
@@ -259,15 +251,14 @@ def apss_join(
     costs ONE membership expansion at output time. This mirrors the
     production funnel order (exact dedup BEFORE near-dup) while
     keeping the operator's contract self-contained."""
-    w_all = weighted_terms(df, id_col, text_col, cache)
-    return _pairs_from_weights(w_all, id_col, threshold_micros, cache)
+    w_all = weighted_terms(df, id_col, text_col)
+    return _pairs_from_weights(w_all, id_col, threshold_micros)
 
 
 def _pairs_from_weights(
     w_all: DataFrame,
     id_col: str,
     threshold_micros: int,
-    cache: CacheScope | None = None,
 ) -> DataFrame:
     """The self-join machinery of :func:`apss_join` given an already-
     built weight relation — shared with the incremental tier, whose
@@ -282,11 +273,9 @@ def _pairs_from_weights(
     )
     groups = fp.select(F.col(id_col), "__fp")
     reps = groups.groupBy("__fp").agg(F.min(id_col).alias("__rep"))
-    members = groups.join(reps, "__fp").select(
-        "__fp", F.col(id_col), F.col("__rep")
+    members = persist(
+        groups.join(reps, "__fp").select("__fp", F.col(id_col), F.col("__rep"))
     )
-    if cache is not None or active_scope() is not None:
-        members = maybe_persist(members, cache)
 
     # the pairwise machinery sees one row set per DISTINCT vector
     w = w_all.join(
@@ -369,8 +358,7 @@ def _pairs_from_weights(
             F.first("n2").alias("__n2"),
         )
     )
-    if cache is not None or active_scope() is not None:
-        arrs = maybe_persist(arrs, cache)  # scope-gated, two consumers
+    arrs = persist(arrs)  # two consumers
     a = arrs.select(
         F.col(id_col).alias("__pa"),
         F.col("__m").alias("__ma"),
@@ -522,7 +510,6 @@ def snapshot_staleness(
     text_col: str,
     unseen_ppm_threshold: int = 100_000,
     chi2_micros_threshold: int = 100_000,
-    cache: CacheScope | None = None,
 ) -> DataFrame:
     """Drift monitor for the FROZEN df snapshot the incremental tier
     scores against (VERDICT r9 task #4 — the missing last piece of
@@ -572,11 +559,8 @@ def snapshot_staleness(
         .select(F.col(id_col), "term")
     )
     snap = stored_weights.groupBy("term").agg(F.max("df").alias("__sdf"))
-    probe = tf.join(snap, "term", "left")
-    # two consumers (bucket occupancy + unseen-rate aggregate) — persist
-    # only under an explicit or ambient scope (the weighted_terms rule)
-    if cache is not None or active_scope() is not None:
-        probe = maybe_persist(probe, cache)
+    # two consumers (bucket occupancy + unseen-rate aggregate)
+    probe = persist(tf.join(snap, "term", "left"))
 
     # log2-magnitude df bucket: length(bin(df)) — the loghist/HLL rho
     # device, identical on both engines; unseen terms read df=1
@@ -632,7 +616,6 @@ def incremental_apss_pairs(
     id_col: str,
     text_col: str,
     threshold_micros: int = 600_000,
-    cache: CacheScope | None = None,
     new_weights: DataFrame | None = None,
 ) -> DataFrame:
     """EXACT weighted-cosine pairs involving at least one NEW document,
@@ -676,8 +659,7 @@ def incremental_apss_pairs(
     cos_micros) with id_a < id_b."""
     if new_weights is None:
         new_weights = snapshot_weights(new_docs, stored_weights, id_col, text_col)
-    if cache is not None or active_scope() is not None:
-        new_weights = maybe_persist(new_weights, cache)
+    new_weights = persist(new_weights)
 
     # batch-side exact-duplicate collapse (the batch tier's wedge
     # killer, scoped to the batch: stored docs index individually)
@@ -688,11 +670,9 @@ def incremental_apss_pairs(
     )
     groups = fp.select(F.col(id_col), "__fp")
     reps = groups.groupBy("__fp").agg(F.min(id_col).alias("__rep"))
-    members = groups.join(reps, "__fp").select(
-        "__fp", F.col(id_col), F.col("__rep")
+    members = persist(
+        groups.join(reps, "__fp").select("__fp", F.col(id_col), F.col("__rep"))
     )
-    if cache is not None or active_scope() is not None:
-        members = maybe_persist(members, cache)
     w_rep = new_weights.join(
         members.filter(F.col(id_col) == F.col("__rep")).select(id_col),
         id_col,
@@ -731,8 +711,7 @@ def incremental_apss_pairs(
         .filter(F.col("__ub") >= kill)
         .select(F.col("__ida").alias("__pa"), F.col("__idb").alias("__pb"))
     )
-    if cache is not None or active_scope() is not None:
-        cand = maybe_persist(cand, cache)  # read by the semi-join AND the verify
+    cand = persist(cand)  # read by the semi-join AND the verify
 
     def _arrs(wrel: DataFrame) -> DataFrame:
         return wrel.groupBy(id_col).agg(
@@ -799,7 +778,7 @@ def incremental_apss_pairs(
         F.greatest("__ea", "__pb").alias(f"{id_col}_b"),
         "cos_micros",
     )
-    nn = _pairs_from_weights(new_weights, id_col, threshold_micros, cache)
+    nn = _pairs_from_weights(new_weights, id_col, threshold_micros)
     return ns.unionByName(nn).distinct()
 
 
@@ -823,13 +802,14 @@ def apss_index_fit(
     df drift is handled by a periodic refit + index rebuild
     (deterministic, replayable) — never per-batch mutation of stored
     weights, which would require re-normalizing the whole corpus."""
-    w = weighted_terms(seed_corpus, id_col, text_col)
-    w.write.mode("overwrite").parquet(f"{index_path}/weights")
-    apss_prefix_index(
-        # re-read the just-written relation: the prefix window then
-        # scans parquet once instead of re-running the weight
-        # aggregates a second time inside the same job
-        w.sparkSession.read.parquet(f"{index_path}/weights"),
-        id_col,
-        threshold_micros,
-    ).write.mode("overwrite").parquet(f"{index_path}/prefix")
+    with scoped_cache():
+        w = weighted_terms(seed_corpus, id_col, text_col)
+        w.write.mode("overwrite").parquet(f"{index_path}/weights")
+        apss_prefix_index(
+            # re-read the just-written relation: the prefix window then
+            # scans parquet once instead of re-running the weight
+            # aggregates a second time inside the same job
+            w.sparkSession.read.parquet(f"{index_path}/weights"),
+            id_col,
+            threshold_micros,
+        ).write.mode("overwrite").parquet(f"{index_path}/prefix")

@@ -34,7 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from lakeflow.caching import CacheScope, maybe_persist
+from lakeflow.caching import persist
 
 
 def word_counts(df: DataFrame, text_col: str) -> DataFrame:
@@ -98,7 +98,6 @@ def learn_bpe(
     df: DataFrame,
     text_col: str,
     n_merges: int,
-    cache: CacheScope | None = None,
 ) -> tuple[list[tuple[str, str]], DataFrame]:
     """Learn ``n_merges`` BPE merges from the corpus. Returns
     (merge list in learned order, final symbolized word table).
@@ -106,7 +105,7 @@ def learn_bpe(
     Each round's 1-row argmax collect is the only driver action; ties
     break (count desc, left asc, right asc) so the sequence is
     deterministic. Stops early when no pair repeats."""
-    words = maybe_persist(symbolize(word_counts(df, text_col)), cache)
+    words = persist(symbolize(word_counts(df, text_col)))
     merges: list[tuple[str, str]] = []
     for _ in range(n_merges):
         best = (
@@ -123,7 +122,7 @@ def learn_bpe(
             break
         left, right = best[0].left, best[0].right
         merges.append((left, right))
-        nxt = maybe_persist(apply_merge(words, left, right), cache)
+        nxt = persist(apply_merge(words, left, right))
         nxt.count()  # materialize before dropping the parent
         words.unpersist()
         words = nxt

@@ -116,8 +116,9 @@ def min_label_components(
     # (~0.35-0.45 s/round locally) is mostly checkpoint + probe
     # round-trips, and `sym` is reused as-is so fusion adds no join
     # (unlike pointer jumping, measured & rejected in r10). Interleaved
-    # A/B on the sf0.1 linkage match graph (scripts/er_fusion_probe.py,
-    # outputs asserted identical): min 9.34 s -> 6.02 s, 0.645x.
+    # A/B on the sf0.1 linkage match graph (scripts/er_fusion_probe.py
+    # at commit 50921c4, outputs asserted identical): min 9.34 s ->
+    # 6.02 s, 0.645x.
     #
     # Tail: the changed-count probe observes the LAST round of its
     # cycle, so the final TWO budget rounds run single-round with a

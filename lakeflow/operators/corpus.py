@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from lakeflow.caching import CacheScope, maybe_persist
+from lakeflow.caching import persist
 from lakeflow.functions.hashing import seeded_hash
 from lakeflow.operators.text import explode_shingles
 
@@ -147,7 +147,6 @@ def surprisal_profile(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    cache: CacheScope | None = None,
 ) -> DataFrame:
     """Unigram corpus-LM surprisal — the KenLM-style quality proxy a
     pretraining pipeline uses to rank documents by how "expected" their
@@ -174,11 +173,10 @@ def surprisal_profile(
     # per-occurrence score join: without a persist each branch re-scans
     # and re-explodes the corpus (6 scans in the physical plan) — at
     # 100 TB the persist turns that into one scan + cached reads
-    ex = maybe_persist(
+    ex = persist(
         df.select(
             F.col(id_col), F.explode(tokens(text_col)).alias("tok")
-        ).filter(F.col("tok") != ""),
-        cache,
+        ).filter(F.col("tok") != "")
     )
     uni = ex.groupBy("tok").agg(F.count(F.lit(1)).alias("n"))
     tot = uni.agg(F.sum("n").alias("total"))
@@ -355,13 +353,10 @@ def bigram_surprisal_profile(
     )
     # three consumers (unigram counts -> total, bigram counts, the
     # scoring join) re-derive the tokenize+bigram explode without a
-    # persist — ambient-scope-only, the bm25_search rule (r11: measured
-    # 1.49 -> 1.23 s at sf0.1; a scan fan-out was neutral here and
-    # fan-out+persist was WORSE, so only the persist ships)
-    from lakeflow.caching import active_scope, maybe_persist
-
-    if active_scope() is not None:
-        ex = maybe_persist(ex, None)
+    # persist (r11: measured 1.49 -> 1.23 s at sf0.1; a scan fan-out was
+    # neutral here and fan-out+persist was WORSE, so only the persist
+    # ships)
+    ex = persist(ex)
     uni = ex.groupBy("cur").agg(F.count(F.lit(1)).alias("__cn"))
     tot = uni.agg(F.sum("__cn").alias("total"))
     bi = (
@@ -490,7 +485,6 @@ def oov_profile(
     id_col: str = "doc_id",
     text_col: str = "text",
     vocab_k: int = 100,
-    cache: CacheScope | None = None,
 ) -> DataFrame:
     """Out-of-vocabulary rate per document against the corpus's own
     top-``vocab_k`` token vocabulary — the tokenizer-coverage
@@ -506,11 +500,10 @@ def oov_profile(
     Returns (id, n_tokens, n_oov, oov_micros)."""
     from lakeflow.operators.text import tokens
 
-    ex = maybe_persist(
+    ex = persist(
         df.select(
             F.col(id_col), F.explode(tokens(text_col)).alias("token")
-        ).filter(F.col("token") != ""),
-        cache,
+        ).filter(F.col("token") != "")
     )
     vocab = (
         ex.groupBy("token")
@@ -549,7 +542,6 @@ def tokenize_to_ids(
     text_col: str = "text",
     vocab_k: int = 100,
     oov_id: int = 0,
-    cache: CacheScope | None = None,
 ) -> DataFrame:
     """Map each document to its integer token-id sequence against the
     corpus's top-``vocab_k`` vocabulary (rank = id, 1-based; OOV →
@@ -567,12 +559,11 @@ def tokenize_to_ids(
 
     from lakeflow.operators.text import tokens
 
-    ex = maybe_persist(
+    ex = persist(
         df.select(
             F.col(id_col),
             F.posexplode(tokens(text_col)).alias("pos", "token"),
-        ).filter(F.col("token") != ""),
-        cache,
+        ).filter(F.col("token") != "")
     )
     counts = ex.groupBy("token").agg(F.count(F.lit(1)).alias("n"))
     top = counts.orderBy(F.desc("n"), F.asc("token")).limit(vocab_k)
@@ -606,7 +597,6 @@ def importance_profile(
     id_col: str,
     text_col: str,
     target_pred: Column,
-    cache: CacheScope | None = None,
 ) -> DataFrame:
     """DSIR-style importance weights for data selection (Xie et al.,
     "Data Selection for Language Models via Importance Resampling"):
@@ -633,13 +623,12 @@ def importance_profile(
 
     # persist the tagged explode: it feeds the count aggregate and the
     # per-occurrence score join (see surprisal_profile's scan note)
-    ex = maybe_persist(
+    ex = persist(
         df.select(
             F.col(id_col),
             target_pred.alias("__tgt"),
             F.explode(tokens(text_col)).alias("tok"),
-        ).filter(F.col("tok") != ""),
-        cache,
+        ).filter(F.col("tok") != "")
     )
     cnt = ex.groupBy("tok").agg(
         F.sum(F.when(F.col("__tgt"), 1).otherwise(0)).alias("ct"),

@@ -49,22 +49,20 @@ def pagerank(
     every product/divide floored in micro-units so any engine replays it
     bit-for-bit. Returns (node, rank_micros) for all nodes.
     """
-    from lakeflow.caching import maybe_persist
+    from lakeflow.caching import persist
 
     base = RANK_SCALE - damping_micros
     outw = edges.groupBy("src").agg(F.sum("weight").alias("ow"))
-    # the edge+out-weight relation feeds EVERY round: persist it (under
-    # the ambient/explicit CacheScope) so iterations don't re-derive
-    # the upstream edge pipeline from scratch
-    ew = maybe_persist(edges.join(outw, "src"), None)
+    # the edge+out-weight relation feeds EVERY round: persist it so
+    # iterations don't re-derive the upstream edge pipeline from scratch
+    ew = persist(edges.join(outw, "src"))
     # nodes feeds every round's left join too — without the persist its
     # union+distinct over the raw edge pipeline re-executes O(iters)
     # times inside the nested unrolled plan
-    nodes = maybe_persist(
+    nodes = persist(
         edges.select(F.col("src").alias("node"))
         .unionByName(edges.select(F.col("dst").alias("node")))
-        .distinct(),
-        None,
+        .distinct()
     )
     ranks = nodes.select("node", F.lit(RANK_SCALE).cast("long").alias("rank"))
     for _ in range(iters):
@@ -157,12 +155,9 @@ def triangle_count(
         .where(F.col("u") != F.col("v"))
         .distinct()
     )
-    from lakeflow.caching import active_scope, maybe_persist
+    from lakeflow.caching import persist
 
-    # consumers: degree agg + the orientation join; ambient-scope-only
-    # persist (the bm25_search rule)
-    if active_scope() is not None:
-        e = maybe_persist(e, None)
+    e = persist(e)  # consumers: degree agg + the orientation join
     # symmetrize via ONE explode (never union(e, reversed(e)) — the
     # min_label_components lesson: union branches re-evaluate the
     # upstream pair pipeline once each)
@@ -182,8 +177,7 @@ def triangle_count(
         F.when(lower_first, F.col("v")).otherwise(F.col("u")).alias("dst"),
         F.when(lower_first, F.col("dv")).otherwise(F.col("du")).alias("dd"),
     )
-    if active_scope() is not None:
-        oriented = maybe_persist(oriented, None)  # wedge (x2) + closure
+    oriented = persist(oriented)  # wedge (x2) + closure
     a = oriented.select(
         F.col("src"), F.col("dst").alias("x"), F.col("dd").alias("dx")
     )

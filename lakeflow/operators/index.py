@@ -102,29 +102,23 @@ def bm25_search(index: DataFrame, terms: list[str], k: int = 10) -> DataFrame:
     queried posting lists; the final top-k is a TakeOrdered, never a
     global sort. Returns (doc_id, score_micros, n_terms), ties broken
     by doc_id."""
-    from lakeflow.caching import active_scope, maybe_persist
+    from lakeflow.caching import persist
 
     terms = sorted({t.lower() for t in terms})
     # three consumers (doc lengths -> corpus totals, the term filter,
     # the per-doc join): without a persist an in-query-derived index
     # re-tokenizes the corpus for each — at 100 TB the index is a
     # persisted token-bucketed table and this is a no-op-cheap cache of
-    # that scan. ONLY rides an ambient CacheScope (bench/tests wrap
-    # each query in one): a bare library call must not leak a
-    # session-lifetime persist it can never release (r6 advice) — the
-    # recompute is the correct default there.
-    if active_scope() is not None:
-        index = maybe_persist(index, None)
+    # that scan.
+    index = persist(index)
     dl = index.groupBy("doc_id").agg(F.sum("tf").alias("dl"))
     # the doc-length relation has TWO consumers here (the corpus-stats
     # aggregate and the per-doc score join) and a THIRD in
     # rm3_expansion's corpus count (Spark's CacheManager substitutes
     # any identical-plan subtree, so persisting it here serves rm3's
     # n_docs aggregate too — the r12 form of VERDICT r11 task #4's
-    # "make the BM25-round reuse real"). Ambient-scope-only, the same
-    # leak rule as the index persist above.
-    if active_scope() is not None:
-        dl = maybe_persist(dl, None)
+    # "make the BM25-round reuse real").
+    dl = persist(dl)
     stats = dl.agg(
         F.count(F.lit(1)).alias("n_docs"), F.sum("dl").alias("sum_dl")
     )
@@ -234,14 +228,12 @@ def rm3_expansion(
     semi-joined to the feedback vocabulary — never a corpus-wide
     expansion. All weights are exact integers, so the expansion set is
     bit-reproducible on any engine."""
-    from lakeflow.caching import active_scope, maybe_persist
+    from lakeflow.caching import persist
 
     terms = sorted({t.lower() for t in terms})
     # four consumers of the index (the BM25 round's three + the
-    # feedback-posting join): same ambient-scope-only persist rule as
-    # bm25_search
-    if active_scope() is not None:
-        index = maybe_persist(index, None)
+    # feedback-posting join)
+    index = persist(index)
     fb = bm25_search(index, terms, k_docs).select("doc_id")
     fbp = index.join(F.broadcast(fb), "doc_id")
     fb_tokens = fbp.select("token").distinct()
@@ -250,8 +242,8 @@ def rm3_expansion(
         .groupBy("token")
         .agg(F.count(F.lit(1)).cast("long").alias("df"))
     )
-    # shaped EXACTLY like bm25_search's doc-length aggregate: under a
-    # cache scope bm25_search PERSISTS that relation (r12 — VERDICT r11
+    # shaped EXACTLY like bm25_search's doc-length aggregate:
+    # bm25_search PERSISTS that relation (r12 — VERDICT r11
     # task #4), and Spark's CacheManager substitutes any subtree whose
     # canonical plan matches, so this inner aggregate reads the cached
     # doc lengths (InMemoryRelation in the plan) instead of paying a

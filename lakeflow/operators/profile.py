@@ -20,7 +20,7 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from lakeflow.caching import CacheScope
+from lakeflow.caching import persist
 
 
 def profile_table(
@@ -121,7 +121,6 @@ def mad_outlier_profile(
     k_milli: int = 3500,
     approx: bool = True,
     accuracy: int = 10_000,
-    cache: CacheScope | None = None,
 ) -> DataFrame:
     """Robust per-key anomaly profile via median absolute deviation:
     (keys, n, median_micros, mad_micros, n_outliers), where an outlier
@@ -143,21 +142,18 @@ def mad_outlier_profile(
         if approx
         else (lambda c: F.percentile(c, 0.5))
     )
-    from lakeflow.caching import maybe_persist
-
     v = value.cast("long")
     # base feeds the median aggregate AND the deviation join; dev feeds
-    # the MAD aggregate AND the outlier count — persist both (scope-
-    # aware) so the profile costs one source scan, not three
-    base = maybe_persist(df.select(*key_cols, v.alias("__v")), cache)
+    # the MAD aggregate AND the outlier count — persist both so the
+    # profile costs one source scan, not three
+    base = persist(df.select(*key_cols, v.alias("__v")))
     med = base.groupBy(*key_cols).agg(
         F.floor(pct(F.col("__v")) + F.lit(0.5)).cast("long").alias("median_micros")
     )
-    dev = maybe_persist(
+    dev = persist(
         base.join(med, key_cols).withColumn(
             "__d", F.abs(F.col("__v") - F.col("median_micros"))
-        ),
-        cache,
+        )
     )
     mad = dev.groupBy(*key_cols).agg(
         F.floor(pct(F.col("__d")) + F.lit(0.5)).cast("long").alias("mad_micros")

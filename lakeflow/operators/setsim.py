@@ -47,7 +47,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from lakeflow.caching import CacheScope, active_scope, maybe_persist
+from lakeflow.caching import persist
 
 MICRO = 1_000_000
 
@@ -242,7 +242,7 @@ def _set_arrays(elements: DataFrame, id_col: str) -> DataFrame:
     bound the per-doc rank window in the prefix stage relies on.
     Callers that consume a side's arrays more than once (the batch
     self-join, the incremental tier's shared new side) build this
-    relation ONCE and persist it scope-aware."""
+    relation ONCE and persist it."""
     return elements.groupBy(id_col).agg(F.collect_set("s").alias("__arr"))
 
 
@@ -361,7 +361,6 @@ def setsim_join(
     text_col: str,
     threshold_micros: int = 300_000,
     shingle_n: int = 3,
-    cache: CacheScope | None = None,
 ) -> DataFrame:
     """Exact self set-similarity join: every pair of documents whose
     distinct-shingle Jaccard similarity is >= ``threshold_micros`` /
@@ -401,20 +400,11 @@ def setsim_join(
     Two relations are persisted — the per-doc string arrays
     (:func:`_element_arrays`, built shuffle-free; final verification
     reads them) and their hashed projection (one narrow transform) —
-    and every heavy consumer derives from the hashed one. Pass
-    ``cache=CacheScope()`` (or run under ``scoped_cache``) to bound
-    the persists' lifetime."""
-    arrs = maybe_persist(
-        _element_arrays(df, id_col, text_col, shingle_n), cache
+    and every heavy consumer derives from the hashed one."""
+    arrs = persist(_element_arrays(df, id_col, text_col, shingle_n))
+    hrel = persist(
+        arrs.select(F.col(id_col), _hashed_guarded("__arr").alias("__arr"))
     )
-    # the hashed projection persists ONLY under an explicit cache or an
-    # ambient scope (the bm25 precedent, ADVICE r6/r7): a bare library
-    # call must not leak a second session-lifetime persist per call —
-    # without a scope the hashed transform recomputes narrowly from the
-    # (legacy-persisted) string relation, which is the correct default
-    hrel = arrs.select(F.col(id_col), _hashed_guarded("__arr").alias("__arr"))
-    if cache is not None or active_scope() is not None:
-        hrel = maybe_persist(hrel, cache)
     el = hrel.select(
         F.col(id_col),
         F.size("__arr").cast("long").alias("__sz"),
@@ -458,7 +448,6 @@ def incremental_setsim_pairs(
     text_col: str,
     threshold_micros: int = 300_000,
     shingle_n: int = 3,
-    cache: CacheScope | None = None,
     new_index: DataFrame | None = None,
 ) -> DataFrame:
     """EXACT near-duplicate pairs involving at least one NEW document,
@@ -496,9 +485,7 @@ def incremental_setsim_pairs(
     join's shuffle-width saving is small by construction. Returns
     ({id}_a, {id}_b, jaccard_micros) with id_a < id_b."""
     if new_index is None:
-        new_index = maybe_persist(
-            element_index(new_docs, id_col, text_col, shingle_n), cache
-        )
+        new_index = persist(element_index(new_docs, id_col, text_col, shingle_n))
     a = new_index.select(
         F.col(id_col).alias("ia"), "s", F.col("sz").alias("sza")
     )
@@ -531,10 +518,8 @@ def incremental_setsim_pairs(
         new_index.select(id_col, "s"), id_col, threshold_micros
     )
     # the batch's array relation serves both verify sides of new x new
-    # — build once, persist scope-aware
-    new_arr = maybe_persist(
-        _set_arrays(new_index.select(id_col, "s"), id_col), cache
-    )
+    # — build once
+    new_arr = persist(_set_arrays(new_index.select(id_col, "s"), id_col))
     return (
         pairs_ns.unionByName(
             _verify_pairs(cand_nn, new_arr, new_arr, id_col, threshold_micros)
@@ -550,7 +535,6 @@ def containment_join(
     text_col: str,
     threshold_micros: int = 800_000,
     shingle_n: int = 3,
-    cache: CacheScope | None = None,
 ) -> DataFrame:
     """Exact set-CONTAINMENT join: every (needle, doc) pair where
     ``|N ∩ D| / |N| >= threshold`` over distinct word ``shingle_n``-gram
@@ -578,19 +562,14 @@ def containment_join(
     superset and the output-sized survivor set re-verifies exactly
     against the raw string arrays. Returns
     (needle_id, doc_id, containment_micros)."""
-    n_sarr = maybe_persist(
-        _element_arrays(needles, id_col, text_col, shingle_n), cache
+    n_sarr = persist(_element_arrays(needles, id_col, text_col, shingle_n))
+    h_sarr = persist(_element_arrays(haystack, id_col, text_col, shingle_n))
+    n_arr = persist(
+        n_sarr.select(F.col(id_col), _hashed_guarded("__arr").alias("__arr"))
     )
-    h_sarr = maybe_persist(
-        _element_arrays(haystack, id_col, text_col, shingle_n), cache
+    h_arr = persist(
+        h_sarr.select(F.col(id_col), _hashed_guarded("__arr").alias("__arr"))
     )
-    # hashed projections persist only under a scope (see setsim_join) —
-    # a bare call keeps the legacy two persists, not four
-    n_arr = n_sarr.select(F.col(id_col), _hashed_guarded("__arr").alias("__arr"))
-    h_arr = h_sarr.select(F.col(id_col), _hashed_guarded("__arr").alias("__arr"))
-    if cache is not None or active_scope() is not None:
-        n_arr = maybe_persist(n_arr, cache)
-        h_arr = maybe_persist(h_arr, cache)
     n_el = n_arr.select(F.col(id_col), F.explode("__arr").alias("s"))
     h_el = h_arr.select(F.col(id_col), F.explode("__arr").alias("s"))
     # rarest-first order from the union's doc frequency: an order must

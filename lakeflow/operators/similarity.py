@@ -24,7 +24,7 @@ import hashlib
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from lakeflow.caching import CacheScope
+from lakeflow.caching import persist, scoped_cache
 from lakeflow.functions.hashing import seeded_hash
 from lakeflow.operators.text import explode_shingles, shingles_from_tokens, tokens
 from lakeflow.operators.topk import topk_per_key
@@ -451,8 +451,6 @@ def embedding_near_dup(
     dim: int = 64,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    persist_buckets: bool = True,
-    cache: CacheScope | None = None,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs at corpus scale: sign-LSH
     buckets generate candidates (equi-self-join on (table, bucket) —
@@ -462,16 +460,11 @@ def embedding_near_dup(
     planes reproduces it bit-for-bit. Returns
     (id_a, id_b, cos_micros) with id_a < id_b.
 
-    ``persist_buckets`` caches the (id, table, bucket) relation — rows
-    are 3 longs regardless of embedding width, so even corpus-scale it
-    is far smaller than the vectors — which keeps the n_planes*n_tables
+    The (id, table, bucket) relation is persisted — rows are 3 longs
+    regardless of embedding width, so even corpus-scale it is far
+    smaller than the vectors — which keeps the n_planes*n_tables
     projection folds computed (and codegen'd) once instead of once per
-    self-join side. Pass ``cache=CacheScope()`` (lakeflow.caching) to
-    bound the cache's lifetime: exiting the scope after materializing
-    the result unpersists it. With ``cache=None`` the persist lives
-    until the session ends or the caller runs
-    ``spark.catalog.clearCache()`` (the returned DataFrame is lazy, so
-    this function cannot unpersist for you).
+    self-join side.
 
     Bucket sizing: 2^n_planes buckets per table; see lsh_ann_topk's
     sizing rule. Default n_planes=8 = 256 buckets/table — the floor
@@ -496,10 +489,7 @@ def embedding_near_dup(
             )
         ).alias("z"),
     ).select(id_col, "z.t", "z.b")
-    if persist_buckets:
-        from lakeflow.caching import maybe_persist
-
-        tb = maybe_persist(tb, cache)
+    tb = persist(tb)
     a = tb.select(F.col(id_col).alias(f"{id_col}_a"), "t", "b")
     bb = tb.select(F.col(id_col).alias(f"{id_col}_b"), "t", "b")
     cand = (
@@ -719,7 +709,6 @@ def lsh_candidate_pairs(
     k: int = 8,
     band_size: int = 2,
     max_bucket_size: int | None = None,
-    cache: CacheScope | None = None,
 ) -> DataFrame:
     """Banded LSH over a minhash signature: hash each band, self-join on
     (band_id, band_hash), emit each candidate pair once (id_a < id_b).
@@ -736,12 +725,8 @@ def lsh_candidate_pairs(
     if max_bucket_size is not None:
         # the hot-bucket aggregate is a SECOND consumer of all_bands —
         # without a persist it would re-execute the entire upstream
-        # signature pipeline (shingle explode + md5 + hash-agg) twice.
-        # Pass cache=CacheScope() to bound the persist's lifetime; with
-        # None it lives until the caller clears the session cache.
-        from lakeflow.caching import maybe_persist
-
-        all_bands = maybe_persist(all_bands, cache)
+        # signature pipeline (shingle explode + md5 + hash-agg) twice
+        all_bands = persist(all_bands)
         hot = (
             all_bands.groupBy("band_id", "band_hash")
             .agg(F.count(F.lit(1)).alias("__n"))
@@ -837,8 +822,6 @@ def near_dup_pairs(
     band_size: int = 2,
     shingle_n: int = 3,
     max_bucket_size: int | None = None,
-    persist_shingles: bool = True,
-    cache: CacheScope | None = None,
 ) -> DataFrame:
     """Complete near-duplicate pipeline: MinHash-LSH generates candidate
     pairs, exact n-gram Jaccard verifies them — the verification join
@@ -852,21 +835,11 @@ def near_dup_pairs(
     halves the corpus scans AND computes each shingle's md5 once
     instead of once per occurrence (the dominant cost). At corpus scale
     the persisted relation is (doc_id, shingle) — far smaller than the
-    corpus when shingles repeat; set ``persist_shingles=False`` to trade
-    recompute for memory. Pass ``cache=CacheScope()`` (lakeflow.caching)
-    to bound the persist's lifetime — exit the scope after materializing
-    the result; with ``cache=None`` it lives until the session ends or
-    the caller runs ``spark.catalog.clearCache()`` (the returned
-    DataFrame is lazy, so this function cannot unpersist for you).
-    ``max_bucket_size`` forwards the LSH skew guard (see
+    corpus when shingles repeat. ``max_bucket_size`` forwards the LSH skew guard (see
     lsh_candidate_pairs)."""
-    dsh = explode_shingles(df, id_col, text_col, shingle_n).distinct()
-    if persist_shingles:
-        from lakeflow.caching import maybe_persist
-
-        dsh = maybe_persist(dsh, cache)
+    dsh = persist(explode_shingles(df, id_col, text_col, shingle_n).distinct())
     sig = minhash_from_shingles(dsh, id_col, k)
-    cand = lsh_candidate_pairs(sig, id_col, k, band_size, max_bucket_size, cache)
+    cand = lsh_candidate_pairs(sig, id_col, k, band_size, max_bucket_size)
     sizes = dsh.groupBy(id_col).agg(F.count(F.lit(1)).alias("sz"))
     a = dsh.select(F.col(id_col).alias(f"{id_col}_a"), F.col("s"))
     b = dsh.select(F.col(id_col).alias(f"{id_col}_b"), F.col("s"))
@@ -947,10 +920,9 @@ def mmr_select(
     (the empty-set diversity term is 0).
 
     Shape: the scored candidate relation (corpus scan x broadcast
-    query, exact integer cosine) is built ONCE and persisted under the
-    ambient CacheScope if present; each of the k rounds is then a
-    TakeOrdered(1) over it, with the already-selected vectors folded
-    back in as CODEGEN LITERALS (k bounded, <= k * dim longs on the
+    query, exact integer cosine) is built ONCE and persisted; each of
+    the k rounds is then a TakeOrdered(1) over it, with the
+    already-selected vectors folded back in as CODEGEN LITERALS (k bounded, <= k * dim longs on the
     driver — the kmeans/BPE driver-bounded iteration precedent), so
     no round joins, shuffles, or re-scans the corpus uncached. The
     score stays in exact 1e-12 units (lam_micros * rel_micros -
@@ -974,110 +946,62 @@ def mmr_select(
     dots, the same IEEE double sequence as :func:`cosine_micros`).
     Certification failure falls back to the original distributed
     rounds from that rank on — bit-identical output either way."""
-    from lakeflow.caching import active_scope, maybe_persist
-
-    base = _with_vectors(emb, id_col, vec_col)
-    qrow = (
-        base.filter(
-            F.col(id_col).isin(
-                [
-                    r[0]
-                    for r in emb.filter(query_pred)
-                    .select(F.min(id_col))
-                    .collect()
-                ]
-            )
-        )
-        .withColumnRenamed(id_col, "__qid")
-        .withColumnRenamed("__v", "__qv")
-        .withColumnRenamed("__n2", "__qn2")
-    )
-    cand = (
-        base.join(F.broadcast(qrow), F.col(id_col) != F.col("__qid"))
-        .select(
-            id_col,
-            "__v",
-            "__n2",
-            cosine_micros(
-                dot_long(F.col("__v"), F.col("__qv")),
-                F.col("__n2"),
-                F.col("__qn2"),
-            ).alias("rel_micros"),
-        )
-    )
-    if active_scope() is not None:
-        cand = maybe_persist(cand, None)
-
-    lam = int(lam_micros)
-    picked: list = []  # (rank, id, rel, maxsim, score, vec, n2)
-
-    def _dist_round(rank: int) -> bool:
-        """One original distributed round: TakeOrdered(1) over the
-        scored relation with the picked set folded in as literals.
-        Round 1 and the certification-failure fallback both use it."""
-        c = cand
-        if picked:
-            c = c.filter(~F.col(id_col).isin([p[1] for p in picked]))
-            sims = [
-                cosine_micros(
-                    dot_long(
-                        F.col("__v"), F.array(*[F.lit(x) for x in vec])
-                    ),
-                    F.col("__n2"),
-                    F.lit(n2),
+    with scoped_cache():
+        base = _with_vectors(emb, id_col, vec_col)
+        qrow = (
+            base.filter(
+                F.col(id_col).isin(
+                    [
+                        r[0]
+                        for r in emb.filter(query_pred)
+                        .select(F.min(id_col))
+                        .collect()
+                    ]
                 )
-                for (_, _, _, _, _, vec, n2) in picked
-            ]
-            maxsim = sims[0] if len(sims) == 1 else F.greatest(*sims)
-        else:
-            maxsim = F.lit(0).cast("long")
-        scored = c.select(
-            id_col,
-            "__v",
-            "__n2",
-            "rel_micros",
-            maxsim.alias("maxsim_micros"),
-            (
-                F.lit(lam) * F.col("rel_micros")
-                - F.lit(1_000_000 - lam) * maxsim
-            ).alias("score_e12"),
-        )
-        top = scored.orderBy(
-            F.desc("score_e12"), F.asc(id_col)
-        ).limit(1).collect()
-        if not top:
-            return False
-        r = top[0]
-        picked.append(
-            (
-                rank,
-                r[id_col],
-                r["rel_micros"],
-                r["maxsim_micros"],
-                r["score_e12"],
-                list(r["__v"]),
-                r["__n2"],
             )
+            .withColumnRenamed(id_col, "__qid")
+            .withColumnRenamed("__v", "__qv")
+            .withColumnRenamed("__n2", "__qn2")
         )
-        return True
-
-    def _shortlist_rows():
-        """One distributed pass: every unpicked candidate's score
-        against the FULL current picked set, top-_SHORTLIST collected.
-        The first collected row is the global argmax by construction,
-        so every shortlist window yields at least one certified pick."""
-        sims = [
-            cosine_micros(
-                dot_long(F.col("__v"), F.array(*[F.lit(x) for x in vec])),
-                F.col("__n2"),
-                F.lit(n2),
-            )
-            for (_, _, _, _, _, vec, n2) in picked
-        ]
-        maxsim = sims[0] if len(sims) == 1 else F.greatest(*sims)
-        return (
-            cand.filter(~F.col(id_col).isin([p[1] for p in picked]))
+        cand = (
+            base.join(F.broadcast(qrow), F.col(id_col) != F.col("__qid"))
             .select(
+                id_col,
+                "__v",
+                "__n2",
+                cosine_micros(
+                    dot_long(F.col("__v"), F.col("__qv")),
+                    F.col("__n2"),
+                    F.col("__qn2"),
+                ).alias("rel_micros"),
+            )
+        )
+        cand = persist(cand)
+
+        lam = int(lam_micros)
+        picked: list = []  # (rank, id, rel, maxsim, score, vec, n2)
+
+        def _dist_round(rank: int) -> bool:
+            """One original distributed round: TakeOrdered(1) over the
+            scored relation with the picked set folded in as literals.
+            Round 1 and the certification-failure fallback both use it."""
+            c = cand
+            if picked:
+                c = c.filter(~F.col(id_col).isin([p[1] for p in picked]))
+                sims = [
+                    cosine_micros(
+                        dot_long(
+                            F.col("__v"), F.array(*[F.lit(x) for x in vec])
+                        ),
+                        F.col("__n2"),
+                        F.lit(n2),
+                    )
+                    for (_, _, _, _, _, vec, n2) in picked
+                ]
+                maxsim = sims[0] if len(sims) == 1 else F.greatest(*sims)
+            else:
+                maxsim = F.lit(0).cast("long")
+            scored = c.select(
                 id_col,
                 "__v",
                 "__n2",
@@ -1088,100 +1012,146 @@ def mmr_select(
                     - F.lit(1_000_000 - lam) * maxsim
                 ).alias("score_e12"),
             )
-            .orderBy(F.desc("score_e12"), F.asc(id_col))
-            .limit(_SHORTLIST)
-            .collect()
-        )
-
-    seeded = _dist_round(1)
-    degenerate = False
-    # the certification argument needs score_e12 non-increasing in the
-    # picked set, i.e. a non-negative diversity coefficient: lam
-    # outside [0, 1e6] (never used, but expressible) stays on the
-    # original all-distributed path
-    if seeded and k > 1 and 0 <= lam <= 1_000_000:
-        dim = len(picked[0][5])
-        rank = 2
-        while rank <= k and not degenerate:
-            # maxsim is non-decreasing in the picked set, so score_e12
-            # is non-increasing across rounds: nothing outside this
-            # window can beat the window's boundary score. When a local
-            # pick can no longer certify strictly against the boundary,
-            # REBUILD the window (one more distributed pass with the
-            # grown picked set) instead of falling back per-round.
-            rows = _shortlist_rows()
-            if not rows:
-                break
-            bound = (
-                rows[-1]["score_e12"] if len(rows) == _SHORTLIST else None
-            )
-            local = [
-                {
-                    "id": r[id_col],
-                    "rel": r["rel_micros"],
-                    "maxsim": r["maxsim_micros"],
-                    "vec": list(r["__v"]),
-                    "n2": r["__n2"],
-                }
-                for r in rows
-            ]
-            if not all(
-                r["maxsim"] is not None
-                and r["rel"] is not None
-                and r["n2"] is not None
-                and len(r["vec"]) == dim
-                and all(x is not None for x in r["vec"])
-                for r in local
-            ):
-                degenerate = True  # null/ragged: original rounds below
-                break
-            first = True
-            while rank <= k and local:
-                best = None
-                for cd in local:
-                    score = (
-                        lam * cd["rel"] - (1_000_000 - lam) * cd["maxsim"]
-                    )
-                    key = (-score, cd["id"])
-                    if best is None or key < best[0]:
-                        best = (key, cd, score)
-                _, cd, score = best
-                # the window's first local argmax IS rows[0] (the
-                # collected ordering = the distributed round's pick);
-                # later picks certify strictly against the boundary —
-                # an outside candidate's current score is bounded by
-                # its window score, which is <= bound. A tie cannot
-                # certify (an outside row could tie with a smaller id).
-                if not first and bound is not None and not score > bound:
-                    break  # rebuild the window with the grown set
-                picked.append(
-                    (rank, cd["id"], cd["rel"], cd["maxsim"], score,
-                     cd["vec"], cd["n2"])
+            top = scored.orderBy(
+                F.desc("score_e12"), F.asc(id_col)
+            ).limit(1).collect()
+            if not top:
+                return False
+            r = top[0]
+            picked.append(
+                (
+                    rank,
+                    r[id_col],
+                    r["rel_micros"],
+                    r["maxsim_micros"],
+                    r["score_e12"],
+                    list(r["__v"]),
+                    r["__n2"],
                 )
-                rank += 1
-                first = False
-                local = [x for x in local if x["id"] != cd["id"]]
-                for x in local:
-                    s = _cosine_micros_py(
-                        sum(a_ * b_ for a_, b_ in zip(x["vec"], cd["vec"])),
-                        x["n2"],
-                        cd["n2"],
-                    )
-                    if s is None:
-                        degenerate = True
-                        break
-                    if s > x["maxsim"]:
-                        x["maxsim"] = s
-                if degenerate:
+            )
+            return True
+
+        def _shortlist_rows():
+            """One distributed pass: every unpicked candidate's score
+            against the FULL current picked set, top-_SHORTLIST collected.
+            The first collected row is the global argmax by construction,
+            so every shortlist window yields at least one certified pick."""
+            sims = [
+                cosine_micros(
+                    dot_long(F.col("__v"), F.array(*[F.lit(x) for x in vec])),
+                    F.col("__n2"),
+                    F.lit(n2),
+                )
+                for (_, _, _, _, _, vec, n2) in picked
+            ]
+            maxsim = sims[0] if len(sims) == 1 else F.greatest(*sims)
+            return (
+                cand.filter(~F.col(id_col).isin([p[1] for p in picked]))
+                .select(
+                    id_col,
+                    "__v",
+                    "__n2",
+                    "rel_micros",
+                    maxsim.alias("maxsim_micros"),
+                    (
+                        F.lit(lam) * F.col("rel_micros")
+                        - F.lit(1_000_000 - lam) * maxsim
+                    ).alias("score_e12"),
+                )
+                .orderBy(F.desc("score_e12"), F.asc(id_col))
+                .limit(_SHORTLIST)
+                .collect()
+            )
+
+        seeded = _dist_round(1)
+        degenerate = False
+        # the certification argument needs score_e12 non-increasing in the
+        # picked set, i.e. a non-negative diversity coefficient: lam
+        # outside [0, 1e6] (never used, but expressible) stays on the
+        # original all-distributed path
+        if seeded and k > 1 and 0 <= lam <= 1_000_000:
+            dim = len(picked[0][5])
+            rank = 2
+            while rank <= k and not degenerate:
+                # maxsim is non-decreasing in the picked set, so score_e12
+                # is non-increasing across rounds: nothing outside this
+                # window can beat the window's boundary score. When a local
+                # pick can no longer certify strictly against the boundary,
+                # REBUILD the window (one more distributed pass with the
+                # grown picked set) instead of falling back per-round.
+                rows = _shortlist_rows()
+                if not rows:
                     break
-            if bound is None and not local:
-                break  # the window held EVERY candidate: all consumed
-    # distributed per-round fallback: null/ragged vectors or
-    # out-of-range lam only
-    if seeded:
-        for rank in range(len(picked) + 1, k + 1):
-            if not _dist_round(rank):
-                break
+                bound = (
+                    rows[-1]["score_e12"] if len(rows) == _SHORTLIST else None
+                )
+                local = [
+                    {
+                        "id": r[id_col],
+                        "rel": r["rel_micros"],
+                        "maxsim": r["maxsim_micros"],
+                        "vec": list(r["__v"]),
+                        "n2": r["__n2"],
+                    }
+                    for r in rows
+                ]
+                if not all(
+                    r["maxsim"] is not None
+                    and r["rel"] is not None
+                    and r["n2"] is not None
+                    and len(r["vec"]) == dim
+                    and all(x is not None for x in r["vec"])
+                    for r in local
+                ):
+                    degenerate = True  # null/ragged: original rounds below
+                    break
+                first = True
+                while rank <= k and local:
+                    best = None
+                    for cd in local:
+                        score = (
+                            lam * cd["rel"] - (1_000_000 - lam) * cd["maxsim"]
+                        )
+                        key = (-score, cd["id"])
+                        if best is None or key < best[0]:
+                            best = (key, cd, score)
+                    _, cd, score = best
+                    # the window's first local argmax IS rows[0] (the
+                    # collected ordering = the distributed round's pick);
+                    # later picks certify strictly against the boundary —
+                    # an outside candidate's current score is bounded by
+                    # its window score, which is <= bound. A tie cannot
+                    # certify (an outside row could tie with a smaller id).
+                    if not first and bound is not None and not score > bound:
+                        break  # rebuild the window with the grown set
+                    picked.append(
+                        (rank, cd["id"], cd["rel"], cd["maxsim"], score,
+                         cd["vec"], cd["n2"])
+                    )
+                    rank += 1
+                    first = False
+                    local = [x for x in local if x["id"] != cd["id"]]
+                    for x in local:
+                        s = _cosine_micros_py(
+                            sum(a_ * b_ for a_, b_ in zip(x["vec"], cd["vec"])),
+                            x["n2"],
+                            cd["n2"],
+                        )
+                        if s is None:
+                            degenerate = True
+                            break
+                        if s > x["maxsim"]:
+                            x["maxsim"] = s
+                    if degenerate:
+                        break
+                if bound is None and not local:
+                    break  # the window held EVERY candidate: all consumed
+        # distributed per-round fallback: null/ragged vectors or
+        # out-of-range lam only
+        if seeded:
+            for rank in range(len(picked) + 1, k + 1):
+                if not _dist_round(rank):
+                    break
     spark = emb.sparkSession
     return spark.createDataFrame(
         [(p[0], p[1], p[2], p[3], p[4]) for p in picked],
@@ -1204,8 +1174,7 @@ def kcenter_select(
     cluster-free space summaries). The query-free sibling of
     :func:`mmr_select` (MMR trades relevance against diversity;
     k-center is pure diversity) with the same execution shape: the
-    micro-int vector relation persists once under the ambient scope,
-    each round is a TakeOrdered(1) with the selected vectors folded
+    micro-int vector relation persists once, each round is a TakeOrdered(1) with the selected vectors folded
     back as codegen literals — driver-bounded iteration, no per-round
     shuffle. Returns (rank, ``id_col``, maxcos_micros) where
     maxcos_micros is the pick's max cosine to the set selected BEFORE
@@ -1223,152 +1192,149 @@ def kcenter_select(
     (exact python-int dots, the identical IEEE sequence as
     :func:`cosine_micros`), with the original distributed rounds as
     the fallback. Bit-identical output either way."""
-    from lakeflow.caching import active_scope, maybe_persist
+    with scoped_cache():
+        base = persist(_with_vectors(emb, id_col, vec_col))
 
-    base = _with_vectors(emb, id_col, vec_col)
-    if active_scope() is not None:
-        base = maybe_persist(base, None)
+        picked: list = []  # (rank, id, maxcos, vec, n2)
 
-    picked: list = []  # (rank, id, maxcos, vec, n2)
+        def _dist_round(rank: int) -> bool:
+            c = base
+            if picked:
+                c = c.filter(~F.col(id_col).isin([p[1] for p in picked]))
+                sims = [
+                    cosine_micros(
+                        dot_long(
+                            F.col("__v"), F.array(*[F.lit(x) for x in vec])
+                        ),
+                        F.col("__n2"),
+                        F.lit(n2),
+                    )
+                    for (_, _, _, vec, n2) in picked
+                ]
+                maxcos = sims[0] if len(sims) == 1 else F.greatest(*sims)
+                top = (
+                    c.select(id_col, "__v", "__n2", maxcos.alias("maxcos_micros"))
+                    .orderBy(F.asc("maxcos_micros"), F.asc(id_col))
+                    .limit(1)
+                    .collect()
+                )
+            else:
+                top = (
+                    c.select(id_col, "__v", "__n2", F.lit(0).cast("long").alias("maxcos_micros"))
+                    .orderBy(F.desc("__n2"), F.asc(id_col))
+                    .limit(1)
+                    .collect()
+                )
+            if not top:
+                return False
+            r = top[0]
+            picked.append(
+                (rank, r[id_col], r["maxcos_micros"], list(r["__v"]), r["__n2"])
+            )
+            return True
 
-    def _dist_round(rank: int) -> bool:
-        c = base
-        if picked:
-            c = c.filter(~F.col(id_col).isin([p[1] for p in picked]))
+        def _shortlist_rows():
+            """One distributed pass: every unpicked candidate's max cosine
+            to the FULL current picked set, bottom-_SHORTLIST collected.
+            The first collected row is the global argmin by construction,
+            so every shortlist window yields at least one certified pick."""
             sims = [
                 cosine_micros(
-                    dot_long(
-                        F.col("__v"), F.array(*[F.lit(x) for x in vec])
-                    ),
+                    dot_long(F.col("__v"), F.array(*[F.lit(x) for x in vec])),
                     F.col("__n2"),
                     F.lit(n2),
                 )
                 for (_, _, _, vec, n2) in picked
             ]
             maxcos = sims[0] if len(sims) == 1 else F.greatest(*sims)
-            top = (
-                c.select(id_col, "__v", "__n2", maxcos.alias("maxcos_micros"))
+            return (
+                base.filter(~F.col(id_col).isin([p[1] for p in picked]))
+                .select(id_col, "__v", "__n2", maxcos.alias("maxcos_micros"))
                 .orderBy(F.asc("maxcos_micros"), F.asc(id_col))
-                .limit(1)
+                .limit(_SHORTLIST)
                 .collect()
             )
-        else:
-            top = (
-                c.select(id_col, "__v", "__n2", F.lit(0).cast("long").alias("maxcos_micros"))
-                .orderBy(F.desc("__n2"), F.asc(id_col))
-                .limit(1)
-                .collect()
-            )
-        if not top:
-            return False
-        r = top[0]
-        picked.append(
-            (rank, r[id_col], r["maxcos_micros"], list(r["__v"]), r["__n2"])
-        )
-        return True
 
-    def _shortlist_rows():
-        """One distributed pass: every unpicked candidate's max cosine
-        to the FULL current picked set, bottom-_SHORTLIST collected.
-        The first collected row is the global argmin by construction,
-        so every shortlist window yields at least one certified pick."""
-        sims = [
-            cosine_micros(
-                dot_long(F.col("__v"), F.array(*[F.lit(x) for x in vec])),
-                F.col("__n2"),
-                F.lit(n2),
-            )
-            for (_, _, _, vec, n2) in picked
-        ]
-        maxcos = sims[0] if len(sims) == 1 else F.greatest(*sims)
-        return (
-            base.filter(~F.col(id_col).isin([p[1] for p in picked]))
-            .select(id_col, "__v", "__n2", maxcos.alias("maxcos_micros"))
-            .orderBy(F.asc("maxcos_micros"), F.asc(id_col))
-            .limit(_SHORTLIST)
-            .collect()
-        )
-
-    seeded = _dist_round(1)
-    degenerate = False
-    if seeded and k > 1:
-        dim = len(picked[0][3])
-        rank = 2
-        while rank <= k and not degenerate:
-            # a candidate's max cosine to the picked set is
-            # NON-DECREASING, so nothing outside this window can ever
-            # undercut the window's boundary value; when a local pick
-            # can no longer certify strictly against the boundary,
-            # REBUILD the window with the grown picked set instead of
-            # falling back per-round.
-            rows = _shortlist_rows()
-            if not rows:
-                break
-            bound = (
-                rows[-1]["maxcos_micros"]
-                if len(rows) == _SHORTLIST
-                else None
-            )
-            local = [
-                {
-                    "id": r[id_col],
-                    "maxcos": r["maxcos_micros"],
-                    "vec": list(r["__v"]),
-                    "n2": r["__n2"],
-                }
-                for r in rows
-            ]
-            if not all(
-                r["maxcos"] is not None
-                and r["n2"] is not None
-                and len(r["vec"]) == dim
-                and all(x is not None for x in r["vec"])
-                for r in local
-            ):
-                degenerate = True
-                break
-            first = True
-            while rank <= k and local:
-                best = None
-                for cd in local:
-                    key = (cd["maxcos"], cd["id"])
-                    if best is None or key < best[0]:
-                        best = (key, cd)
-                _, cd = best
-                # the window's first local argmin IS rows[0] (= the
-                # distributed round's pick); later picks certify
-                # strictly — an outside candidate's max cosine is at
-                # least its window value, which is >= bound, and a tie
-                # cannot certify (an outside row could tie with a
-                # smaller id)
-                if not first and bound is not None and not cd["maxcos"] < bound:
-                    break  # rebuild the window with the grown set
-                picked.append(
-                    (rank, cd["id"], cd["maxcos"], cd["vec"], cd["n2"])
-                )
-                rank += 1
-                first = False
-                local = [x for x in local if x["id"] != cd["id"]]
-                for x in local:
-                    s = _cosine_micros_py(
-                        sum(a_ * b_ for a_, b_ in zip(x["vec"], cd["vec"])),
-                        x["n2"],
-                        cd["n2"],
-                    )
-                    if s is None:
-                        degenerate = True
-                        break
-                    if s > x["maxcos"]:
-                        x["maxcos"] = s
-                if degenerate:
+        seeded = _dist_round(1)
+        degenerate = False
+        if seeded and k > 1:
+            dim = len(picked[0][3])
+            rank = 2
+            while rank <= k and not degenerate:
+                # a candidate's max cosine to the picked set is
+                # NON-DECREASING, so nothing outside this window can ever
+                # undercut the window's boundary value; when a local pick
+                # can no longer certify strictly against the boundary,
+                # REBUILD the window with the grown picked set instead of
+                # falling back per-round.
+                rows = _shortlist_rows()
+                if not rows:
                     break
-            if bound is None and not local:
-                break  # the window held EVERY candidate: all consumed
-    # distributed per-round fallback: null/ragged vectors only
-    if seeded:
-        for rank in range(len(picked) + 1, k + 1):
-            if not _dist_round(rank):
-                break
+                bound = (
+                    rows[-1]["maxcos_micros"]
+                    if len(rows) == _SHORTLIST
+                    else None
+                )
+                local = [
+                    {
+                        "id": r[id_col],
+                        "maxcos": r["maxcos_micros"],
+                        "vec": list(r["__v"]),
+                        "n2": r["__n2"],
+                    }
+                    for r in rows
+                ]
+                if not all(
+                    r["maxcos"] is not None
+                    and r["n2"] is not None
+                    and len(r["vec"]) == dim
+                    and all(x is not None for x in r["vec"])
+                    for r in local
+                ):
+                    degenerate = True
+                    break
+                first = True
+                while rank <= k and local:
+                    best = None
+                    for cd in local:
+                        key = (cd["maxcos"], cd["id"])
+                        if best is None or key < best[0]:
+                            best = (key, cd)
+                    _, cd = best
+                    # the window's first local argmin IS rows[0] (= the
+                    # distributed round's pick); later picks certify
+                    # strictly — an outside candidate's max cosine is at
+                    # least its window value, which is >= bound, and a tie
+                    # cannot certify (an outside row could tie with a
+                    # smaller id)
+                    if not first and bound is not None and not cd["maxcos"] < bound:
+                        break  # rebuild the window with the grown set
+                    picked.append(
+                        (rank, cd["id"], cd["maxcos"], cd["vec"], cd["n2"])
+                    )
+                    rank += 1
+                    first = False
+                    local = [x for x in local if x["id"] != cd["id"]]
+                    for x in local:
+                        s = _cosine_micros_py(
+                            sum(a_ * b_ for a_, b_ in zip(x["vec"], cd["vec"])),
+                            x["n2"],
+                            cd["n2"],
+                        )
+                        if s is None:
+                            degenerate = True
+                            break
+                        if s > x["maxcos"]:
+                            x["maxcos"] = s
+                    if degenerate:
+                        break
+                if bound is None and not local:
+                    break  # the window held EVERY candidate: all consumed
+        # distributed per-round fallback: null/ragged vectors only
+        if seeded:
+            for rank in range(len(picked) + 1, k + 1):
+                if not _dist_round(rank):
+                    break
     spark = emb.sparkSession
     return spark.createDataFrame(
         [(p[0], p[1], p[2]) for p in picked],

@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from lakeflow.caching import CacheScope
+from lakeflow.caching import persist
 from lakeflow.functions.hashing import seeded_hash
 
 # marker stopwords per language for the n-gram-free heuristic language ID
@@ -307,7 +307,6 @@ def repeated_span_starts(
     text_col: str = "text",
     n: int = 8,
     min_count: int = 2,
-    cache: CacheScope | None = None,
 ) -> DataFrame:
     """(id, pos) rows: 0-based token positions starting an ``n``-token
     span whose CONTENT occurs at least ``min_count`` times across the
@@ -323,23 +322,19 @@ def repeated_span_starts(
     algorithm; fixed-n gram counting is its scalable streaming-friendly
     approximation (spans longer than n are caught as runs of
     overlapping duplicated n-grams, which the excision below merges)."""
-    from lakeflow.caching import maybe_persist
-    from lakeflow.functions.hashing import seeded_hash
-
     pre = df.select(F.col(id_col), tokens(text_col).alias("__toks"))
     grams = pre.select(
         F.col(id_col),
         F.posexplode(shingles_from_tokens("__toks", n)).alias("pos", "g"),
     )
     # the hashed gram relation feeds BOTH the duplicate-count aggregate
-    # and the probe side of the semi join — persist it (scope-aware) so
-    # the tokenize + n-gram explode runs once, not twice (the same
-    # multi-consumer pattern as the corpus-profile token explode)
-    hashed = maybe_persist(
+    # and the probe side of the semi join — persist it so the tokenize
+    # + n-gram explode runs once, not twice (the same multi-consumer
+    # pattern as the corpus-profile token explode)
+    hashed = persist(
         grams.select(
             F.col(id_col), "pos", seeded_hash(F.col("g"), "span").alias("h")
-        ),
-        cache,
+        )
     )
     dup = (
         hashed.groupBy("h")
@@ -355,7 +350,6 @@ def excise_repeated_spans(
     text_col: str = "text",
     n: int = 8,
     min_count: int = 2,
-    cache: CacheScope | None = None,
 ) -> DataFrame:
     """Remove every corpus-repeated ``n``-token span from each document
     (overlapping spans merge naturally: a token survives only if NO
@@ -370,7 +364,7 @@ def excise_repeated_spans(
     O(tokens x spans); span lists are usually tiny (they only contain
     CORPUS-DUPLICATED material). Exact-integer + md5 arithmetic keeps
     it SQL-oracle-reproducible."""
-    spans = repeated_span_starts(df, id_col, text_col, n, min_count, cache)
+    spans = repeated_span_starts(df, id_col, text_col, n, min_count)
     per_doc = spans.groupBy(id_col).agg(
         F.array_sort(F.collect_list("pos")).alias("__ps")
     )

@@ -13,7 +13,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from lakeflow.catalog import load_table, read_parquet
+from lakeflow.catalog import files_digest, load_table, read_parquet
 from lakeflow.functions.hashing import SQL_SEEDED_HASH
 from lakeflow.operators.dedup import exact_dedup
 from lakeflow.operators.multimodal import extract_metadata, with_binary_payload
@@ -735,11 +735,9 @@ def q_edit_distance_pairs(spark, sf_dir):
     # three consumers (distinct pairs, needed fingerprints, final join)
     # sit downstream of the expensive minhash+LSH subtree — persist the
     # narrow (ids + fingerprints) relation so it materializes once.
-    # Lifetime: the ambient scoped_cache if the runner installed one
-    # (bench does, per query), else the session's.
-    from lakeflow.caching import maybe_persist
+    from lakeflow.caching import persist
 
-    pairs = maybe_persist(pairs, None)
+    pairs = persist(pairs)
     uniq = pairs.select("__fa", "__fb").distinct()
     needed = (
         uniq.select(F.col("__fa").alias("f"))
@@ -918,11 +916,10 @@ def q_corpus_prep(spark, sf_dir):
     scores = lang_scores("text")
     # per-doc stats feed three consumers (per-source totals, the keep
     # filter, the dedup winners) — persist so the regex-heavy scoring
-    # scan runs once; rows are narrow (no text). Lifetime: the ambient
-    # scoped_cache if the runner installed one, else the session's.
-    from lakeflow.caching import maybe_persist
+    # scan runs once; rows are narrow (no text).
+    from lakeflow.caching import persist
 
-    stats = maybe_persist(
+    stats = persist(
         d.select(
             "doc_id",
             "source",
@@ -932,8 +929,7 @@ def q_corpus_prep(spark, sf_dir):
             .cast("long")
             .alias("quality_micros"),
             lang_pred(scores).alias("pred_lang"),
-        ),
-        None,
+        )
     )
     kept = stats.filter(
         (F.col("pred_lang") == "en") & (F.col("quality_micros") >= 500000)
@@ -1082,21 +1078,21 @@ def q_incremental_near_dup(spark, sf_dir):
     new = d.filter(F.col("doc_id") % 10 == 0)
     # in production stored_bands is a parquet table written at corpus
     # build time; here it derives from the same session for the oracle
-    from lakeflow.caching import maybe_persist
+    from lakeflow.caching import persist
 
     # every downstream branch (ids, shingles, sizes, intersection) would
     # otherwise re-derive the band pipeline from the raw scan — the
     # un-persisted form re-scanned documents ~40x in one physical plan.
     # The bands and the candidate set are the SHARED relations; persist
-    # them (scope-aware) so verification reads cached rows.
-    stored_bands = maybe_persist(
-        banded_signatures(old, "doc_id", "text", k=8, band_size=2), None
+    # them so verification reads cached rows.
+    stored_bands = persist(
+        banded_signatures(old, "doc_id", "text", k=8, band_size=2)
     )
-    new_bands = maybe_persist(
-        banded_signatures(new, "doc_id", "text", k=8, band_size=2), None
+    new_bands = persist(
+        banded_signatures(new, "doc_id", "text", k=8, band_size=2)
     )
-    cand = maybe_persist(
-        incremental_candidate_pairs(new_bands, stored_bands, "doc_id"), None
+    cand = persist(
+        incremental_candidate_pairs(new_bands, stored_bands, "doc_id")
     )
 
     # exact-Jaccard verification, shingling ONLY docs candidates touch
@@ -1105,11 +1101,10 @@ def q_incremental_near_dup(spark, sf_dir):
         .union(cand.select(F.col("doc_id_b").alias("doc_id")))
         .distinct()
     )
-    dsh = maybe_persist(
+    dsh = persist(
         explode_shingles(
             d.join(ids, "doc_id", "left_semi"), "doc_id", "text", 3
-        ).distinct(),
-        None,
+        ).distinct()
     )
     sizes = dsh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
     a = dsh.select(F.col("doc_id").alias("doc_id_a"), "s")
@@ -1543,7 +1538,7 @@ _KM_CTE_STORED, _ = _kmeans_cte(
     refs=("§2.12", "J2"),
 )
 def q_incremental_semantic(spark, sf_dir):
-    from lakeflow.caching import maybe_persist
+    from lakeflow.caching import persist
     from lakeflow.operators.kmeans import (
         derive_k,
         incremental_semantic_pairs,
@@ -1560,7 +1555,7 @@ def q_incremental_semantic(spark, sf_dir):
     # the new x stored join once per batch
     k = derive_k(stored.count(), 250)
     cents = kmeans_centroids(stored, k=k, n_iter=2)
-    idx = maybe_persist(semantic_index(stored, cents), None)
+    idx = persist(semantic_index(stored, cents))
     return incremental_semantic_pairs(new, idx, cents, min_cos_micros=300_000)
 
 
@@ -1680,14 +1675,14 @@ _TMIX_HASH = SQL_SEEDED_HASH.format(seed="tmix", x="CAST(doc_id AS VARCHAR)")
     refs=("§2.12", "A5"),
 )
 def q_temperature_mix(spark, sf_dir):
-    from lakeflow.caching import maybe_persist
+    from lakeflow.caching import persist
     from lakeflow.operators.sampling import (
         temperature_mix_rates,
         temperature_mix_sample,
     )
 
     d = load_table(spark, sf_dir, "documents")
-    rates = maybe_persist(temperature_mix_rates(d, "source", 300), None)
+    rates = persist(temperature_mix_rates(d, "source", 300))
     kept = temperature_mix_sample(d, "doc_id", "source", 300, rates=rates)
     kc = kept.groupBy("source").agg(F.count(F.lit(1)).alias("n_kept"))
     return rates.join(kc, "source", "left").select(
@@ -2302,28 +2297,18 @@ def q_pq_ann(spark, sf_dir):
 
 
 def _corpus_cache_key(sf_dir: str, table: str = "embeddings") -> str:
-    """Cache key for per-corpus prebuilt artifacts: md5 over the
-    corpus path PLUS a content fingerprint (size + mtime of every file
-    under the table's parquet path — the same signals Spark's own file
-    index caches invalidate on). ADVICE r7: a path-only key silently
-    serves a stale index when the corpus at that path is regenerated
-    with different contents; stat-ing a handful of files per build is
-    free next to the build."""
+    """Cache key for per-corpus prebuilt artifacts: the content digest
+    (``catalog.files_digest`` — path, size and mtime of every file under
+    the table's parquet path) of the absolute table path. ADVICE r7: a
+    path-only key silently serves a stale index when the corpus at that
+    path is regenerated with different contents; stat-ing the table's
+    files per build is free next to the build."""
     import hashlib
     import os
 
-    h = hashlib.md5(os.path.abspath(sf_dir).encode())
-    t = os.path.join(sf_dir, f"{table}.parquet")
-    paths = [t]
-    if os.path.isdir(t):
-        paths = [os.path.join(t, f) for f in sorted(os.listdir(t))]
-    for p in paths:
-        try:
-            st = os.stat(p)
-            h.update(f"|{os.path.basename(p)}:{st.st_size}:{st.st_mtime_ns}".encode())
-        except OSError:
-            h.update(f"|{os.path.basename(p)}:absent".encode())
-    return h.hexdigest()[:16]
+    t = os.path.abspath(os.path.join(sf_dir, f"{table}.parquet"))
+    digest = files_digest(t) or hashlib.blake2b(t.encode(), digest_size=16).digest()
+    return digest.hex()[:16]
 
 
 def _ivf_centroids(spark, sf_dir: str, n_cells: int = 16) -> list[list[int]]:
@@ -4072,18 +4057,16 @@ def q_data_selection(spark, sf_dir):
     from lakeflow.operators.corpus import importance_profile
     from lakeflow.operators.sampling import pps_systematic_sample
 
-    from lakeflow.caching import maybe_persist
+    from lakeflow.caching import persist
 
     d = load_table(spark, sf_dir, "documents")
     # the profile feeds the min aggregate AND the shifted main path —
-    # persist it (under the ambient scope so the bench's scoped_cache
-    # releases it) so the score join + per-doc reduction run once, not
+    # persist it so the score join + per-doc reduction run once, not
     # twice (the internal token-explode persist only covers the scan)
-    prof = maybe_persist(
+    prof = persist(
         importance_profile(
             d, "doc_id", "text", F.col("source").isin("src1", "src3")
-        ).select("doc_id", "n_tokens", "weight_bits"),
-        None,
+        ).select("doc_id", "n_tokens", "weight_bits")
     )
     mn = prof.agg(F.min("weight_bits").alias("__m"))
     # min-shift to positive weights; aliases break the shared-lineage
@@ -4128,7 +4111,7 @@ def q_data_selection(spark, sf_dir):
     refs=("§2.12", "J2", "N7"),
 )
 def q_incremental_setsim(spark, sf_dir):
-    from lakeflow.caching import maybe_persist
+    from lakeflow.caching import persist
     from lakeflow.operators.setsim import element_index, incremental_setsim_pairs
 
     d = load_table(spark, sf_dir, "documents")
@@ -4139,7 +4122,7 @@ def q_incremental_setsim(spark, sf_dir):
     # derives it in-flight for self-containment, so persist it — its
     # two consumers (shared-element candidate join, verify arrays)
     # must not re-shingle 90% of the corpus each
-    idx = maybe_persist(element_index(stored, "doc_id", "text"), None)
+    idx = persist(element_index(stored, "doc_id", "text"))
     return incremental_setsim_pairs(new, idx, "doc_id", "text", 250_000)
 
 
@@ -4406,13 +4389,12 @@ def q_fs_linkage(spark, sf_dir):
         scored_candidates,
     )
 
-    from lakeflow.caching import maybe_persist
+    from lakeflow.caching import persist
 
     left, right = _linkage_frames(spark, sf_dir)
-    # scoped persist: the EM fit re-aggregates `scored` once per round
-    # and fs_posteriors scans it again — registered with the ambient
-    # scoped_cache so the bench run releases it per-query.
-    scored = maybe_persist(
+    # the EM fit re-aggregates `scored` once per round and
+    # fs_posteriors scans it again
+    scored = persist(
         scored_candidates(
             left,
             right,
@@ -4430,8 +4412,7 @@ def q_fs_linkage(spark, sf_dir):
                 ),
             ],
             max_block_size=60,
-        ),
-        None,
+        )
     )
     params = fit_fs_em(scored, 2, agree_threshold_micros=800_000, n_rounds=2)
     out = fs_posteriors(
@@ -4730,7 +4711,7 @@ _QC_F, _QC_U1, _QC_U2, _QC_W, _QC_DOT = _qc_sql_parts()
     refs=("§2.12", "A5", "F1"),
 )
 def q_quality_classifier(spark, sf_dir):
-    from lakeflow.caching import maybe_persist
+    from lakeflow.caching import persist
     from lakeflow.operators.classifier import (
         fit_linear_filter,
         score_linear,
@@ -4739,14 +4720,14 @@ def q_quality_classifier(spark, sf_dir):
 
     d = load_table(spark, sf_dir, "documents")
     feats = text_feature_micros("text")
-    labeled = maybe_persist(
+    # two fit epochs + the scoring pass share the scan
+    labeled = persist(
         d.withColumn(
             "__y",
             F.when(F.col("source").isin("src1", "src3"), 1)
             .otherwise(-1)
             .cast("long"),
-        ),
-        None,  # two fit epochs + the scoring pass share the scan
+        )
     )
     w = fit_linear_filter(labeled, "__y", feats, n_epochs=2)
     out = score_linear(labeled, w, feats)
@@ -5642,7 +5623,7 @@ def q_grouped_loghist(spark, sf_dir):
     refs=("§2.12",),
 )
 def q_snapshot_staleness(spark, sf_dir):
-    from lakeflow.caching import maybe_persist
+    from lakeflow.caching import persist
     from lakeflow.operators.apss import snapshot_staleness, weighted_terms
 
     docs = load_table(spark, sf_dir, "documents")
@@ -5651,7 +5632,7 @@ def q_snapshot_staleness(spark, sf_dir):
     # the snapshot relation feeds both the per-term df map and the
     # bucket-occupancy side — persist across the branches (the
     # q_data_selection precedent) so the weight pipeline runs once
-    sw = maybe_persist(weighted_terms(stored, "doc_id", "text"), None)
+    sw = persist(weighted_terms(stored, "doc_id", "text"))
     return snapshot_staleness(batch, sw, "doc_id", "text")
 
 
@@ -5720,7 +5701,7 @@ def _band_staleness_oracle() -> str:
     refs=("§2.12",),
 )
 def q_band_staleness(spark, sf_dir):
-    from lakeflow.caching import maybe_persist
+    from lakeflow.caching import persist
     from lakeflow.operators.profile import occupancy_staleness
     from lakeflow.operators.text import simhash16
 
@@ -5733,8 +5714,8 @@ def q_band_staleness(spark, sf_dir):
     # (totals + per-bin terms), and without the persist each
     # consumption re-runs BOTH simhash pipelines — measured 3.8 s vs
     # ~1 s at sf0.1
-    stored = maybe_persist(band(docs.filter(F.col("doc_id") % 3 != 0)), None)
-    batch = maybe_persist(band(docs.filter(F.col("doc_id") % 3 == 0)), None)
+    stored = persist(band(docs.filter(F.col("doc_id") % 3 != 0)))
+    batch = persist(band(docs.filter(F.col("doc_id") % 3 == 0)))
     return occupancy_staleness(stored, batch, "band")
 
 
@@ -5854,7 +5835,7 @@ def q_apss_join(spark, sf_dir):
     refs=("§2.12",),
 )
 def q_incremental_apss(spark, sf_dir):
-    from lakeflow.caching import maybe_persist
+    from lakeflow.caching import persist
     from lakeflow.operators.apss import (
         apss_prefix_index,
         incremental_apss_pairs,
@@ -5869,11 +5850,10 @@ def q_incremental_apss(spark, sf_dir):
     # builds them once; batches read them); here the query simulates
     # that by persisting the just-built relations — without this every
     # downstream branch would re-run the stored corpus's weight
-    # aggregates (under the ambient scope in bench, session-lifetime in
-    # the gate — the q_data_selection precedent)
-    sw = maybe_persist(weighted_terms(stored, "doc_id", "text"), None)
-    pre = maybe_persist(apss_prefix_index(sw, "doc_id", 850_000), None)
-    nw = maybe_persist(snapshot_weights(new, sw, "doc_id", "text"), None)
+    # aggregates (the q_data_selection precedent)
+    sw = persist(weighted_terms(stored, "doc_id", "text"))
+    pre = persist(apss_prefix_index(sw, "doc_id", 850_000))
+    nw = persist(snapshot_weights(new, sw, "doc_id", "text"))
     return incremental_apss_pairs(
         new, sw, pre, "doc_id", "text", 850_000, new_weights=nw
     )
@@ -6170,7 +6150,7 @@ def q_kcenter_select(spark, sf_dir):
     "selection for eval-set curation where plain cosine top-k returns "
     "k near-copies of one neighborhood. The scored candidate relation "
     "(corpus scan x broadcast query, exact integer cosine) builds "
-    "once and persists under the ambient scope; each of the 5 rounds "
+    "once and persists; each of the 5 rounds "
     "is a TakeOrdered(1) with the selected vectors folded back as "
     "codegen literals (<= k*dim driver longs, the kmeans/BPE bounded-"
     "iteration precedent) — no per-round shuffle or join. Scores stay "

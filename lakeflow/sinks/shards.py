@@ -25,7 +25,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from lakeflow.functions.hashing import SQL_SEEDED_HASH, seeded_hash
+from lakeflow.functions.hashing import seeded_hash
 
 
 def with_shard(
@@ -36,11 +36,6 @@ def with_shard(
     semantics agree)."""
     h = seeded_hash(F.col(key_col).cast("string"), seed)
     return df.withColumn("shard", (h % F.lit(n_shards)).cast("int"))
-
-
-def sql_shard(key_expr: str, n_shards: int, seed: str = "shard") -> str:
-    """DuckDB mirror of :func:`with_shard`'s shard expression."""
-    return f"CAST({SQL_SEEDED_HASH.format(seed=seed, x=key_expr)} % {n_shards} AS INT)"
 
 
 def write_training_shards(

@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import StructType
 
-from lakeflow.caching import scoped_cache
+from lakeflow.caching import persist
 from lakeflow.operators.text import (
     lang_pred,
     lang_scores,
@@ -135,25 +135,22 @@ def stream_neardup_index(
     )
 
     def _batch(batch, batch_id: int) -> None:
-        bands = banded_signatures(batch, id_col, text_col, k, band_size)
-        bands = bands.persist()  # two consumers: pairs plan + index append
-        try:
-            stored = read_target_if_exists(spark, index_path)
-            if stored is None:
-                stored = bands.limit(0)  # first batch: new x new only
-            elif (
-                staleness_path is not None
-                and not stored.isEmpty()
-                and not bands.isEmpty()
-            ):
-                append_staleness(
-                    band_staleness(stored, bands, id_col), batch_id, staleness_path
-                )
-            pairs = incremental_candidate_pairs(bands, stored, id_col)
-            pairs.write.mode("append").parquet(pairs_path)
-            bands.write.mode("append").parquet(index_path)
-        finally:
-            bands.unpersist()
+        # two consumers: pairs plan + index append
+        bands = persist(banded_signatures(batch, id_col, text_col, k, band_size))
+        stored = read_target_if_exists(spark, index_path)
+        if stored is None:
+            stored = bands.limit(0)  # first batch: new x new only
+        elif (
+            staleness_path is not None
+            and not stored.isEmpty()
+            and not bands.isEmpty()
+        ):
+            append_staleness(
+                band_staleness(stored, bands, id_col), batch_id, staleness_path
+            )
+        pairs = incremental_candidate_pairs(bands, stored, id_col)
+        pairs.write.mode("append").parquet(pairs_path)
+        bands.write.mode("append").parquet(index_path)
 
     return run_batches(stream_ndjson(spark, path, schema), checkpoint, _batch)
 
@@ -616,42 +613,39 @@ def stream_entity_index(
     )
 
     def _batch(batch, batch_id: int) -> None:
-        batch = batch.persist()  # three consumers: pairs, resolve, append
-        try:
-            stored = read_target_if_exists(spark, records_path)
-            if stored is None:
-                stored = batch.limit(0)  # first batch: new x new only
-            stored_asgn = read_target_if_exists(spark, entities_path)
-            if stored_asgn is None:
-                stored_asgn = (
-                    batch.select(
-                        F.col(id_col), F.col(id_col).alias("entity_id")
-                    ).limit(0)
-                )
-            pairs = incremental_linkage_pairs(
-                batch,
-                stored,
-                id_col,
-                fields,
-                [F.expr(s) for s in block_keys_sql],
-                threshold_micros,
-                max_block_size,
-            ).filter("match")
-            updated = incremental_resolve_entities(
-                pairs,
-                stored_asgn.select(id_col, "entity_id"),
-                batch,
-                id_col,
-            ).withColumn("__b", F.lit(batch_id))
-            # latest-wins upsert: the refresh covers ALL ids, so the
-            # new batch's assignment replaces every stale row; fenced
-            # swap keeps readers consistent mid-refresh
-            merge_upsert(
-                spark, entities_path, updated, [id_col], "__b"
+        batch = persist(batch)  # three consumers: pairs, resolve, append
+        stored = read_target_if_exists(spark, records_path)
+        if stored is None:
+            stored = batch.limit(0)  # first batch: new x new only
+        stored_asgn = read_target_if_exists(spark, entities_path)
+        if stored_asgn is None:
+            stored_asgn = (
+                batch.select(
+                    F.col(id_col), F.col(id_col).alias("entity_id")
+                ).limit(0)
             )
-            batch.write.mode("append").parquet(records_path)
-        finally:
-            batch.unpersist()
+        pairs = incremental_linkage_pairs(
+            batch,
+            stored,
+            id_col,
+            fields,
+            [F.expr(s) for s in block_keys_sql],
+            threshold_micros,
+            max_block_size,
+        ).filter("match")
+        updated = incremental_resolve_entities(
+            pairs,
+            stored_asgn.select(id_col, "entity_id"),
+            batch,
+            id_col,
+        ).withColumn("__b", F.lit(batch_id))
+        # latest-wins upsert: the refresh covers ALL ids, so the
+        # new batch's assignment replaces every stale row; fenced
+        # swap keeps readers consistent mid-refresh
+        merge_upsert(
+            spark, entities_path, updated, [id_col], "__b"
+        )
+        batch.write.mode("append").parquet(records_path)
 
     return run_batches(stream_ndjson(spark, path, schema), checkpoint, _batch)
 
@@ -735,31 +729,24 @@ def stream_exact_neardup_index(
     from lakeflow.operators.setsim import element_index, incremental_setsim_pairs
 
     def _batch(batch, batch_id: int) -> None:
-        idx_rows = element_index(batch, id_col, text_col, shingle_n)
-        idx_rows = idx_rows.persist()  # two consumers: pairs + append
-        try:
-            stored = read_target_if_exists(spark, index_path)
-            if stored is None:
-                stored = idx_rows.limit(0)  # first batch: new x new only
-            # the persisted batch index is passed straight in (the batch
-            # is shingled ONCE per micro-batch), and any persists the
-            # operator takes internally ride a batch-scoped cache —
-            # without the scope each micro-batch would leak one
-            # session-lifetime persist until executors fill up
-            with scoped_cache():
-                pairs = incremental_setsim_pairs(
-                    batch,
-                    stored,
-                    id_col,
-                    text_col,
-                    threshold_micros,
-                    shingle_n,
-                    new_index=idx_rows,
-                )
-                pairs.write.mode("append").parquet(pairs_path)
-            idx_rows.write.mode("append").parquet(index_path)
-        finally:
-            idx_rows.unpersist()
+        # two consumers: pairs + append
+        idx_rows = persist(element_index(batch, id_col, text_col, shingle_n))
+        stored = read_target_if_exists(spark, index_path)
+        if stored is None:
+            stored = idx_rows.limit(0)  # first batch: new x new only
+        # the persisted batch index is passed straight in (the batch is
+        # shingled ONCE per micro-batch)
+        pairs = incremental_setsim_pairs(
+            batch,
+            stored,
+            id_col,
+            text_col,
+            threshold_micros,
+            shingle_n,
+            new_index=idx_rows,
+        )
+        pairs.write.mode("append").parquet(pairs_path)
+        idx_rows.write.mode("append").parquet(index_path)
 
     return run_batches(stream_ndjson(spark, path, schema), checkpoint, _batch)
 
@@ -815,39 +802,35 @@ def stream_semantic_index(
     asg_path = f"{index_path}/assignments"
 
     def _batch(batch, batch_id: int) -> None:
-        new_idx = semantic_index(batch, cents, id_col, vec_col)
-        new_idx = new_idx.persist()  # two consumers: pairs + append
-        try:
-            stored = read_target_if_exists(spark, asg_path)
-            if stored is None:
-                stored = new_idx.limit(0)  # first batch: new x new only
-            elif (
-                staleness_path is not None
-                and not stored.isEmpty()
-                and not new_idx.isEmpty()
-            ):
-                stats = occupancy_staleness(
-                    # replay hygiene: duplicate (id, cell) rows from a
-                    # replayed append must not double-count occupancy
-                    stored.select(id_col, "cell").distinct().select("cell"),
-                    new_idx.select("cell"),
-                    "cell",
-                )
-                append_staleness(stats, batch_id, staleness_path)
-            with scoped_cache():
-                pairs = incremental_semantic_pairs(
-                    batch,
-                    stored,
-                    cents,
-                    min_cos_micros,
-                    id_col,
-                    vec_col,
-                    new_index=new_idx,
-                )
-                pairs.write.mode("append").parquet(pairs_path)
-            new_idx.write.mode("append").parquet(asg_path)
-        finally:
-            new_idx.unpersist()
+        # two consumers: pairs + append
+        new_idx = persist(semantic_index(batch, cents, id_col, vec_col))
+        stored = read_target_if_exists(spark, asg_path)
+        if stored is None:
+            stored = new_idx.limit(0)  # first batch: new x new only
+        elif (
+            staleness_path is not None
+            and not stored.isEmpty()
+            and not new_idx.isEmpty()
+        ):
+            stats = occupancy_staleness(
+                # replay hygiene: duplicate (id, cell) rows from a
+                # replayed append must not double-count occupancy
+                stored.select(id_col, "cell").distinct().select("cell"),
+                new_idx.select("cell"),
+                "cell",
+            )
+            append_staleness(stats, batch_id, staleness_path)
+        pairs = incremental_semantic_pairs(
+            batch,
+            stored,
+            cents,
+            min_cos_micros,
+            id_col,
+            vec_col,
+            new_index=new_idx,
+        )
+        pairs.write.mode("append").parquet(pairs_path)
+        new_idx.write.mode("append").parquet(asg_path)
 
     return run_batches(stream_ndjson(spark, path, schema), checkpoint, _batch)
 
@@ -995,26 +978,22 @@ def stream_apss_index(
                 batch_id,
                 staleness_path,
             )
-        new_w = snapshot_weights(batch, stored_w, id_col, text_col)
-        new_w = new_w.persist()  # three consumers: pairs + both appends
-        try:
-            with scoped_cache():
-                pairs = incremental_apss_pairs(
-                    batch,
-                    stored_w,
-                    stored_p,
-                    id_col,
-                    text_col,
-                    threshold_micros,
-                    new_weights=new_w,
-                )
-                pairs.write.mode("append").parquet(pairs_path)
-            new_w.write.mode("append").parquet(weights_path)
-            apss_prefix_index(new_w, id_col, threshold_micros).write.mode(
-                "append"
-            ).parquet(prefix_path)
-        finally:
-            new_w.unpersist()
+        # three consumers: pairs + both appends
+        new_w = persist(snapshot_weights(batch, stored_w, id_col, text_col))
+        pairs = incremental_apss_pairs(
+            batch,
+            stored_w,
+            stored_p,
+            id_col,
+            text_col,
+            threshold_micros,
+            new_weights=new_w,
+        )
+        pairs.write.mode("append").parquet(pairs_path)
+        new_w.write.mode("append").parquet(weights_path)
+        apss_prefix_index(new_w, id_col, threshold_micros).write.mode(
+            "append"
+        ).parquet(prefix_path)
 
     return run_batches(stream_ndjson(spark, path, schema), checkpoint, _batch)
 
@@ -1132,10 +1111,9 @@ def stream_contamination_guard(
     from lakeflow.operators.setsim import containment_join
 
     def _batch(batch, batch_id: int) -> None:
-        with scoped_cache():
-            flags = containment_join(
-                needles, batch, id_col, text_col, threshold_micros, shingle_n
-            )
-            flags.write.mode("append").parquet(flags_path)
+        flags = containment_join(
+            needles, batch, id_col, text_col, threshold_micros, shingle_n
+        )
+        flags.write.mode("append").parquet(flags_path)
 
     return run_batches(stream_ndjson(spark, path, schema), checkpoint, _batch)

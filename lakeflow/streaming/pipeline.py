@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import StructType
 
+from lakeflow.caching import scoped_cache
 from lakeflow.sinks.merge import merge_upsert, read_target_if_exists
 
 
@@ -54,13 +55,20 @@ def run_batches(
     """The one foreachBatch writer every streaming maintainer uses:
     call ``fn(batch, batch_id)`` on each micro-batch of everything
     available at start, then stop (``availableNow``); ``checkpoint``
-    holds the file-source offsets and the batch commit log. Returns
-    the started StreamingQuery. Spark re-runs a batch id whose ``fn``
+    holds the file-source offsets and the batch commit log. Each call
+    runs inside its own ``scoped_cache``, so whatever the batch
+    persists is released when the batch returns. Returns the started
+    StreamingQuery. Spark re-runs a batch id whose ``fn``
     failed before the batch committed; what each maintainer's writes
     do on that replay is stated once in README.md, "Streaming
     replay"."""
+
+    def _scoped(batch: DataFrame, batch_id: int) -> None:
+        with scoped_cache():
+            fn(batch, batch_id)
+
     return (
-        stream.writeStream.foreachBatch(fn)
+        stream.writeStream.foreachBatch(_scoped)
         .option("checkpointLocation", checkpoint)
         .trigger(availableNow=True)
         .start()

@@ -614,6 +614,30 @@ def test_corpus_cache_key_tracks_content(tmp_path):
     assert _corpus_cache_key(str(d)) != kd1
 
 
+def test_corpus_cache_key_is_the_catalog_files_digest(tmp_path):
+    # one content fingerprint: the artifact key is catalog.files_digest
+    # of the table path, the same digest read_parquet's schema memo
+    # keys on — equal while the files are unchanged, different once
+    # one part file under embeddings.parquet is rewritten
+    import os
+
+    from lakeflow.catalog import files_digest
+    from lakeflow.plans.llm_ops import _corpus_cache_key
+
+    t = tmp_path / "embeddings.parquet"
+    t.mkdir()
+    (t / "part-0.parquet").write_bytes(b"a")
+    (t / "part-1.parquet").write_bytes(b"b")
+    k1 = _corpus_cache_key(str(tmp_path))
+    assert k1 == _corpus_cache_key(str(tmp_path))
+    assert k1 == files_digest(str(t)).hex()[:16]
+    part = t / "part-1.parquet"
+    part.write_bytes(b"c")  # same size: only the mtime moves
+    st = os.stat(part)
+    os.utime(part, ns=(st.st_atime_ns, st.st_mtime_ns + 1_000_000))
+    assert _corpus_cache_key(str(tmp_path)) != k1
+
+
 def test_ivf_serving_dedups_replay_duplicated_assignments(spark):
     # ADVICE r9 (medium): stream_ivf_assign replays append duplicate
     # (id, cell) rows; the serving join must distinct() them or a

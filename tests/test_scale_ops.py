@@ -187,78 +187,95 @@ def test_partitioned_write_prunes_partitions(spark, tmp_path):
     )[1].split("]", 1)[0]
 
 
+def _cache_registry_empty(spark):
+    # the CacheManager registry, not getPersistentRDDs: persist()
+    # registers a plan immediately and unpersist() removes it, while
+    # the RDD-level view only fills in if AQE actually materializes
+    # the cache (it may satisfy the job via exchange reuse instead)
+    # and also shows localCheckpoint RDDs leaked by OTHER tests
+    return spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 def test_cache_scope_releases_operator_persists(spark):
     # materialize-and-release: operators that persist shared
     # intermediates (near_dup_pairs' distinct shingles + skew-guard
-    # bands, embedding_near_dup's buckets) must leave NO session-
-    # lifetime cached relations once the caller's CacheScope closes
-    from lakeflow.caching import CacheScope
+    # bands, embedding_near_dup's buckets) must leave NO cached
+    # relations once the caller's scoped_cache closes
+    from lakeflow.caching import scoped_cache
     from lakeflow.operators.similarity import embedding_near_dup, near_dup_pairs
 
-    def cache_registry_empty():
-        # the CacheManager registry, not getPersistentRDDs: persist()
-        # registers a plan immediately and unpersist() removes it, while
-        # the RDD-level view only fills in if AQE actually materializes
-        # the cache (it may satisfy the job via exchange reuse instead)
-        # and also shows localCheckpoint RDDs leaked by OTHER tests
-        return spark._jsparkSession.sharedState().cacheManager().isEmpty()
-
     spark.catalog.clearCache()
-    assert cache_registry_empty()
+    assert _cache_registry_empty(spark)
     docs = load_table(spark, SF, "documents")
     emb = load_table(spark, SF, "embeddings")
-    with CacheScope() as scope:
-        pairs = near_dup_pairs(
-            docs, "doc_id", "text", max_bucket_size=50, cache=scope
-        )
+    with scoped_cache() as scope:
+        pairs = near_dup_pairs(docs, "doc_id", "text", max_bucket_size=50)
         n_pairs = pairs.count()  # materialize INSIDE the scope
-        assert not cache_registry_empty()  # relations really registered
-        edup = embedding_near_dup(emb, 990_000, cache=scope)
+        assert not _cache_registry_empty(spark)  # relations really registered
+        edup = embedding_near_dup(emb, 990_000)
         n_edup = edup.count()
-    assert cache_registry_empty(), "CacheScope.__exit__ must unpersist everything"
+    assert _cache_registry_empty(spark), "scoped_cache exit must unpersist everything"
     assert n_pairs >= 0 and n_edup >= 0
     # release() is idempotent
-    scope.release()
-
-
-def test_cache_scope_explicit_release(spark):
-    from lakeflow.caching import CacheScope
-
-    scope = CacheScope()
-    df = scope.persist(spark.range(100))
-    assert df.count() == 100
-    assert scope.release() == 1
     assert scope.release() == 0
 
 
+def test_cache_scope_explicit_release(spark):
+    from lakeflow.caching import persist, scoped_cache
+
+    with scoped_cache() as scope:
+        df = persist(spark.range(100))
+        assert df.count() == 100
+        assert scope.release() == 1
+        assert scope.release() == 0
+
+
 def test_scoped_cache_releases_registry_query_persists(spark):
-    # driver-contract queries are fixed at (spark, sf_dir) and cannot
-    # thread a cache= handle; the ambient scoped_cache must capture
-    # every maybe_persist they trigger and release it on exit — the
-    # bench's per-query lifetime (no blanket clearCache needed)
-    from lakeflow.caching import active_scope, scoped_cache
+    # driver-contract queries are fixed at (spark, sf_dir); the
+    # scoped_cache around them must capture every persist they trigger
+    # and release it on exit — the bench's per-query lifetime (no
+    # blanket clearCache needed)
+    from lakeflow.caching import scoped_cache
     from lakeflow.plans import QUERIES
 
-    def cache_registry_empty():
-        return spark._jsparkSession.sharedState().cacheManager().isEmpty()
-
     spark.catalog.clearCache()
-    assert cache_registry_empty()
-    assert active_scope() is None
+    assert _cache_registry_empty(spark)
     with scoped_cache():
-        assert active_scope() is not None
         out = QUERIES["q_near_dup_pipeline"].fn(spark, SF)
         assert out.count() >= 0  # materialize INSIDE the scope
-        assert not cache_registry_empty()  # the shingle persist landed
-    assert active_scope() is None
-    assert cache_registry_empty(), "scoped_cache exit must release the persists"
+        assert not _cache_registry_empty(spark)  # the shingle persist landed
+    assert _cache_registry_empty(spark), "scoped_cache exit must release the persists"
 
 
 def test_scoped_cache_nests(spark):
-    from lakeflow.caching import active_scope, scoped_cache
+    # a persist joins the INNERMOST open scope: the inner exit releases
+    # only the inner scope's relations, the outer exit the outer's
+    from pyspark import StorageLevel
 
+    from lakeflow.caching import persist, scoped_cache
+
+    spark.catalog.clearCache()
     with scoped_cache() as outer:
+        a = persist(spark.range(10))
         with scoped_cache() as inner:
-            assert active_scope() is inner
-        assert active_scope() is outer
-    assert active_scope() is None
+            b = persist(spark.range(20))
+            assert a.storageLevel != StorageLevel.NONE
+            assert b.storageLevel != StorageLevel.NONE
+        assert b.storageLevel == StorageLevel.NONE  # inner exit released b
+        assert a.storageLevel != StorageLevel.NONE  # ... and not a
+        assert inner.release() == 0
+        c = persist(spark.range(30))  # after the inner exit: joins outer
+    assert a.storageLevel == StorageLevel.NONE
+    assert c.storageLevel == StorageLevel.NONE
+    assert outer.release() == 0
+    assert _cache_registry_empty(spark)
+
+
+def test_unscoped_persist_lives_for_the_session(spark):
+    from pyspark import StorageLevel
+
+    from lakeflow.caching import persist
+
+    df = persist(spark.range(40))
+    assert df.storageLevel == StorageLevel.MEMORY_AND_DISK
+    df.unpersist()

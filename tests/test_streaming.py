@@ -947,6 +947,50 @@ def test_stream_ivf_assign_staleness_fresh_index(spark, tmp_path):
     assert st[0]["n_stored"] == 6 and st[0]["n_batch"] == 4
 
 
+def test_stream_apss_index_leaves_no_cached_relations(spark, tmp_path):
+    # run_batches opens one scoped_cache per batch: everything a batch
+    # persists (the snapshot weights, the operator's members/candidates,
+    # the staleness probe) is released when the batch returns, and
+    # apss_index_fit releases what its fit persisted before returning
+    from lakeflow.operators.apss import apss_index_fit
+    from lakeflow.streaming.corpus_intake import stream_apss_index
+
+    def cache_registry_empty():
+        return spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+    src = str(tmp_path / "docs")
+    idx = str(tmp_path / "index")
+    prs = str(tmp_path / "pairs")
+    ck = str(tmp_path / "ck")
+    schema = "doc_id long, ts timestamp, text string"
+    tmpl = "alpha beta gamma delta epsilon zeta eta theta"
+    # the registry is session-wide: let any stream an earlier test left
+    # running finish before reading it
+    for other in spark.streams.active:
+        other.awaitTermination(300)
+    spark.catalog.clearCache()
+    seed = spark.createDataFrame(
+        [(1, tmpl), (2, "completely different words here")],
+        "doc_id long, text string",
+    )
+    apss_index_fit(seed, idx, "doc_id", "text", 850_000)
+    assert cache_registry_empty()
+    for wave, doc_id in (("w1.json", 10), ("w2.json", 20)):
+        _write_events(
+            src, wave, [{"doc_id": doc_id, "ts": "2024-01-01T00:00:00", "text": tmpl}]
+        )
+        q = stream_apss_index(
+            spark, src, schema, idx, prs, ck, threshold_micros=850_000
+        )
+        assert q.awaitTermination(300)
+        assert cache_registry_empty()
+    st = spark.read.parquet(f"{idx}/staleness")
+    assert sorted(r["batch_id"] for r in st.collect()) == [0, 1]
+    assert {
+        (r["doc_id_a"], r["doc_id_b"]) for r in spark.read.parquet(prs).collect()
+    } == {(1, 10), (1, 20), (10, 20)}
+
+
 def test_stream_apss_index_tokenless_batch_skips_monitor(spark, tmp_path):
     # ADVICE r10 (low): a whitespace-only micro-batch has zero
     # non-empty (doc, term) rows — snapshot_staleness would divide by
