@@ -1,258 +1,207 @@
 """Connected components over candidate-pair graphs.
 
-Near-dup dedup produces PAIRS; keep-one-per-cluster dedup needs the
-transitive closure of those pairs (A~B, B~C ⇒ {A,B,C} is one cluster
-with one representative). This is min-label propagation expressed as
-iterated DataFrame joins: each round every node adopts the smallest
-label among itself and its neighbors, converging in O(graph diameter)
-rounds. Near-dup graphs are short chains and cliques (template
-clusters), so the diameter is small — for adversarial long-path graphs
-swap in the large-star/small-star algorithm (Kiveris et al., SoCC'14),
-which converges in O(log n) rounds with the same join-only shape.
+Near-dup dedup and entity resolution produce PAIRS; keep-one-per-
+cluster needs the transitive closure of those pairs (A~B, B~C => {A,B,C}
+is one cluster, represented by its minimum id). One function computes
+it, :func:`connected_components`, and it has one rule:
 
-Scale shape per round: one shuffle join on node id + one hash-agg —
-the edge list never materializes on the driver; ``localCheckpoint``
-truncates lineage so round N's plan does not replay rounds 1..N-1.
-The per-round convergence probe is a 1-row aggregate over the fresh
-checkpoint (labels are monotone non-increasing, so their sum is a
-fixpoint detector) — one scalar to the driver, not data.
+- the edge set is persisted (``caching.persist``) and counted;
+- at or below ``ONE_TASK_EDGES`` edges, one ``mapInArrow`` task folds
+  the whole edge set with a vectorised numpy union-find (hook each
+  edge's larger root under its smaller one, pointer-jump to the roots,
+  repeat until both ends of every edge share a root). The fold has no
+  diameter limit and runs in two Spark jobs: the count and the
+  caller's action;
+- above it, large-star/small-star contraction (Kiveris et al.,
+  "Connected Components in MapReduce and Beyond", SoCC'14) runs
+  distributed, O(log n) join+aggregate rounds over a shrinking edge set.
+
+The edges reach the fold through ``repartition(1)``, never
+``coalesce(1)``, so the upstream pair pipeline keeps its parallelism.
+The budget is sized from the fold alone: a 4M-edge path (diameter 4M)
+folds in about 2 s, a 2M-edge random graph in 1.6 s at 417 MB RSS and
+an 8M-edge one in 8.2 s at 1.3 GB. Measured on 4 cores with a
+prototype of this fold (4M-edge budget) against the former round loop
+(min-label propagation: about 10 rounds of join, aggregate, eager
+``localCheckpoint`` and a one-row probe), identical rows:
+
+====================================  ===============  ===============
+what                                  round loop       one-task fold
+====================================  ===============  ===============
+sf0.1 ER match graph, 35,928 edges,   6.26 / 4.26 s    0.74 / 0.57 s
+CC step alone, run 1 / run 2
+sf0.1 LSH candidate graph, 575 edges  2.03 / 1.18 s    2.79 / 0.45 s
+``iterative_graph`` seed 1 traced:    489 / 296        325 / 136
+``exec.jobs`` / ``plans.build_jobs``
+same: ``caching.persisted_after_op``  13               0
+====================================  ===============  ===============
+
+Both phases return the same rows: one per distinct node of ``pairs``
+(a node seen only in a self-pair included), labelled with the minimum
+id reachable from it, in the input id type. A NULL id raises
+``ValueError``: it has no place in a component.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from lakeflow.caching import persist
+
+#: the largest edge set folded in one task; larger ones contract
+ONE_TASK_EDGES = 4_000_000
+#: round cap of the star phase, which needs about log2(nodes) rounds
+STAR_ROUNDS = 40
 
 
-def min_label_components(
+def connected_components(
     pairs: DataFrame,
     id_a: str,
     id_b: str,
-    max_iter: int = 25,
     out_id: str = "member_id",
     out_label: str = "cluster_id",
 ) -> DataFrame:
-    """Assign each node appearing in ``pairs`` the MINIMUM id reachable
-    from it (the canonical cluster representative). Returns one row per
-    distinct node: (out_id, out_label). Raises if ``max_iter`` rounds
-    do not converge (diameter larger than expected — see module note).
-    Budget note (r12): the label init IS propagation round 1 (min over
-    the 1-hop neighborhood, computed by the same aggregate that used to
-    only dedup node ids), and convergence is detected by a per-round
-    CHANGED-LABEL count folded into the propagation aggregate itself
-    (the self-edge row carries each node's previous label), so a
-    diameter-d graph needs ``max_iter >= d`` loop rounds — one round
-    of budget less than the old two-equal-sum-probe scheme, and two to
-    three fewer EXECUTED rounds (the init round is free and no
-    observation round is needed).
-    """
-    # symmetrize (+ SELF-EDGES) via ONE explode, not
-    # union(edges, reversed(edges)): the union form evaluates the
-    # upstream pair pipeline TWICE in the eager checkpoint job below
-    # (no subtree reuse across union branches), and for linkage/
-    # near-dup callers that upstream is the expensive blocked-scoring
-    # join — r10 profile: ~2.8 s of the q_entity_resolution row was
-    # the duplicate scoring pass. The self-edges make each node its
-    # own neighbor, so the per-round update collapses to ONE join+agg
-    # (min over self ∪ neighbors == least(own, neighbor-min)) instead
-    # of a propagation join FOLLOWED by a least() left-join — the r10
-    # decomposition measured the two-join round at ~0.85 s of fixed
-    # per-round stage overhead vs ~0.5 s for this form. (A pointer-
-    # jumping variant was measured and rejected: rounds only fell
-    # 10 -> 7 on the sf0.1 linkage graph while each round gained a
-    # checkpoint + two joins — see SCALING.md "entity-resolution
-    # round decomposition".)
-    sym = (
+    """(out_id, out_label): every distinct node of ``pairs`` with the
+    MINIMUM id reachable from it, the canonical cluster representative.
+    See the module docstring for how the edge-set size picks the
+    phase."""
+    # the ends' common type, as Spark widens them in an array
+    e = pairs.select(F.array(id_a, id_b).alias("e")).schema["e"]
+    t = e.dataType.elementType
+    edges = persist(
         pairs.select(
-            F.explode(
-                F.array(
-                    F.struct(
-                        F.col(id_a).alias("src"), F.col(id_b).alias("dst")
-                    ),
-                    F.struct(
-                        F.col(id_b).alias("src"), F.col(id_a).alias("dst")
-                    ),
-                    F.struct(
-                        F.col(id_a).alias("src"), F.col(id_a).alias("dst")
-                    ),
-                    F.struct(
-                        F.col(id_b).alias("src"), F.col(id_b).alias("dst")
-                    ),
-                )
-            ).alias("__e")
+            F.col(id_a).cast(t).alias("a"), F.col(id_b).cast(t).alias("b")
         )
-        .select("__e.src", "__e.dst")
-        .distinct()
     )
-    sym = sym.localCheckpoint(eager=True)
-    # label init = PROPAGATION ROUND 1 for free (r12, VERDICT r11 task
-    # #2): the old init deduped node ids (select(src).distinct()) — the
-    # exact same shuffle shape as groupBy(src).min(dst), which, with the
-    # self-edges making every node its own neighbor, IS one round of
-    # min-label propagation from identity labels. Same cost, one fewer
-    # loop round on every graph.
-    labels = (
-        sym.groupBy("src")
-        .agg(F.min("dst").alias("lbl"))
-        .withColumnRenamed("src", "id")
-        .localCheckpoint(eager=True)
-    )
-    # convergence probe (r12 rework, VERDICT r11 task #2): the old
-    # scheme compared two consecutive label-SUM probes (equal sums two
-    # rounds apart certify a fixpoint), which needs an OBSERVATION
-    # cycle past the flood. Instead, the propagation aggregate itself
-    # now also emits each node's PREVIOUS label (the self-edge row
-    # dst == src carries it), so the checkpointed relation holds a
-    # per-node changed flag and the 1-row probe reads "did the last
-    # round change anything" DIRECTLY — fixpoint is detected the cycle
-    # it happens, not a cycle later. The changed count is bounded by
-    # the node count, so a plain BIGINT sum is exact at any scale
-    # (the old DECIMAL(38,0) device guarded n * max_id, not needed
-    # for a 0/1 flag).
-    #
-    # ROUND FUSION (r11 — VERDICT r10 task #6): outside the tail, TWO
-    # propagation join+agg rounds share ONE eager checkpoint and ONE
-    # probe — the per-round fixed cost the r10 decomposition measured
-    # (~0.35-0.45 s/round locally) is mostly checkpoint + probe
-    # round-trips, and `sym` is reused as-is so fusion adds no join
-    # (unlike pointer jumping, measured & rejected in r10). Interleaved
-    # A/B on the sf0.1 linkage match graph (scripts/er_fusion_probe.py
-    # at commit 50921c4, outputs asserted identical): min 9.34 s ->
-    # 6.02 s, 0.645x.
-    #
-    # Tail: the changed-count probe observes the LAST round of its
-    # cycle, so the final TWO budget rounds run single-round with a
-    # probe each — a fixpoint reached at any propagation round
-    # d <= max_iter (init counts as round 1) is observed by the probe
-    # of loop round d at the latest, in every parity case.
-    i = 0
-    while i < max_iter:
-        steps = 1 if i >= max_iter - 2 else 2
-        cur = labels
-        for step in range(steps):
-            last = step == steps - 1
-            aggs = [F.min("lbl").alias("lbl")]
-            if last:
-                aggs.append(
-                    F.max(
-                        F.when(F.col("dst") == F.col("src"), F.col("lbl"))
-                    ).alias("__old")
-                )
-            cur = (
-                sym.join(cur, sym["dst"] == cur["id"])
-                .groupBy("src")
-                .agg(*aggs)
-                .withColumnRenamed("src", "id")
-            )
-        labels = cur.select(
-            "id",
-            "lbl",
-            (F.col("lbl") != F.col("__old")).cast("long").alias("__chg"),
-        ).localCheckpoint(eager=True)
-        i += steps
-        n_changed = labels.agg(F.sum("__chg").alias("c")).collect()[0]["c"]
-        if not n_changed:
-            return labels.select(
-                F.col("id").alias(out_id), F.col("lbl").alias(out_label)
-            )
-    raise RuntimeError(
-        f"min_label_components did not converge in {max_iter} rounds "
-        "(unexpectedly large component diameter; use star_contraction_components)"
+    n, n_null = edges.agg(
+        F.count(F.lit(1)),
+        F.count(F.when(F.col("a").isNull() | F.col("b").isNull(), 1)),
+    ).first()
+    if n_null:
+        raise ValueError(
+            f"connected_components: {n_null} of {n} pairs have a NULL "
+            f"{id_a} or {id_b}"
+        )
+    if n <= ONE_TASK_EDGES:
+        schema = T.StructType([T.StructField(c, t) for c in ("id", "lbl")])
+        out = edges.repartition(1).mapInArrow(_fold, schema)
+    else:
+        out = _star_components(edges)
+    return out.select(F.col("id").alias(out_id), F.col("lbl").alias(out_label))
+
+
+def _fold(batches):
+    """Union-find over every (a, b) edge of the one partition: yields
+    (id, lbl) for each distinct id. ``np.unique`` ranks the ids, so a
+    smaller index is a smaller id and each root is its component's
+    minimum."""
+    import numpy as np
+    import pyarrow as pa
+
+    batches = list(batches)
+    if not batches:
+        return
+    tbl = pa.Table.from_batches(batches)
+    a, b = (tbl.column(i).to_numpy() for i in (0, 1))
+    ids, ends = np.unique(np.concatenate([a, b]), return_inverse=True)
+    u, v = ends[: len(a)], ends[len(a) :]
+    root = np.arange(len(ids))
+    while True:
+        ru, rv = root[u], root[v]
+        cross = ru != rv
+        if not cross.any():
+            break
+        # every hooked index is a root, and it only ever moves lower
+        np.minimum.at(
+            root, np.maximum(ru, rv)[cross], np.minimum(ru, rv)[cross]
+        )
+        while True:
+            up = root[root]
+            if (up == root).all():
+                break
+            root = up
+    typ = tbl.schema.field(0).type
+    yield pa.RecordBatch.from_arrays(
+        [pa.array(ids, type=typ), pa.array(ids[root], type=typ)],
+        names=["id", "lbl"],
     )
 
 
-def star_contraction_components(
-    pairs: DataFrame,
-    id_a: str,
-    id_b: str,
-    max_iter: int = 20,
-    out_id: str = "member_id",
-    out_label: str = "cluster_id",
-) -> DataFrame:
-    """Connected components in O(log n) ROUNDS via alternating
-    large-star / small-star contractions (Kiveris et al., "Connected
-    Components in MapReduce and Beyond", SoCC'14) — the scale path for
-    high-diameter graphs, where :func:`min_label_components`'s
-    O(diameter) rounds would be prohibitive (a 1M-node path converges
-    here in ~20 rounds instead of 1M).
-
-    Each round is two join+agg passes over the edge set; the edge set
-    only shrinks toward the star form (every node attached directly to
-    its component's min id). Same output contract as
-    min_label_components; raises if ``max_iter`` rounds do not reach a
-    fixpoint."""
-    # canonical undirected edge set (a < b), no self loops
-    edges = (
-        pairs.select(
-            F.least(F.col(id_a), F.col(id_b)).alias("a"),
-            F.greatest(F.col(id_a), F.col(id_b)).alias("b"),
+def _canon(uv: DataFrame) -> DataFrame:
+    """Undirected (u, v) edges as the distinct set (a < b)."""
+    return (
+        uv.select(
+            F.least("u", "v").alias("a"), F.greatest("u", "v").alias("b")
         )
         .filter(F.col("a") != F.col("b"))
         .distinct()
-        .localCheckpoint(eager=True)
-    )
-    all_nodes = (
-        edges.select(F.col("a").alias("id"))
-        .union(edges.select(F.col("b").alias("id")))
-        .distinct()
-        .localCheckpoint(eager=True)
     )
 
-    def _sym(e: DataFrame) -> DataFrame:
-        return e.select(F.col("a").alias("u"), F.col("b").alias("v")).union(
-            e.select(F.col("b").alias("u"), F.col("a").alias("v"))
-        )
 
-    def _canon(e: DataFrame) -> DataFrame:
-        return (
-            e.select(
-                F.least(F.col("u2"), F.col("v2")).alias("a"),
-                F.greatest(F.col("u2"), F.col("v2")).alias("b"),
+def _both_ways(e: DataFrame) -> DataFrame:
+    """Each (a, b) row as the two rows (u, v) = (a, b) and (b, a)."""
+    return e.select(
+        F.inline(
+            F.array(
+                F.struct(F.col("a").alias("u"), F.col("b").alias("v")),
+                F.struct(F.col("b").alias("u"), F.col("a").alias("v")),
             )
-            .filter(F.col("a") != F.col("b"))
-            .distinct()
         )
+    )
 
-    for _ in range(max_iter):
-        sym = _sym(edges)
-        # LARGE-STAR: every neighbor v > u attaches to min(Γ(u) ∪ {u})
-        lmin = sym.groupBy("u").agg(F.min("v").alias("nm"))
+
+def _star_components(edges: DataFrame) -> DataFrame:
+    """(id, lbl) by alternating large-star / small-star rounds until
+    the canonical edge set stops changing. Each round reads the one
+    before it once (a window minimum, not a self-join), so the plan
+    grows by a constant per round; each round is persisted and the one
+    before it dropped."""
+    # the node set is taken before _canon drops self-pairs, so a node
+    # seen only in a self-pair keeps its own row
+    nodes = edges.select(F.explode(F.array("a", "b")).alias("id")).distinct()
+    cur = persist(
+        _canon(edges.select(F.col("a").alias("u"), F.col("b").alias("v")))
+    )
+    by_u = Window.partitionBy("u")
+    for _ in range(STAR_ROUNDS):
+        # LARGE-STAR: every neighbour v > u attaches to min(N(u) + u)
         large = _canon(
-            sym.join(lmin, "u")
+            _both_ways(cur)
+            .withColumn("m", F.least(F.min("v").over(by_u), F.col("u")))
             .filter(F.col("v") > F.col("u"))
+            .select(F.col("v").alias("u"), F.col("m").alias("v"))
+        )
+        # SMALL-STAR: u and every neighbour v < u attach to the minimum
+        # of u's smaller neighbourhood
+        small = (
+            _both_ways(large)
+            .filter(F.col("v") < F.col("u"))
+            .withColumn("m", F.min("v").over(by_u))
             .select(
-                F.col("v").alias("u2"),
-                F.least(F.col("nm"), F.col("u")).alias("v2"),
-            )
-        )
-        # SMALL-STAR: every neighbor v < u (and u itself) attaches to
-        # the min of u's smaller neighborhood
-        sm = _sym(large).filter(F.col("v") < F.col("u"))
-        smin = sm.groupBy("u").agg(F.min("v").alias("nm"))
-        small = _canon(
-            sm.join(smin, "u")
-            .select(F.col("v").alias("u2"), F.col("nm").alias("v2"))
-            .union(
-                smin.select(F.col("u").alias("u2"), F.col("nm").alias("v2"))
-            )
-        ).localCheckpoint(eager=True)
-        changed = (
-            small.exceptAll(edges).count() + edges.exceptAll(small).count()
-        )
-        edges = small
-        if changed == 0:
-            labels = edges.groupBy(F.col("b").alias("id")).agg(
-                F.min("a").alias("lbl")
-            )
-            return (
-                all_nodes.join(labels, "id", "left")
-                .select(
-                    F.col("id").alias(out_id),
-                    F.coalesce("lbl", F.col("id")).alias(out_label),
+                F.inline(
+                    F.array(
+                        F.struct(F.col("v").alias("u"), F.col("m").alias("v")),
+                        F.struct(F.col("u").alias("u"), F.col("m").alias("v")),
+                    )
                 )
             )
+        )
+        nxt = persist(_canon(small))
+        same = not nxt.exceptAll(cur).union(cur.exceptAll(nxt)).count()
+        cur.unpersist()
+        cur = nxt
+        if same:
+            labels = cur.groupBy(F.col("b").alias("id")).agg(
+                F.min("a").alias("lbl")
+            )
+            return nodes.join(labels, "id", "left").select(
+                "id", F.coalesce("lbl", "id").alias("lbl")
+            )
     raise RuntimeError(
-        f"star_contraction_components did not converge in {max_iter} rounds"
+        f"connected_components: star contraction did not converge in "
+        f"{STAR_ROUNDS} rounds"
     )
 
 
@@ -280,12 +229,10 @@ def dedup_survivors(
     window-ranked per cluster. The pair relation should come from the
     capped LSH path so one degenerate template cluster cannot pull the
     whole corpus into the ranked branch."""
-    from pyspark.sql import Window
-
     id_a = id_a or f"{id_col}_a"
     id_b = id_b or f"{id_col}_b"
     order_c = F.col(order_col) if isinstance(order_col, str) else order_col
-    lbl = min_label_components(
+    lbl = connected_components(
         pairs, id_a, id_b, out_id=id_col, out_label="__cluster"
     )
     with_lbl = df.join(lbl, id_col, "left")

@@ -127,7 +127,7 @@ def triangle_count(
 ) -> DataFrame:
     """EXACT global triangle count over an undirected graph given as a
     pair relation (r11 — the graph-family sibling of :func:`pagerank`
-    and ``clusters.min_label_components``): triangle density is the
+    and ``clusters.connected_components``): triangle density is the
     standard clustering-coefficient numerator a corpus-curation stack
     reads off its co-occurrence / dup-cluster / link graphs (a
     near-dup pair graph whose triangles are dense is transitive
@@ -158,9 +158,8 @@ def triangle_count(
     from lakeflow.caching import persist
 
     e = persist(e)  # consumers: degree agg + the orientation join
-    # symmetrize via ONE explode (never union(e, reversed(e)) — the
-    # min_label_components lesson: union branches re-evaluate the
-    # upstream pair pipeline once each)
+    # symmetrize via ONE explode, never union(e, reversed(e)): union
+    # branches re-evaluate the upstream pair pipeline once each
     deg = (
         e.select(F.explode(F.array("u", "v")).alias("n"))
         .groupBy("n")

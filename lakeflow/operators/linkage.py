@@ -218,14 +218,15 @@ def resolve_entities(
     right_id: str = "id_b",
 ) -> DataFrame:
     """Linkage pairs -> entity ids: connected components over the match
-    graph (reusing the dedup cluster machinery — min-label propagation,
-    join-only rounds), then one row per record tagged ``entity_id``.
+    graph (``clusters.connected_components``, the dedup cluster step:
+    each entity id is the minimum record id reachable), then one row
+    per record tagged ``entity_id``.
     Records matched to nothing keep their own id as the entity id.
     Survivorship (one canonical row per entity) is then the same
     latest-wins/cluster-rank pattern as dedup survivors."""
-    from lakeflow.operators.clusters import min_label_components
+    from lakeflow.operators.clusters import connected_components
 
-    clustered = min_label_components(
+    clustered = connected_components(
         pairs, left_id, right_id, out_id=id_col, out_label="__entity"
     )
     return (
@@ -350,7 +351,7 @@ def incremental_resolve_entities(
     """Fold a batch's match pairs into a PERSISTED entity assignment
     table — incremental connected components without re-running the
     stored×stored linkage. ``stored_assignments`` is (id, entity_id)
-    where entity ids are min-label component representatives (i.e.
+    where entity ids are minimum-id component representatives (i.e.
     :func:`resolve_entities` output — each entity id IS a member
     record id); ``match_pairs`` is :func:`incremental_linkage_pairs`
     output filtered to matches.
@@ -361,19 +362,18 @@ def incremental_resolve_entities(
     (all pairs ever seen) — and because min-label representatives are
     member ids, the merged components' min labels equal a full batch
     recompute's. Cost per batch: components over |batch pairs| +
-    |stored records| star edges (diameter ≤ old diameter + 2), never
-    the historical pair set. Returns the UPDATED full assignment table
+    |stored records| star edges, never the historical pair set. Returns the UPDATED full assignment table
     (id, entity_id) covering stored ∪ new records; entity ids of
     stored records only change when a new record bridges two old
     entities — exactly the batch-recompute semantics."""
-    from lakeflow.operators.clusters import min_label_components
+    from lakeflow.operators.clusters import connected_components
 
     ida, idb = f"{id_col}_a", f"{id_col}_b"
     stars = stored_assignments.filter(
         F.col(entity_col) != F.col(id_col)
     ).select(F.col(id_col).alias(ida), F.col(entity_col).alias(idb))
     edges = match_pairs.select(ida, idb).unionByName(stars)
-    clustered = min_label_components(
+    clustered = connected_components(
         edges, ida, idb, out_id=id_col, out_label="__e"
     )
     all_ids = (

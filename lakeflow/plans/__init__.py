@@ -90,12 +90,18 @@ DRIVER_WINDOW: tuple[str, ...] = (
     "q_rm3_expansion",
     "q_triangle_count",
     "q_token_fertility",
-    # --- latest row r8 (first 5 of 50) ---
-    "q17_small_quantity_parts",
+    # --- connected-components consumers: the component step became
+    # one union-find fold (clusters.connected_components), so each row
+    # whose operator changed gets a driver row (q_dedup_survivors is
+    # already above). They displace four r8 fills, certified r8 in
+    # CERTIFIED.json: q17_small_quantity_parts, q6_forecast_revenue,
+    # q7_volume_shipping, q_analytic_windows
+    "q_entity_resolution",
+    "q_incremental_entities",
+    "q_dup_clusters",
+    "q_cluster_safe_split",
+    # --- latest row r8: entry() ---
     "q5_local_supplier_volume",
-    "q6_forecast_revenue",
-    "q7_volume_shipping",
-    "q_analytic_windows",
 )
 
 

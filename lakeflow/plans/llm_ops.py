@@ -972,21 +972,22 @@ def q_corpus_prep(spark, sf_dir):
     FROM lbl
     """,
     description="Keep-one-per-cluster dedup assignment: connected "
-    "components over MinHash-LSH candidate pairs via min-label "
-    "propagation (operators/clusters.py) — each doc in a near-dup "
-    "cluster gets the cluster's min doc_id as representative. The "
+    "components over MinHash-LSH candidate pairs (operators/clusters."
+    "connected_components: a one-task union-find fold) — each doc in "
+    "a near-dup cluster gets the cluster's min doc_id as "
+    "representative. The "
     "oracle computes the same transitive closure with a recursive CTE.",
     refs=("§2.12",),
 )
 def q_dup_clusters(spark, sf_dir):
     from pyspark.sql import Window as W
 
-    from lakeflow.operators.clusters import min_label_components
+    from lakeflow.operators.clusters import connected_components
 
     d = load_table(spark, sf_dir, "documents")
     sig = minhash_signatures(d, "doc_id", "text", k=8)
     cand = lsh_candidate_pairs(sig, "doc_id", k=8, band_size=2)
-    lbl = min_label_components(
+    lbl = connected_components(
         cand, "doc_id_a", "doc_id_b", out_id="doc_id", out_label="cluster_id"
     )
     return lbl.select(
@@ -1849,13 +1850,13 @@ def q_leakage_safe_split(spark, sf_dir):
     refs=("§2.12",),
 )
 def q_cluster_safe_split(spark, sf_dir):
-    from lakeflow.operators.clusters import min_label_components
+    from lakeflow.operators.clusters import connected_components
     from lakeflow.operators.sampling import leakage_safe_split
 
     d = load_table(spark, sf_dir, "documents")
     sig = minhash_signatures(d, "doc_id", "text", k=8)
     cand = lsh_candidate_pairs(sig, "doc_id", k=8, band_size=2)
-    lbl = min_label_components(
+    lbl = connected_components(
         cand, "doc_id_a", "doc_id_b", out_id="doc_id", out_label="cluster_id"
     )
     full = (
@@ -4280,7 +4281,7 @@ def q_record_linkage(spark, sf_dir):
     """,
     description="End-to-end entity consolidation (operators/linkage."
     "resolve_entities): match pairs from q_record_linkage's scorer -> "
-    "connected components (min-label propagation, join-only rounds) -> "
+    "connected components (clusters.connected_components) -> "
     "every record from BOTH catalogs tagged with its entity id "
     "(unmatched records stay their own entity), aggregated to entity "
     "sizes. The oracle replays the transitive closure with a recursive "
@@ -4553,7 +4554,7 @@ def _ilink_state(spark, sf_dir: str):
     corpus's full linkage + components loop on every execution —
     17.6 s of the benched row's cost was this state rebuild, not the
     incremental step. Deterministic contents (seeded blocking,
-    min-label components); content-fingerprinted key; build/race/
+    minimum-id components); content-fingerprinted key; build/race/
     eviction contract in ``caching.prebuilt_state``."""
     from lakeflow.caching import prebuilt_state, scoped_cache
     from lakeflow.operators.linkage import (

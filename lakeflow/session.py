@@ -6,6 +6,9 @@ session is configured so Catalyst + AQE do the optimization work:
 - AQE on (runtime coalescing, skew-join splitting, join-strategy switch)
 - Arrow on (fast pandas interchange for the Pandas-UDF slow path)
 - session timezone pinned to UTC (deterministic timestamp semantics)
+- local driver heap sized from the host (``local_driver_mem``: a
+  quarter of physical memory, 1g to 8g) unless ``LAKEFLOW_DRIVER_MEM``
+  or ``PYSPARK_SUBMIT_ARGS`` says otherwise
 - shuffle partitions sized from the environment; on a real cluster this
   would be set per-job (~2-3x total cores) or left to AQE coalescing.
 - codegen cache sized to the working set: Spark keeps 100 compiled
@@ -28,6 +31,20 @@ import os
 from pyspark.sql import SparkSession
 
 
+def local_driver_mem(phys_bytes: int | None = None) -> str:
+    """Heap for a local-master driver: a quarter of physical memory,
+    at most 8g and at least 1g. In local mode the driver heap is the
+    executor heap, so Spark's 1g default is too small for concurrent
+    tasks, broadcasts and cached relations (a 10x-scale near-dup run
+    dies in BroadcastExchange at 1g and runs at 8g). A fixed 8g is too
+    much for a small host: on 16 GB, two lakeflow sessions side by side
+    got one JVM killed by the kernel's OOM killer."""
+    if phys_bytes is None:
+        phys_bytes = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    mb = min(8192, max(1024, phys_bytes // 4 // 2**20))
+    return f"{mb}m"
+
+
 def get_spark(
     app_name: str = "lakeflow",
     master: str | None = None,
@@ -47,12 +64,9 @@ def get_spark(
     # driver memory must reach the JVM before it launches (builder-time
     # spark.driver.memory is silently ignored for Python-launched local
     # drivers); no-op if a JVM or explicit submit args already exist.
-    # In local mode the driver heap IS the executor heap, so the 1g
-    # default is far too small for 32 concurrent tasks + broadcasts +
-    # cached relations — measured: a 10x-scale near-dup run dies in
-    # BroadcastExchange at 1g, runs at 8g.
     mem = os.environ.get(
-        "LAKEFLOW_DRIVER_MEM", "8g" if master.startswith("local") else None
+        "LAKEFLOW_DRIVER_MEM",
+        local_driver_mem() if master.startswith("local") else None,
     )
     if mem and not os.environ.get("PYSPARK_SUBMIT_ARGS"):
         os.environ["PYSPARK_SUBMIT_ARGS"] = f"--driver-memory {mem} pyspark-shell"

@@ -6,7 +6,14 @@
 
 Runs on a deliberately VANILLA SparkSession — the driver brings its own.
 
-  python scripts/driver_gate.py [sf_dir]
+  python scripts/driver_gate.py [sf_dir ...] [query ...]
+
+Arguments that name a directory are scale dirs (default sf0.01), the
+rest are query names (default: every registered query). Each named
+query runs at each scale dir, e.g. the touched rows at two scales:
+
+  python scripts/driver_gate.py /root/testdata/sf0.01 \\
+      /root/testdata/sf0.1 q_dup_clusters q_entity_resolution
 """
 
 from __future__ import annotations
@@ -19,7 +26,9 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> int:
-    sf = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
+    args = sys.argv[1:]
+    sfs = [a for a in args if os.path.isdir(a)] or ["/root/testdata/sf0.01"]
+    names = [a for a in args if not os.path.isdir(a)]
     from pyspark.sql import SparkSession
 
     spark = (
@@ -35,25 +44,36 @@ def main() -> int:
     import __spark_entry__ as E
     from lakeflow.testing import compare_to_oracle
 
+    qs, osql = E.queries(), E.oracle_sql()
+    unknown = [n for n in names if n not in qs]
+    if unknown:
+        print(f"not registered (and not a directory): {unknown}")
+        return 2
     t0 = time.perf_counter()
     rows = E.entry(spark).collect()
     print(f"t1 smoke: entry() -> {len(rows)} rows  [{time.perf_counter() - t0:.1f}s]")
 
-    qs, osql = E.queries(), E.oracle_sql()
     fails: list[str] = []
-    for name in sorted(qs):
-        t0 = time.perf_counter()
-        if name in osql:
-            ok, msg = compare_to_oracle(qs[name](spark, sf), osql[name], sf)
-            kind = "oracle"
-        else:
-            ok, msg = qs[name](spark, sf).count() >= 0, "rows-only"
-            kind = "rows  "
-        dt = time.perf_counter() - t0
-        print(f"{'PASS' if ok else 'FAIL'} [{kind}] {name:32s} {dt:5.1f}s {'' if ok else msg}")
-        if not ok:
-            fails.append(name)
-    print(f"\n{len(qs) - len(fails)}/{len(qs)} queries pass at {sf}")
+    for sf in sfs:
+        for name in names or sorted(qs):
+            t0 = time.perf_counter()
+            if name in osql:
+                ok, msg = compare_to_oracle(qs[name](spark, sf), osql[name], sf)
+                kind = "oracle"
+            else:
+                ok, msg = qs[name](spark, sf).count() >= 0, "rows-only"
+                kind = "rows  "
+            dt = time.perf_counter() - t0
+            print(
+                f"{'PASS' if ok else 'FAIL'} [{kind}] {name:32s} "
+                f"{os.path.basename(sf):8s} {dt:5.1f}s {'' if ok else msg}"
+            )
+            if not ok:
+                fails.append(f"{name}@{sf}")
+    n = len(sfs) * len(names or qs)
+    print(f"\n{n - len(fails)}/{n} query runs pass at {', '.join(sfs)}")
+    if fails:
+        print("FAILED:", " ".join(fails))
     return 1 if fails else 0
 
 

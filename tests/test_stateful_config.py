@@ -1,4 +1,5 @@
-"""applyInPandasWithState running counter + env-only config profiles."""
+"""applyInPandasWithState running counter + env-only config profiles
+and the local driver-heap default."""
 
 from __future__ import annotations
 
@@ -78,3 +79,13 @@ def test_connection_profile_from_env(monkeypatch):
     assert "s3cret" not in repr(p)  # never leak secrets into logs
     with pytest.raises(KeyError):
         connection_profile("missing_profile")
+
+
+def test_local_driver_mem_is_a_quarter_of_the_host_within_1g_8g():
+    from lakeflow.session import local_driver_mem
+
+    assert local_driver_mem(16 * 2**30) == "4096m"
+    assert local_driver_mem(2 * 2**30) == "1024m"  # floor
+    assert local_driver_mem(256 * 2**30) == "8192m"  # cap
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    assert local_driver_mem() == local_driver_mem(phys)

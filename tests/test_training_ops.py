@@ -7,7 +7,8 @@ import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
-from lakeflow.operators.clusters import min_label_components
+from lakeflow.operators import clusters
+from lakeflow.operators.clusters import connected_components
 from lakeflow.operators.corpus import boilerplate_profile, contamination_profile
 from lakeflow.operators.sampling import hash_sample, stratified_hash_sample
 from lakeflow.operators.text import repetition_profile
@@ -51,53 +52,91 @@ def test_stratified_hash_sample_rates(spark):
     assert 0 < by_src.get("src2", 0) + by_src.get("src3", 0) < 100
 
 
-def test_min_label_components_two_clusters(spark):
+def _components(df, a="a", b="b"):
+    return {
+        r["member_id"]: r["cluster_id"]
+        for r in connected_components(df, a, b).collect()
+    }
+
+
+def test_connected_components_two_clusters(spark):
     pairs = spark.createDataFrame(
         [Row(a=2, b=1), Row(a=2, b=3), Row(a=3, b=4), Row(a=10, b=11)]
     )
-    out = {
-        r["member_id"]: r["cluster_id"]
-        for r in min_label_components(pairs, "a", "b").collect()
-    }
     # chain 1-2-3-4 collapses to min id 1 (transitive, not just neighbors)
-    assert out == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10}
+    assert _components(pairs) == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10}
 
 
-def test_min_label_components_nonconvergence_raises(spark):
-    # a 6-node path needs more than one round; max_iter=1 must fail loudly
-    pairs = spark.createDataFrame([Row(a=i, b=i + 1) for i in range(5)])
-    with pytest.raises(RuntimeError, match="did not converge"):
-        min_label_components(pairs, "a", "b", max_iter=1)
+def test_connected_components_long_path_one_call(spark):
+    # an 80-node path has diameter 79: the default call labels it whole,
+    # with no round budget to pass or exceed
+    df = spark.createDataFrame([Row(a=i, b=i + 1) for i in range(79)])
+    assert _components(df) == {i: 0 for i in range(80)}
 
 
-def test_min_label_components_tiny_max_iter_converged_graph(spark):
-    # ADVICE r10: the sum-fixpoint probe needs TWO equal consecutive
-    # probes, so with the old tail condition (final two rounds)
-    # max_iter=2 could never return even on an already-converged graph;
-    # the final-four-rounds tail makes the smallest budgets usable
-    pairs = spark.createDataFrame([Row(a=1, b=2), Row(a=10, b=11)])
-    out = {
-        r["member_id"]: r["cluster_id"]
-        for r in min_label_components(pairs, "a", "b", max_iter=2).collect()
+def test_connected_components_keeps_the_id_type(spark):
+    from pyspark.sql import types as T
+
+    schema = "a int, b int"
+    df = spark.createDataFrame([(3, 1), (1, 2), (8, 9)], schema)
+    out = connected_components(df, "a", "b")
+    assert [f.dataType for f in out.schema.fields] == [T.IntegerType()] * 2
+    assert {tuple(r) for r in out.collect()} == {
+        (1, 1), (2, 1), (3, 1), (8, 8), (9, 8)
     }
-    assert out == {1: 1, 2: 1, 10: 10, 11: 10}
+    names = spark.createDataFrame([("b", "a"), ("c", "b")], "x string, y string")
+    out = connected_components(names, "x", "y")
+    assert [f.dataType for f in out.schema.fields] == [T.StringType()] * 2
+    assert {tuple(r) for r in out.collect()} == {("a", "a"), ("b", "a"), ("c", "a")}
 
 
-def test_min_label_components_converges_at_budget_edge(spark):
-    # ADVICE r10: a graph whose labels stabilize in the last couple of
-    # rounds before max_iter must return, not raise — the tail probes
-    # every round for the final four so the fixpoint is observed twice.
-    # A 6-node path (diameter 5) floods one hop per round: the label
-    # sum reaches its fixpoint after round index 4 and the second
-    # equal probe lands at round index 5, so max_iter=6 is the minimum
-    # budget — and both of those probes fall inside the every-round
-    # tail (i >= 2).
-    pairs = spark.createDataFrame([Row(a=i, b=i + 1) for i in range(5)])
-    out = {
-        r["member_id"]: r["cluster_id"]
-        for r in min_label_components(pairs, "a", "b", max_iter=6).collect()
-    }
-    assert out == {i: 0 for i in range(6)}
+@pytest.mark.parametrize("budget", [clusters.ONE_TASK_EDGES, 0])
+def test_connected_components_releases_its_persists(spark, monkeypatch, budget):
+    from lakeflow.caching import scoped_cache
+
+    # both phases: the one-task fold and (budget 0) the star rounds
+    monkeypatch.setattr(clusters, "ONE_TASK_EDGES", budget)
+    spark.catalog.clearCache()  # unscoped calls elsewhere keep theirs
+    df = spark.createDataFrame([Row(a=i, b=i + 1) for i in range(5)])
+    with scoped_cache():
+        assert len(connected_components(df, "a", "b").collect()) == 6
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_connected_components_null_id_raises(spark):
+    df = spark.createDataFrame([(1, 2), (2, None)], "a long, b long")
+    with pytest.raises(ValueError, match="1 of 2 pairs have a NULL a or b"):
+        connected_components(df, "a", "b")
+
+
+def test_connected_components_both_phases_agree(spark, monkeypatch):
+    import random
+
+    rng = random.Random(7)
+    randoms = [
+        [(rng.randrange(30), rng.randrange(30)) for _ in range(25)]
+        for _ in range(3)
+    ]
+    graphs = [spark.createDataFrame(e, "a long, b long") for e in randoms]
+    graphs.append(spark.createDataFrame([(7, 7), (1, 2)], "a long, b long"))
+    graphs.append(spark.createDataFrame([Row(a=i, b=i + 1) for i in range(79)]))
+    folded = [_components(g) for g in graphs]
+    # budget 0 sends every edge set to the star phase
+    monkeypatch.setattr(clusters, "ONE_TASK_EDGES", 0)
+    assert [_components(g) for g in graphs] == folded
+    for edges, got in zip(randoms, folded):
+        ref = {x: x for e in edges for x in e}  # flood minimum labels
+        changed = True
+        while changed:
+            changed = False
+            for x, y in edges:
+                m = min(ref[x], ref[y])
+                changed |= ref[x] != m or ref[y] != m
+                ref[x] = ref[y] = m
+        assert got == ref
+    # a node seen only in a self-pair keeps its row
+    assert folded[3] == {1: 1, 2: 1, 7: 7}
+    assert folded[4] == {i: 0 for i in range(80)}
 
 
 def test_repetition_profile_known_values(spark):
@@ -290,43 +329,13 @@ def test_profile_table_nulls_and_approx(spark):
     assert ap["a"]["n_distinct"] in (1, 2, 3)
 
 
-def test_star_contraction_matches_min_label(spark):
-    import random
-
-    from lakeflow.operators.clusters import star_contraction_components
-
-    rng = random.Random(7)
-    # a few random graphs: compare against the O(diameter) reference
-    for trial in range(3):
-        n = 30
-        edges = [
-            (rng.randrange(n), rng.randrange(n)) for _ in range(25)
-        ]
-        edges = [(a, b) for a, b in edges if a != b]
-        df = spark.createDataFrame([Row(a=a, b=b) for a, b in edges])
-        ref = {
-            r["member_id"]: r["cluster_id"]
-            for r in min_label_components(df, "a", "b", max_iter=60).collect()
-        }
-        got = {
-            r["member_id"]: r["cluster_id"]
-            for r in star_contraction_components(df, "a", "b").collect()
-        }
-        assert got == ref, f"trial {trial}"
-
-
-def test_star_contraction_long_path_few_rounds(spark):
-    from lakeflow.operators.clusters import star_contraction_components
-
-    # an 80-node path has diameter 79: min-label needs ~79 rounds,
-    # star contraction must finish within O(log n) rounds
+def test_star_contraction_long_path_few_rounds(spark, monkeypatch):
+    # an 80-node path has diameter 79: the star phase must finish it
+    # within O(log n) rounds
+    monkeypatch.setattr(clusters, "ONE_TASK_EDGES", 0)
+    monkeypatch.setattr(clusters, "STAR_ROUNDS", 12)
     df = spark.createDataFrame([Row(a=i, b=i + 1) for i in range(79)])
-    out = {
-        r["member_id"]: r["cluster_id"]
-        for r in star_contraction_components(df, "a", "b", max_iter=12).collect()
-    }
-    assert set(out.values()) == {0}
-    assert len(out) == 80
+    assert _components(df) == {i: 0 for i in range(80)}
 
 
 def test_token_budget_sample_caps_each_group(spark):
