@@ -14,13 +14,18 @@ it, :func:`connected_components`, and it has one rule:
   caller's action;
 - above it, large-star/small-star contraction (Kiveris et al.,
   "Connected Components in MapReduce and Beyond", SoCC'14) runs
-  distributed, O(log n) join+aggregate rounds over a shrinking edge set.
+  distributed, O(log n) window+aggregate rounds over a shrinking edge
+  set. It is the MEMORY fallback, not a faster path: on 4 cores the
+  fold wins at every size measured (``scripts/cc_phase_sizing.py``,
+  random graphs of mean degree 4: 1M edges 1.5 s vs 20 s, 6M edges
+  13 s vs 88 s). Its window puts a hub's whole neighbourhood in one
+  task, so a giant component's star skews that task.
 
 The edges reach the fold through ``repartition(1)``, never
 ``coalesce(1)``, so the upstream pair pipeline keeps its parallelism.
-The budget is sized from the fold alone: a 4M-edge path (diameter 4M)
-folds in about 2 s, a 2M-edge random graph in 1.6 s at 417 MB RSS and
-an 8M-edge one in 8.2 s at 1.3 GB. Measured on 4 cores with a
+The budget bounds the one Python worker's memory: a 2M-edge random
+graph folds at 417 MB RSS, an 8M-edge one at 1.3 GB (8.2 s), and a
+4M-edge path (diameter 4M) in about 2 s. Measured on 4 cores with a
 prototype of this fold (4M-edge budget) against the former round loop
 (min-label propagation: about 10 rounds of join, aggregate, eager
 ``localCheckpoint`` and a one-row probe), identical rows:
@@ -50,7 +55,8 @@ from pyspark.sql import types as T
 
 from lakeflow.caching import persist
 
-#: the largest edge set folded in one task; larger ones contract
+#: the largest edge set folded in one task (a memory bound); larger
+#: ones contract
 ONE_TASK_EDGES = 4_000_000
 #: round cap of the star phase, which needs about log2(nodes) rounds
 STAR_ROUNDS = 40

@@ -359,10 +359,11 @@ def incremental_resolve_entities(
     The trick: the stored assignment table is a STAR-EDGE encoding of
     the old component structure (record—representative), so components
     over (new match pairs ∪ stored star edges) equal components over
-    (all pairs ever seen) — and because min-label representatives are
+    (all pairs ever seen) — and because minimum-id representatives are
     member ids, the merged components' min labels equal a full batch
     recompute's. Cost per batch: components over |batch pairs| +
-    |stored records| star edges, never the historical pair set. Returns the UPDATED full assignment table
+    |stored records| star edges, never the historical pair set.
+    Returns the UPDATED full assignment table
     (id, entity_id) covering stored ∪ new records; entity ids of
     stored records only change when a new record bridges two old
     entities — exactly the batch-recompute semantics."""

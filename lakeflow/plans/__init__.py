@@ -90,12 +90,9 @@ DRIVER_WINDOW: tuple[str, ...] = (
     "q_rm3_expansion",
     "q_triangle_count",
     "q_token_fertility",
-    # --- connected-components consumers: the component step became
-    # one union-find fold (clusters.connected_components), so each row
-    # whose operator changed gets a driver row (q_dedup_survivors is
-    # already above). They displace four r8 fills, certified r8 in
-    # CERTIFIED.json: q17_small_quantity_parts, q6_forecast_revenue,
-    # q7_volume_shipping, q_analytic_windows
+    # --- connected-components consumers: their operator
+    # (clusters.connected_components) changed, and a row whose
+    # operator changed gets a driver row
     "q_entity_resolution",
     "q_incremental_entities",
     "q_dup_clusters",

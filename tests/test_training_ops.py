@@ -338,6 +338,16 @@ def test_star_contraction_long_path_few_rounds(spark, monkeypatch):
     assert _components(df) == {i: 0 for i in range(80)}
 
 
+def test_star_contraction_nonconvergence_raises(spark, monkeypatch):
+    # a 6-node path needs more than one star round: the phase must say
+    # so, not return partial labels
+    monkeypatch.setattr(clusters, "ONE_TASK_EDGES", 0)
+    monkeypatch.setattr(clusters, "STAR_ROUNDS", 1)
+    df = spark.createDataFrame([Row(a=i, b=i + 1) for i in range(5)])
+    with pytest.raises(RuntimeError, match="did not converge"):
+        _components(df)
+
+
 def test_token_budget_sample_caps_each_group(spark):
     from lakeflow.operators.sampling import token_budget_sample
 
