@@ -414,6 +414,9 @@ def main() -> None:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     os.environ.setdefault("LAKEFLOW_MASTER", f"local[{cpus}]")
     os.environ.setdefault("LAKEFLOW_SHUFFLE_PARTITIONS", cpus)
+    # the host-sized default heap (4g on a 16 GB host) runs out in the
+    # end-of-pass calibration probe at local[32]; the bench keeps 8g
+    os.environ.setdefault("LAKEFLOW_DRIVER_MEM", "8g")
 
     from lakeflow import get_spark
     from lakeflow.plans import QUERIES
