@@ -28,7 +28,7 @@ graph folds at 417 MB RSS, an 8M-edge one at 1.3 GB (8.2 s), and a
 4M-edge path (diameter 4M) in about 2 s. Measured on 4 cores with a
 prototype of this fold (4M-edge budget) against the former round loop
 (min-label propagation: about 10 rounds of join, aggregate, eager
-``localCheckpoint`` and a one-row probe), identical rows:
+local checkpoint and a one-row probe), identical rows:
 
 ====================================  ===============  ===============
 what                                  round loop       one-task fold
